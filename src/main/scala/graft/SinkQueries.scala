@@ -92,9 +92,6 @@ object SinkQueries {
     // the read-back tree by its two partition columns.
     "sink_range_sharded" -> ((s, dir) => rangeShardRoundTrip(s, dir)),
 
-    // Fragment the write on purpose (8 tasks × partitions), compact to one
-    // file per partition, and hash the read-back against the source: if
-    // compaction dropped, duplicated, or re-routed any row, this fails.
     // Partition retention: write the tree, expire the 5-LOW partition by
     // directory delete (metadata-cost — no data file opened, no rewrite),
     // read back; the oracle is the source minus the expired partition, so
@@ -113,15 +110,18 @@ object SinkQueries {
           "o_orderpriority")
     }),
 
+    // Fragment the write on purpose (8 tasks × partitions), compact in
+    // place to one file per partition, and hash the read-back against the
+    // source: if compaction dropped, duplicated, or re-routed any row,
+    // this fails.
     "sink_compacted" -> ((s, dir) => {
       val frag = Files.createTempDirectory("graft_sink_frag").toString
-      val comp = Files.createTempDirectory("graft_sink_comp").toString
       val orders = Tables(s, dir, "orders")
       PartitionedSink.write(orders.repartition(8), frag,
         SinkConfig(ParquetFormat, Seq("o_orderpriority"), Some("snappy"),
           runtimeNullCheck = true))
-      PartitionedSink.compact(s, frag, comp, Seq("o_orderpriority"))
-      PartitionedSink.readBack(s, comp)
+      PartitionedSink.compactInPlace(s, frag, Seq("o_orderpriority"))
+      PartitionedSink.readBack(s, frag)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderpriority")
     }),
@@ -234,14 +234,13 @@ object SinkQueries {
     // oracle, the file-count/size behavior is spec-asserted
     "sink_compacted_sized" -> ((s, dir) => {
       val frag = Files.createTempDirectory("graft_sink_fragsz").toString
-      val comp = Files.createTempDirectory("graft_sink_compsz").toString
       val orders = Tables(s, dir, "orders")
       PartitionedSink.write(orders.repartition(8), frag,
         SinkConfig(ParquetFormat, Seq("o_orderpriority"), Some("snappy"),
           runtimeNullCheck = true))
-      PartitionedSink.compactToTargetSize(s, frag, comp,
+      PartitionedSink.compactToTargetSize(s, frag,
         Seq("o_orderpriority"), targetBytes = 4L << 20)
-      PartitionedSink.readBack(s, comp)
+      PartitionedSink.readBack(s, frag)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderpriority")
     }),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.{GraftSqlBridge => Bridge}
 import org.apache.spark.sql.types._
 
 /**

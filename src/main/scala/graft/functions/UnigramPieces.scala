@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.{GraftSqlBridge => Bridge}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 

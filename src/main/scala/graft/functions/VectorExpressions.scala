@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.{GraftSqlBridge => Bridge}
 import org.apache.spark.sql.types._
 
 /**

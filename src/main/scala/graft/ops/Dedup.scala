@@ -373,7 +373,7 @@ object Dedup {
       corpus: DataFrame, fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.graft.{GraftSqlBridge => Bridge}
     import org.apache.spark.sql.types.BinaryType
     val nItems = math.max(corpus.count(), 1L)
     val nBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(nItems, fpp)

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.functions.{topk, JaroWinkler}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.{GraftSqlBridge => Bridge}
 import org.apache.spark.sql.{Column, DataFrame}
 
 /**

@@ -1341,14 +1341,8 @@ object Similarity {
     // with no replacement, and reading it first would throw before any
     // heal ran. (The versioned layout has no such state: an interrupted
     // publish leaves only an unreferenced generation dir.)
-    if (!versioned) Seq("cells", "centroids", "pqcodebook").foreach { d =>
-      val retired = new Path(root, s".retired_$d")
-      val orig = new Path(root, d)
-      if (hfs.exists(retired)) {
-        if (!hfs.exists(orig)) graft.sink.FsOps.renameOrFail(hfs, retired, orig)
-        else graft.sink.FsOps.deleteIfExists(hfs, retired)
-      }
-    }
+    if (!versioned) Seq("cells", "centroids", "pqcodebook").foreach(d =>
+      graft.sink.FsOps.healSwap(hfs, new Path(root, d)))
     val live = liveIndexRoot(spark, path) // one resolution per rebuild
     val corpus = spark.read.parquet(s"$live/cells")
       .select(col(idCol), col(vecCol))

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem helpers for staged-write → rename-swap maintenance
@@ -16,24 +16,56 @@ private[graft] object FsOps {
     (f, f.makeQualified(p))
   }
 
+  /** The hidden-entry rule of Spark's file index (Hadoop's `_SUCCESS`/
+    * `.crc` convention): a name, or a path relative to a tree root, is
+    * hidden when ANY segment starts with `.`, or with `_` and is no
+    * `field=value` directory — so `_compact_staging/` and `.retired_*`
+    * leftovers hide their subtree while a `_src=a` partition stays. */
+  def isHidden(rel: String): Boolean = rel.split('/').exists(seg =>
+    seg.startsWith(".") || (seg.startsWith("_") && !seg.contains("=")))
+
+  /** The data files a reader of the tree at `root` sees (one listing). */
+  def visibleFiles(f: FileSystem, root: Path): Iterator[LocatedFileStatus] = {
+    val it = f.listFiles(root, true)
+    val prefix = root.toString.stripSuffix("/") + "/"
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter(s =>
+      s.isFile && !isHidden(s.getPath.toString.stripPrefix(prefix)))
+  }
+
   def deleteIfExists(f: FileSystem, p: Path): Unit = { f.delete(p, true): Unit }
 
   def renameOrFail(f: FileSystem, src: Path, dst: Path): Unit =
     if (!f.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed")
 
-  /** Swap `incoming` into `dst`: retire the current `dst` (if any) to a
-    * dot-hidden sibling, rename `incoming` in, drop the retired copy.
-    * Two metadata ops — the reader-visible window is rename-sized. A
-    * leftover retired dir from a crashed prior swap is restored (crash
-    * landed between the two renames: `dst` missing) or dropped (swap
-    * completed, cleanup didn't). */
-  def swapIn(f: FileSystem, incoming: Path, dst: Path): Unit = {
-    val retired = new Path(dst.getParent, s".retired_${dst.getName}")
+  private val RetiredPrefix = ".retired_"
+
+  private def retiredOf(dst: Path) =
+    new Path(dst.getParent, RetiredPrefix + dst.getName)
+
+  /** Settle a crashed prior [[swapIn]] of `dst`: its retired copy is
+    * restored (crash between the two renames: `dst` missing) or dropped
+    * (the swap completed, its cleanup didn't). */
+  def healSwap(f: FileSystem, dst: Path): Unit = {
+    val retired = retiredOf(dst)
     if (f.exists(retired)) {
       if (!f.exists(dst)) renameOrFail(f, retired, dst)
       else deleteIfExists(f, retired)
     }
+  }
+
+  /** [[healSwap]] every swapped entry directly under `dir`. */
+  def healSwaps(f: FileSystem, dir: Path): Unit =
+    f.listStatus(dir).map(_.getPath.getName).filter(_.startsWith(RetiredPrefix))
+      .foreach(n => healSwap(f, new Path(dir, n.stripPrefix(RetiredPrefix))))
+
+  /** Swap `incoming` into `dst`: retire the current `dst` (if any) to a
+    * dot-hidden sibling, rename `incoming` in, drop the retired copy.
+    * Two metadata ops — the reader-visible window is rename-sized. A
+    * leftover retired dir from a crashed prior swap is healed first. */
+  def swapIn(f: FileSystem, incoming: Path, dst: Path): Unit = {
+    healSwap(f, dst)
+    val retired = retiredOf(dst)
     if (f.exists(dst)) renameOrFail(f, dst, retired)
     renameOrFail(f, incoming, dst)
     deleteIfExists(f, retired)

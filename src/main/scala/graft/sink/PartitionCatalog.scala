@@ -20,14 +20,32 @@ import org.apache.spark.sql.types.StructType
  */
 object PartitionCatalog {
 
+  /** The one partition-tuple → relative-directory rule: Spark's own
+    * writer encoding (`getPartitionPathString`), which Hive-escapes the
+    * field name AND the value (`a:b=x` lands as `a%3Ab=x`) and maps a
+    * null value to `__HIVE_DEFAULT_PARTITION__`, never a literal "null". */
+  private[graft] def relDir(fields: Seq[String], values: Seq[String]): String =
+    fields.zip(values).map { case (f, v) =>
+      ExternalCatalogUtils.getPartitionPathString(f, v)
+    }.mkString("/")
+
+  /** Inverse of [[relDir]] for one `field=value` directory name (None when
+    * the name holds no `=`). Both sides are unescaped with the EXACT
+    * inverse of Spark's escaping (Hive `%XX` convention) — `URLDecoder`
+    * is NOT that inverse: it turns a literal '+' (common in stringified
+    * timestamps) into a space and throws on a stray '%' in an
+    * externally-created directory, either of which would make the CREATE
+    * pre-check miss existing partitions. */
+  private[graft] def parseDir(name: String): Option[(String, String)] = {
+    val i = name.indexOf('=')
+    if (i < 0) None
+    else Some(ExternalCatalogUtils.unescapePathName(name.substring(0, i)) ->
+      ExternalCatalogUtils.unescapePathName(name.substring(i + 1)))
+  }
+
   /** List partition keys present under `path` as ordered (field -> value)
-    * maps, by walking `nFields` directory levels of `field=value` dirs.
-    * Values are unescaped with the EXACT inverse of the escaping Spark
-    * applies when writing (`ExternalCatalogUtils.escapePathName`, Hive
-    * `%XX` convention) — `URLDecoder` is NOT that inverse: it turns a
-    * literal '+' (common in stringified timestamps) into a space and
-    * throws on a stray '%' in an externally-created directory, either of
-    * which would make the CREATE pre-check miss existing partitions. */
+    * maps, by walking `nFields` levels of `field=value` dirs ([[parseDir]]);
+    * hidden entries ([[FsOps.isHidden]]) are never partitions. */
   def list(spark: org.apache.spark.sql.SparkSession, path: String, nFields: Int): Seq[Map[String, String]] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -36,11 +54,8 @@ object PartitionCatalog {
     (0 until nFields).foreach { _ =>
       frontier = frontier.flatMap { case (dir, key) =>
         fs.listStatus(dir).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .map { s =>
-            val Array(f, v) = s.getPath.getName.split("=", 2)
-            s.getPath -> (key + (f -> ExternalCatalogUtils.unescapePathName(v)))
-          }
+          .filter(s => s.isDirectory && !FsOps.isHidden(s.getPath.getName))
+          .flatMap(s => parseDir(s.getPath.getName).map(kv => s.getPath -> (key + kv)))
       }
     }
     frontier.map(_._2)
@@ -55,10 +70,7 @@ object PartitionCatalog {
       spark: org.apache.spark.sql.SparkSession,
       tableName: String): Seq[Map[String, String]] =
     spark.sql(s"SHOW PARTITIONS $tableName").collect().toSeq.map { r =>
-      r.getString(0).split("/").iterator.map { seg =>
-        val Array(f, v) = seg.split("=", 2)
-        f -> ExternalCatalogUtils.unescapePathName(v)
-      }.toMap
+      r.getString(0).split("/").iterator.flatMap(parseDir).toMap
     }
 
   /** F7 (Explore/Hive registration,
@@ -87,10 +99,7 @@ object PartitionCatalog {
       path: String, format: String = "parquet",
       schema: Option[StructType] = None): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val provider = format.toLowerCase match {
-      case "avro" => AvroFormat.name // FQCN — short name not registered here
-      case other => other
-    }
+    val provider = SinkFormat.byName(format).fold(format.toLowerCase)(_.name)
     val dataSchema = schema.getOrElse(
       spark.read.format(provider).load(path).schema)
     val serdeProps: Map[String, String] = format.toLowerCase match {

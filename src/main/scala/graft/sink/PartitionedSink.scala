@@ -20,6 +20,18 @@ case object AvroFormat
 case object OrcFormat extends SinkFormat("orc",
   Validators.OrcCodecs, Validators.ModernOrcCodecs)
 
+object SinkFormat {
+  /** The format a user-facing name (`parquet`/`avro`/`orc`, any case)
+    * selects; None for anything else, so each caller words its own error. */
+  private[graft] def byName(name: String): Option[SinkFormat] =
+    name.toLowerCase match {
+      case "parquet" => Some(ParquetFormat)
+      case "avro" => Some(AvroFormat)
+      case "orc" => Some(OrcFormat)
+      case _ => None
+    }
+}
+
 /** Write disposition (SURVEY.md §2.7 W1):
   * [[Create]] fails if any incoming partition already exists at the target;
   * [[CreateOrAppend]] appends into existing partitions. Reference:
@@ -224,25 +236,30 @@ object PartitionedSink {
     if (cfg.disposition == Create)
       PartitionCatalog.assertNoneExist(prepared, path, cfg.partitionFields,
         cfg.catalogTable)
-    // write-time skew/file-budget control (see SinkConfig.filesPerPartition
-    // / adaptiveRowsPerFile): re-cluster on (key, content-hash salt) with
-    // the shuffle-partition count pinned explicitly — an AQE-coalescible
-    // exchange would merge salt groups on small inputs and silently defeat
-    // the hot-partition split
+    save(cluster(prepared, cfg), path, cfg)
+    cfg.partitionFields
+  }
+
+  /** Write-time skew/file-budget control (see SinkConfig.filesPerPartition
+    * / adaptiveRowsPerFile): re-cluster on (key, content-hash salt) with
+    * the shuffle-partition count pinned explicitly — an AQE-coalescible
+    * exchange would merge salt groups on small inputs and silently defeat
+    * the hot-partition split. Neither knob set = the caller's layout. */
+  private def cluster(df: DataFrame, cfg: SinkConfig): DataFrame = {
     val sessionShuffle =
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val keys = cfg.partitionFields.map(qcol)
-    val rowHash = xxhash64(prepared.columns.toIndexedSeq.map(qcol): _*)
-    val clustered = cfg.adaptiveRowsPerFile match {
+    val rowHash = xxhash64(df.columns.toIndexedSeq.map(qcol): _*)
+    cfg.adaptiveRowsPerFile match {
       case Some(target) =>
-        assertNoReservedCols(prepared, Seq("__n", "__w"))
+        assertNoReservedCols(df, Seq("__n", "__w"))
         // measure: per-value row counts (column-pruned partial agg), then
         // size each value's salt to exactly its own fan-out need; the cap
         // (filesPerPartition, when set) bounds runaway values
         val rawW = ceil(col("__n").cast("double") / target).cast("long")
         val cappedW = cfg.filesPerPartition
           .map(c => least(lit(c.toLong), rawW)).getOrElse(rawW)
-        val widths = prepared.groupBy(keys: _*)
+        val widths = df.groupBy(keys: _*)
           .agg(count(lit(1)).as("__n"))
           .select(keys :+ greatest(lit(1L), cappedW).as("__w"): _*)
         // the reducer count must cover the WIDEST value's salt range or
@@ -251,7 +268,7 @@ object PartitionedSink {
         // partition cardinality, so this max is a tiny driver agg)
         val maxW = widths.agg(max(col("__w"))).head.getLong(0).toInt
         val nShuffle = math.max(maxW, sessionShuffle)
-        prepared.join(broadcast(widths), cfg.partitionFields)
+        df.join(broadcast(widths), cfg.partitionFields)
           .repartition(nShuffle, keys :+ pmod(rowHash, col("__w")): _*)
           .drop("__w")
       case None => cfg.filesPerPartition match {
@@ -260,10 +277,15 @@ object PartitionedSink {
           val exprs =
             if (n == 1) keys
             else keys :+ pmod(rowHash, lit(n))
-          prepared.repartition(nShuffle, exprs: _*)
-        case None => prepared
+          df.repartition(nShuffle, exprs: _*)
+        case None => df
       }
     }
+  }
+
+  /** The partitionBy writer with every per-write option `cfg` carries —
+    * shared by [[write]] and the in-place compactions. */
+  private def save(clustered: DataFrame, path: String, cfg: SinkConfig): Unit = {
     var writer = clustered.write
       .format(cfg.format.name)
       .partitionBy(cfg.partitionFields: _*)
@@ -287,7 +309,6 @@ object PartitionedSink {
     cfg.maxRecordsPerFile.foreach(n =>
       writer = writer.option("maxRecordsPerFile", n.toString))
     writer.save(path)
-    cfg.partitionFields
   }
 
   /** Read a written partitioned tree back. Partition values were stringified
@@ -500,18 +521,6 @@ object PartitionedSink {
   }
 
   /**
-   * Compact a partitioned tree: THE operational failure mode of dynamic
-   * partitioning at scale is small files — every (task × partition-value)
-   * pair emits one, so a 2000-task write into 500 partitions can leave a
-   * million KB-sized files that crush the namenode and every subsequent
-   * scan. Reads the tree, re-clusters rows so each partition value lands
-   * in `filesPerPartition` output files (salted by a deterministic row
-   * hash when >1), and writes to `outPath` — a separate location, because
-   * lazily reading and overwriting the same tree in one job is a
-   * read-under-write hazard; callers swap directories atomically after.
-   * Content is untouched (oracle-verified via `sink_compacted`).
-   */
-  /**
    * Partition retention: drop whole partition DIRECTORIES whose
    * partition values satisfy `predicate` — the TTL/retention sweep every
    * partitioned corpus store needs (expire old date partitions, purge a
@@ -533,40 +542,25 @@ object PartitionedSink {
     val parts = PartitionCatalog.list(spark, path, partitionFields.size)
     val (hfs, root) = FsOps.fs(spark, path)
     val dropped = parts.filter(predicate)
-    dropped.foreach { vals =>
-      val rel = partitionFields.map(f =>
-        s"$f=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(vals(f))}").mkString("/")
-      FsOps.deleteIfExists(hfs, new Path(root, rel))
-    }
+    dropped.foreach(vals => FsOps.deleteIfExists(hfs,
+      new Path(root, PartitionCatalog.relDir(partitionFields,
+        partitionFields.map(vals)))))
     dropped
   }
 
-  def compact(
-      spark: SparkSession, inPath: String, outPath: String,
-      partitionFields: Seq[String], format: SinkFormat = ParquetFormat,
-      filesPerPartition: Int = 1, codec: Option[String] = None): Unit = {
-    require(filesPerPartition > 0, "filesPerPartition must be positive")
-    val df = readBack(spark, inPath, format)
-    val keyCols = partitionFields.map(qcol)
-    val clustered =
-      if (filesPerPartition == 1) df.repartition(keyCols: _*)
-      else df.repartition(keyCols :+
-        pmod(xxhash64(df.columns.toIndexedSeq.map(qcol): _*), lit(filesPerPartition)): _*)
-    var w = clustered.write.format(format.name)
-      .partitionBy(partitionFields: _*).mode(SaveMode.Overwrite)
-    codec.foreach { c =>
-      w = w.option("compression", Validators.resolveCodec(format.codecs, c, format.name))
-    }
-    w.save(outPath)
-  }
-
   /**
-   * In-place [[compact]]: same re-cluster, but the compacted tree replaces
-   * the input tree itself — the "compact the live dataset where it lives"
-   * shape operators actually want (a separate out-path forces a
-   * whole-tree copy + cutover). Safe against the read-under-write hazard
-   * the [[compact]] doc names because the rewrite lands COMPLETELY in a
+   * Compact a partitioned tree where it lives: THE operational failure
+   * mode of dynamic partitioning at scale is small files — every
+   * (task × partition-value) pair emits one, so a 2000-task write into
+   * 500 partitions can leave a million KB-sized files that crush the
+   * namenode and every subsequent scan. Reads the tree and re-clusters
+   * rows through the write path's own clustering and writer, so each
+   * partition value lands in at most `filesPerPartition` output files
+   * (salted by a deterministic row hash when >1). Content is untouched
+   * (oracle-verified via `sink_compacted`).
+   *
+   * Lazily reading and overwriting the same files in one job would be a
+   * read-under-write hazard, so the rewrite lands COMPLETELY in a
    * `_`-hidden staging subtree first (the compaction job has fully
    * materialized its read of the old files before the first destructive
    * step; readers of `path` never list `_`/`.`-prefixed entries), then
@@ -576,77 +570,64 @@ object PartitionedSink {
    * on the next run ([[FsOps.swapIn]]). Hadoop FileSystem API end-to-end:
    * works on any FS with directory rename (local, HDFS); on object
    * stores, run from the tree's single writer — the discipline
-   * partitioned appends require anyway.
+   * partitioned appends require anyway. The tree is rewritten as stored
+   * (no validation or partition-value preparation), so a
+   * `__HIVE_DEFAULT_PARTITION__` directory compacts like any other.
    */
   def compactInPlace(
       spark: SparkSession, path: String,
       partitionFields: Seq[String], format: SinkFormat = ParquetFormat,
       filesPerPartition: Int = 1, codec: Option[String] = None): Unit = {
-    val (hfs, root) = FsOps.fs(spark, path)
-    val head = partitionFields.head + "="
-    // heal any crashed prior swap BEFORE reading the tree
-    hfs.listStatus(root).filter(_.getPath.getName.startsWith(".retired_"))
-      .foreach { s =>
-        val orig = new Path(root, s.getPath.getName.stripPrefix(".retired_"))
-        if (!hfs.exists(orig)) FsOps.renameOrFail(hfs, s.getPath, orig)
-        else FsOps.deleteIfExists(hfs, s.getPath)
-      }
-    val staging = new Path(root, "_compact_staging")
-    FsOps.deleteIfExists(hfs, staging)
-    compact(spark, path, staging.toString, partitionFields, format,
-      filesPerPartition, codec)
-    hfs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(head))
-      .foreach(s => FsOps.swapIn(hfs, s.getPath, new Path(root, s.getPath.getName)))
-    FsOps.deleteIfExists(hfs, staging)
+    require(filesPerPartition > 0, "filesPerPartition must be positive")
+    rewriteInPlace(spark, path, format)(_ => SinkConfig(format,
+      partitionFields, codec, filesPerPartition = Some(filesPerPartition)))
   }
 
   /**
-   * [[compact]] with a TARGET FILE SIZE instead of a uniform file count —
-   * the knob operators actually reason in ("~512 MB files"), and the one
-   * that serves a 2 GB partition and a 2 MB partition in the same pass
-   * (a uniform `filesPerPartition` can't). The tree's total bytes come
-   * from one filesystem listing (driver-side, the listing a
-   * namenode/metastore already serves); with the corpus-wide observed
-   * bytes/row this converts the byte target into the writer's
-   * `maxRecordsPerFile` cap, which splits any oversized partition
-   * DETERMINISTICALLY at file-write time — a salt column cannot promise
-   * that (the partitionBy writer merges same-partition salt groups that
-   * hash into one task, silently under-splitting). Rows re-cluster one
-   * task per partition value, so under-target partitions land as exactly
-   * one file. Per-partition compression-ratio differences make the byte
-   * target approximate (it is a target, not a contract).
+   * [[compactInPlace]] with a TARGET FILE SIZE instead of a uniform file
+   * count — the knob operators reason in ("~512 MB files"), serving a
+   * 2 GB and a 2 MB partition in the same pass. The tree's visible bytes
+   * (one driver-side listing) over its row count give the observed
+   * bytes/row, which converts the byte target into the writer's
+   * `maxRecordsPerFile` cap: oversized partitions split
+   * DETERMINISTICALLY at file-write time (a salt cannot promise that —
+   * the partitionBy writer merges same-partition salt groups that hash
+   * into one task), and rows cluster one task per partition value, so
+   * under-target partitions land as exactly one file. Compression-ratio
+   * differences make the target approximate, not a contract.
    */
   def compactToTargetSize(
-      spark: SparkSession, inPath: String, outPath: String,
+      spark: SparkSession, path: String,
       partitionFields: Seq[String], targetBytes: Long,
       format: SinkFormat = ParquetFormat, codec: Option[String] = None): Unit = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val (fs, root) = FsOps.fs(spark, inPath)
-    val it = fs.listFiles(root, true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      // skip hidden entries per Hadoop convention: "_" (_SUCCESS) AND "."
-      // (.part-*.crc checksum sidecars on local/HDFS — counting those
-      // inflates totalBytes and silently shrinks the derived row cap)
-      if (f.isFile && !n.startsWith("_") && !n.startsWith("."))
-        totalBytes += f.getLen
+    rewriteInPlace(spark, path, format) { tree =>
+      val (fs, root) = FsOps.fs(spark, path)
+      val totalBytes = FsOps.visibleFiles(fs, root).map(_.getLen).sum
+      val avgRowBytes = math.max(1L, totalBytes / math.max(tree.count(), 1L))
+      SinkConfig(format, partitionFields, codec, filesPerPartition = Some(1),
+        maxRecordsPerFile = Some(math.max(1L, targetBytes / avgRowBytes)))
     }
-    val df = readBack(spark, inPath, format)
-    val totalRows = math.max(df.count(), 1L)
-    val avgRowBytes = math.max(1L, totalBytes / totalRows)
-    val recordsPerFile = math.max(1L, targetBytes / avgRowBytes)
-    val keyCols = partitionFields.map(qcol)
-    var w = df.repartition(keyCols: _*)
-      .write.format(format.name)
-      .partitionBy(partitionFields: _*).mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", recordsPerFile)
-    codec.foreach { c =>
-      w = w.option("compression", Validators.resolveCodec(format.codecs, c, format.name))
-    }
-    w.save(outPath)
+  }
+
+  /** The in-place rewrite both compactions share: heal a crashed prior
+    * swap, read the tree, write it through [[cluster]] and [[save]] under
+    * the config `configFor` derives from the tree into `_compact_staging`,
+    * then swap each rewritten top-level partition directory in. */
+  private def rewriteInPlace(spark: SparkSession, path: String,
+      format: SinkFormat)(configFor: DataFrame => SinkConfig): Unit = {
+    val (hfs, root) = FsOps.fs(spark, path)
+    // heal any crashed prior swap BEFORE reading the tree
+    FsOps.healSwaps(hfs, root)
+    val staging = new Path(root, "_compact_staging")
+    FsOps.deleteIfExists(hfs, staging)
+    val tree = readBack(spark, path, format)
+    val cfg = configFor(tree)
+    save(cluster(tree, cfg), staging.toString, cfg)
+    hfs.listStatus(staging)
+      .filter(s => s.isDirectory && !FsOps.isHidden(s.getPath.getName))
+      .foreach(s => FsOps.swapIn(hfs, s.getPath, new Path(root, s.getPath.getName)))
+    FsOps.deleteIfExists(hfs, staging)
   }
 
   /** Result of a [[mergeUpsert]]: how many partitions were rewritten and how
@@ -755,13 +736,8 @@ object PartitionedSink {
         .map(r => (0 until cfg.partitionFields.length).map(r.getString))
         .filterNot(live)
       val (fsys, root) = FsOps.fs(spark, path)
-      emptied.foreach { vals =>
-        val rel = cfg.partitionFields.zip(vals).map { case (f, v) =>
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(f, v)
-        }.mkString("/")
-        FsOps.deleteIfExists(fsys, new Path(root, rel))
-      }
+      emptied.foreach(vals => FsOps.deleteIfExists(fsys,
+        new Path(root, PartitionCatalog.relDir(cfg.partitionFields, vals))))
       MergeStats(touched.length - emptied.length, emptied.length)
     } finally { survivors.unpersist(): Unit }
   }

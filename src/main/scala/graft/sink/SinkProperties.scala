@@ -63,12 +63,8 @@ object SinkProperties {
     }
     val format = free("format") match {
       case Some(f) =>
-        val fmt = f.toLowerCase match {
-          case "parquet" => ParquetFormat
-          case "avro" => AvroFormat
-          case "orc" => OrcFormat
-          case other => throw new GraftSchemaException(s"Unknown sink format '$other'")
-        }
+        val fmt = SinkFormat.byName(f).getOrElse(throw new GraftSchemaException(
+          s"Unknown sink format '${f.toLowerCase}'"))
         validated += "format"; Some(fmt)
       case None => if (props.contains("format")) None else Some(ParquetFormat)
     }
@@ -127,12 +123,9 @@ object SinkProperties {
     val basePath = require("basePath")
     val schema = SchemaDef.parse(require("schema"))
     val fields = Validators.partitionFields(schema, require("fieldNames"))
-    val format = get("format").getOrElse("parquet").toLowerCase match {
-      case "parquet" => ParquetFormat
-      case "avro" => AvroFormat
-      case "orc" => OrcFormat
-      case other => throw new GraftSchemaException(s"Unknown sink format '$other'")
-    }
+    val formatName = get("format").getOrElse("parquet")
+    val format = SinkFormat.byName(formatName).getOrElse(throw new
+      GraftSchemaException(s"Unknown sink format '${formatName.toLowerCase}'"))
     val codec = get("compressionCodec").filter(_.toLowerCase != "none")
     val disposition = get("appendToPartition").map(_.toLowerCase) match {
       case Some("yes") | Some("true") => CreateOrAppend

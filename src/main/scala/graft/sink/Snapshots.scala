@@ -2211,7 +2211,9 @@ object Snapshots {
       writeInternal(out, root, partitionFields, SnapOverwritePartitions,
         "merge", evolution,
         touchedDirs = Some(
-          touched.map(partitionRelDir(partitionFields, _)).toSet),
+          touched.map(r => PartitionCatalog.relDir(partitionFields,
+            // null stays null: it maps to __HIVE_DEFAULT_PARTITION__
+            r.toSeq.map(v => Option(v).map(_.toString).orNull))).toSet),
         branch = branch)
     } finally pinned.unpersist(): Unit
   }
@@ -3485,16 +3487,6 @@ object Snapshots {
       graft.schema.SchemaEvolution.Widen,
       extraRemoves = old.map(_.rel), enforceConstraints = false))
   }
-
-  private def partitionRelDir(
-      partitionFields: Seq[String], r: Row): String =
-    partitionFields.zipWithIndex.map { case (f, i) =>
-      // null must reach getPartitionPathString AS null so it maps to the
-      // __HIVE_DEFAULT_PARTITION__ directory, not a literal "null" dir
-      val v = r.get(i)
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString(f, if (v == null) null else v.toString)
-    }.mkString("/")
 
   /** Snapshot ids the committed pointer can reach — orphan manifests from
     * a crashed write (id > current) are never treated as state. */

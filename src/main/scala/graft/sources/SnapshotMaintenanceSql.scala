@@ -544,32 +544,28 @@ private[sources] object PlainTreeSql {
   }
 
   def resolveFormat(op: String, fmt: Option[String]): graft.sink.SinkFormat =
-    fmt.map(_.toLowerCase) match {
-      case None | Some("parquet") => graft.sink.ParquetFormat
-      case Some("orc") => graft.sink.OrcFormat
-      case Some("avro") => graft.sink.AvroFormat
-      case Some(other) => throw new IllegalArgumentException(
-        s"CALL graft_$op: unknown format '$other' (parquet, orc, avro)")
-    }
+    fmt.fold[graft.sink.SinkFormat](graft.sink.ParquetFormat)(f =>
+      graft.sink.SinkFormat.byName(f).getOrElse(throw new
+        IllegalArgumentException(s"CALL graft_$op: unknown format " +
+          s"'${f.toLowerCase}' (parquet, orc, avro)")))
 
   /** The named partition columns must match the tree's directory
-    * nesting IN ORDER — every downstream path construction
-    * (`compactInPlace` staging swaps, `dropPartitionsWhere` deletes)
-    * builds `f1=v1/f2=v2` paths from the list's order, so a reordered
-    * list would silently delete nothing (or swap a re-nested copy in
-    * beside the original). Probed one directory per level. */
+    * nesting IN ORDER — the engine calls nest by the list's order
+    * (`dropPartitionsWhere` deletes `f1=v1/f2=v2` paths built from it;
+    * `compactInPlace` rewrites `partitionBy` the list and swaps the
+    * result's top-level directories in), so a reordered list would
+    * silently delete nothing (or swap a re-nested copy in beside the
+    * original). Probed one directory per level. */
   def requireNestingOrder(
       session: SparkSession, path: String, op: String,
       fields: Seq[String]): Unit = {
     val (f, root) = graft.sink.FsOps.fs(session, path)
     var dir = root
     fields.zipWithIndex.foreach { case (field, depth) =>
-      val entries = f.listStatus(dir).filterNot { s =>
-        val n = s.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
-      val subs = entries.filter(s =>
-        s.isDirectory && s.getPath.getName.contains("="))
+      val entries = f.listStatus(dir)
+        .filterNot(s => graft.sink.FsOps.isHidden(s.getPath.getName))
+      val subs = entries.filter(s => s.isDirectory &&
+        graft.sink.PartitionCatalog.parseDir(s.getPath.getName).isDefined)
       if (subs.isEmpty) {
         // a TRULY empty (sub)tree no-ops below; but a level holding
         // DATA FILES means the tree bottoms out HERE — a too-long
@@ -583,9 +579,8 @@ private[sources] object PlainTreeSql {
             s"(${fields.mkString(",")})")
         return
       }
-      val actual = subs.map(s => org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils
-        .unescapePathName(s.getPath.getName.split("=", 2)(0))).distinct
+      val actual = subs.flatMap(s => graft.sink.PartitionCatalog
+        .parseDir(s.getPath.getName)).map(_._1).distinct
       require(actual.length == 1 && actual.head == field,
         s"CALL graft_$op: the tree nests ${actual.mkString(", ")}= at " +
           s"depth ${depth + 1}, not $field= — the partition-column " +
@@ -602,17 +597,7 @@ private[sources] object PlainTreeSql {
     * never list them either). */
   def dataFileCount(session: SparkSession, path: String): Int = {
     val (f, root) = graft.sink.FsOps.fs(session, path)
-    val prefix = root.toString.stripSuffix("/") + "/"
-    val it = f.listFiles(root, true)
-    var n = 0
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = s.getPath.toString.stripPrefix(prefix)
-      val visible = rel.split('/')
-        .forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
-      if (s.isFile && visible) n += 1
-    }
-    n
+    graft.sink.FsOps.visibleFiles(f, root).size
   }
 }
 

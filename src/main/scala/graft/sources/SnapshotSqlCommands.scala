@@ -3,7 +3,7 @@ package graft.sources
 import graft.sink.Snapshots
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, InSubquery, ListQuery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Between, EqualTo, Expression, GreaterThanOrEqual, InSubquery, LessThanOrEqual, ListQuery, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -153,9 +153,17 @@ private[sources] object SnapshotDml {
       s"$what with a subquery is not supported on snapshot tables — " +
         "materialize the subquery (e.g. into an IN-list or a MERGE " +
         "source) first")
-    GraftSqlBridge.column(e.transform {
+    GraftSqlBridge.column(expandBetween(e).transform {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     })
+  }
+
+  /** `BETWEEN` as the `>= AND <=` pair Spark 3 parsed it to: Spark 4's
+    * `Between` hides its operands behind a `With`-wrapped replacement,
+    * which an attribute-unresolving transform cannot rewrite safely. */
+  private def expandBetween(e: Expression): Expression = e.transform {
+    case b: Between =>
+      And(GreaterThanOrEqual(b.input, b.lower), LessThanOrEqual(b.input, b.upper))
   }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -345,7 +353,7 @@ private[sources] object SnapshotDml {
       require(!e.exists(_.isInstanceOf[SubqueryExpression]),
         s"$what with a subquery is not supported on snapshot tables — " +
           "materialize it into the MERGE source first")
-      GraftSqlBridge.column(e.transform {
+      GraftSqlBridge.column(expandBetween(e).transform {
         // source-side references resolve against the join frame's
         // prefixed copies — collision-free when both sides share names
         case a: AttributeReference if sOut.contains(a) =>

@@ -6,27 +6,39 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /**
- * The narrow bridge into Spark's `private[sql]` surface that SQL DML
- * routing needs — the established external-connector shim (Delta's SQL
- * extensions and the spark-redshift lineage ship the same sub-package
- * trick). Two entry points only, both driven by
- * [[graft.sources.SnapshotDmlRule]]:
+ * The one bridge into Spark's `private[sql]` surface — the established
+ * external-connector shim (Delta's SQL extensions and the spark-redshift
+ * lineage ship the same sub-package trick). Its entry points:
  *
  *  - an analyzed `LogicalPlan` (a MERGE source) back into a DataFrame,
- *  - a catalyst `Expression` (a DELETE/UPDATE condition, attribute
- *    references unresolved back to bare names) into a user-facing
- *    [[Column]] — keeping literals INTERNAL end to end, so a timestamp
- *    bound is never re-parsed from a session-tz string (the
- *    DST-ambiguity rule the Bloom probe enforces).
+ *  - catalyst `Expression` ↔ [[Column]] (Spark 4 moved these behind the
+ *    classic ColumnNode API): the native `graft.functions` expressions
+ *    surface this way, and a DELETE/UPDATE condition (attributes
+ *    unresolved back to bare names) keeps its literals INTERNAL, so a
+ *    timestamp bound is never re-parsed from a session-tz string (the
+ *    DST-ambiguity rule the Bloom probe enforces),
+ *  - temp SQL function registration, and streaming ↔ batch frame
+ *    re-wrapping for the v1 streaming source and sink.
  *
- * Nothing else may use this object: every other graft surface stays on
- * public Spark API.
+ * Every other graft surface stays on public Spark API; a new need for
+ * Spark internals adds an entry point here.
  */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Register a temp SQL function backed by a Catalyst expression builder
+    * on an existing session (`sessionState` is `private[sql]`). */
+  def registerFunction(
+      spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit =
+    spark.asInstanceOf[classic.SparkSession]
+      .sessionState.functionRegistry
+      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** A computed batch as a STREAMING-flagged frame — what a v1
     * streaming `Source.getBatch` must hand the micro-batch engine (the

@@ -42,7 +42,7 @@ class DdSketchSpec extends SparkSpec {
   test("serialize/deserialize round-trips the buffer") {
     val h = new LogHistogram(1.02)
     Seq(-500L, -1L, 0L, 0L, 3L, 3L, 3L, 999999L).foreach(h.add(_))
-    val agg = DdSketchAgg(org.apache.spark.sql.graftbridge.Bridge
+    val agg = DdSketchAgg(org.apache.spark.sql.graft.GraftSqlBridge
       .expression(col("x")), 1.02)
     val back = agg.deserialize(agg.serialize(h))
     assert(back.gamma == h.gamma && back.sorted.toSeq == h.sorted.toSeq)

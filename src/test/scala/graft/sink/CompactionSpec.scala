@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path}
 
-/** Compaction: the file count collapses to the requested budget per
-  * partition while content and partition routing stay untouched. */
+/** Compaction (in place): the file count collapses to the requested
+  * budget per partition while content and partition routing stay
+  * untouched. */
 class CompactionSpec extends SparkSpec {
 
   private def dataFiles(root: Path): Map[String, Int] = {
@@ -21,34 +22,30 @@ class CompactionSpec extends SparkSpec {
   test("compaction: 8-way fragmented tree collapses to 1 file per partition") {
     val orders = graft.Tables(spark, sf0001, "orders")
     val frag = Files.createTempDirectory("graft_compact_in")
-    val comp = Files.createTempDirectory("graft_compact_out")
     PartitionedSink.write(orders.repartition(8), frag.toString,
       SinkConfig(ParquetFormat, Seq("o_orderpriority"), runtimeNullCheck = true))
     val before = dataFiles(frag)
     assert(before.values.max > 1, s"fixture must be fragmented: $before")
 
-    PartitionedSink.compact(spark, frag.toString, comp.toString,
-      Seq("o_orderpriority"))
-    val after = dataFiles(comp)
+    PartitionedSink.compactInPlace(spark, frag.toString, Seq("o_orderpriority"))
+    val after = dataFiles(frag)
     assert(after.keySet == before.keySet, "partition set must be preserved")
     assert(after.values.forall(_ == 1), s"expected 1 file per partition: $after")
 
-    // content identity: same rows, same partition routing
-    val a = PartitionedSink.readBack(spark, frag.toString)
-    val b = PartitionedSink.readBack(spark, comp.toString)
-    assert(a.count() == b.count())
-    assert(a.agg(sum("o_orderkey")).head.getLong(0) ==
+    // content identity against the source: same rows, same routing
+    val b = PartitionedSink.readBack(spark, frag.toString)
+    assert(orders.count() == b.count())
+    assert(orders.agg(sum("o_orderkey")).head.getLong(0) ==
       b.agg(sum("o_orderkey")).head.getLong(0))
     assert(b.groupBy("o_orderpriority").count().collect().map(r =>
       r.getString(0) -> r.getLong(1)).toMap ==
-      a.groupBy("o_orderpriority").count().collect().map(r =>
+      orders.groupBy("o_orderpriority").count().collect().map(r =>
         r.getString(0) -> r.getLong(1)).toMap)
   }
 
   test("partitionStats tracks the fragment->compact cycle exactly") {
     val orders = graft.Tables(spark, sf0001, "orders")
     val frag = Files.createTempDirectory("graft_stats_in")
-    val comp = Files.createTempDirectory("graft_stats_out")
     PartitionedSink.write(orders.repartition(8), frag.toString,
       SinkConfig(ParquetFormat, Seq("o_orderpriority"), runtimeNullCheck = true))
     def stats(p: Path) = PartitionCatalog
@@ -61,9 +58,8 @@ class CompactionSpec extends SparkSpec {
       dataFiles(frag))
     assert(before.values.map(_._1).sum == orders.count())
     assert(before.values.exists(_._2 > 1), "fixture must be fragmented")
-    PartitionedSink.compact(spark, frag.toString, comp.toString,
-      Seq("o_orderpriority"))
-    val after = stats(comp)
+    PartitionedSink.compactInPlace(spark, frag.toString, Seq("o_orderpriority"))
+    val after = stats(frag)
     assert(after.keySet == before.keySet)
     assert(after.values.forall(_._2 == 1L), s"compacted to 1 file each: $after")
     assert(after.view.mapValues(_._1).toMap == before.view.mapValues(_._1).toMap,
@@ -84,10 +80,9 @@ class CompactionSpec extends SparkSpec {
     val pb = partBytes(frag)
     // target = half the largest partition -> that partition needs >= 2 files
     val target = pb.values.max / 2
-    val comp = Files.createTempDirectory("graft_tsize_out")
-    PartitionedSink.compactToTargetSize(spark, frag.toString, comp.toString,
+    PartitionedSink.compactToTargetSize(spark, frag.toString,
       Seq("o_orderpriority"), target)
-    val files = dataFiles(comp)
+    val files = dataFiles(frag)
     // the byte target is approximate (converted to a row cap via observed
     // bytes/row), so allow one file of slack around the byte-derived budget
     val expected = pb.view.mapValues(b => math.max(1L, (b - 1) / target + 1)).toMap
@@ -96,13 +91,13 @@ class CompactionSpec extends SparkSpec {
       assert(n >= 1 && n <= expected(p) + 1, s"$p: $n files vs budget ${expected(p)}")
     }
     assert(files(pb.maxBy(_._2)._1) >= 2, s"largest partition must split: $files")
-    assert(PartitionedSink.readBack(spark, comp.toString).count() == orders.count())
+    assert(PartitionedSink.readBack(spark, frag.toString).count() == orders.count())
     // "one file no matter what": an unreachable target (and the overflow
     // edge near Long.MaxValue) collapses every partition to a single file
-    val comp1 = Files.createTempDirectory("graft_tsize_one")
-    PartitionedSink.compactToTargetSize(spark, frag.toString, comp1.toString,
+    PartitionedSink.compactToTargetSize(spark, frag.toString,
       Seq("o_orderpriority"), Long.MaxValue)
-    assert(dataFiles(comp1).values.forall(_ == 1))
+    assert(dataFiles(frag).values.forall(_ == 1))
+    assert(PartitionedSink.readBack(spark, frag.toString).count() == orders.count())
   }
 
   test("in-place compaction: tree compacts onto itself, content identical") {
@@ -158,15 +153,73 @@ class CompactionSpec extends SparkSpec {
   test("compaction with a file budget: salted split honors filesPerPartition") {
     val orders = graft.Tables(spark, sf0001, "orders")
     val frag = Files.createTempDirectory("graft_compact_in2")
-    val comp = Files.createTempDirectory("graft_compact_out2")
     PartitionedSink.write(orders.repartition(8), frag.toString,
       SinkConfig(ParquetFormat, Seq("o_orderpriority"), runtimeNullCheck = true))
-    PartitionedSink.compact(spark, frag.toString, comp.toString,
+    PartitionedSink.compactInPlace(spark, frag.toString,
       Seq("o_orderpriority"), filesPerPartition = 2)
-    val after = dataFiles(comp)
+    val after = dataFiles(frag)
     assert(after.values.forall(n => n >= 1 && n <= 2), s"file budget: $after")
-    assert(PartitionedSink.readBack(spark, comp.toString).count() ==
+    assert(after.values.exists(_ == 2), s"the salt must split: $after")
+    assert(PartitionedSink.readBack(spark, frag.toString).count() ==
       orders.count())
+  }
+
+  test("size-targeted compaction counts only visible bytes: leftovers change nothing") {
+    import scala.jdk.CollectionConverters._
+    val orders = graft.Tables(spark, sf0001, "orders")
+    val clean = Files.createTempDirectory("graft_tsize_clean")
+    PartitionedSink.write(orders.repartition(8), clean.toString,
+      SinkConfig(ParquetFormat, Seq("o_orderpriority"), runtimeNullCheck = true))
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).iterator().asScala.toSeq.foreach { p =>
+        val dst = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst)
+        else Files.copy(p, dst)
+      }
+    // a byte-identical twin carrying a crashed compaction's leftovers:
+    // a full copy of the tree under _compact_staging/, and a retired copy
+    // of one partition beside its live directory
+    val dirty = Files.createTempDirectory("graft_tsize_dirty")
+    copyTree(clean, dirty)
+    dataFiles(clean).keys.foreach(d =>
+      copyTree(clean.resolve(d), dirty.resolve(s"_compact_staging/$d")))
+    val victim = dataFiles(clean).keys.head
+    copyTree(clean.resolve(victim), dirty.resolve(s".retired_$victim"))
+    val target = dataFiles(clean).keys.map(d =>
+      Files.walk(clean.resolve(d)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(Files.size).sum).max / 2
+    Seq(clean, dirty).foreach(t => PartitionedSink.compactToTargetSize(
+      spark, t.toString, Seq("o_orderpriority"), target))
+    assert(dataFiles(clean).values.max >= 2, s"fixture must split: ${dataFiles(clean)}")
+    assert(dataFiles(dirty) == dataFiles(clean))
+    assert(PartitionedSink.readBack(spark, dirty.toString).count() == orders.count())
+  }
+
+  test("a __HIVE_DEFAULT_PARTITION__ directory compacts in place and keeps its rows") {
+    import spark.implicits._
+    val tree = Files.createTempDirectory("graft_compact_nullpart")
+    val rows = (0L until 200L).map(i =>
+      (i, if (i % 10 == 0) None else Some(i % 17), i % 5))
+    // a null layout value routes its rows to the null bucket partition
+    PartitionedSink.writeZOrdered(rows.toDF("id", "a", "b").repartition(4),
+      tree.toString, "a", "b", nBuckets = 3)
+    PartitionedSink.write(
+      rows.take(50).toDF("id", "a", "b").withColumn("zbucket", lit(0L)),
+      tree.toString, SinkConfig(ParquetFormat, Seq("zbucket")))
+    val nullDir = "zbucket=__HIVE_DEFAULT_PARTITION__"
+    assert(dataFiles(tree).contains(nullDir), s"fixture: ${dataFiles(tree)}")
+    assert(dataFiles(tree).values.max > 1, s"fixture must be fragmented: ${dataFiles(tree)}")
+    def content() = PartitionedSink.readBack(spark, tree.toString)
+      .groupBy("zbucket").agg(count(lit(1)).as("n"), sum("id").as("s"))
+      .collect().map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    val before = content()
+    assert(before(None)._1 == 20L, s"null bucket rows: $before")
+    PartitionedSink.compactInPlace(spark, tree.toString, Seq("zbucket"))
+    assert(dataFiles(tree).keySet.contains(nullDir))
+    assert(dataFiles(tree).values.forall(_ == 1), s"${dataFiles(tree)}")
+    assert(content() == before)
   }
 
   test("retention drop: exact partition scope, escaped values, idempotent, audited") {

@@ -194,6 +194,60 @@ class PartitionedSinkSpec extends SparkSpec {
       .select("purchase_date").distinct().count() == 3)
   }
 
+  test("catalog listing skips hidden entries: a crashed swap's retired dir is no partition") {
+    val out = tmp("hidden_entries")
+    val cfgCreate = SinkConfig(ParquetFormat, Seq("purchase_date"), disposition = Create)
+    PartitionedSink.write(purchase, out, cfgCreate)
+    // the state a crash between FsOps.swapIn's final rename and its
+    // cleanup leaves behind, plus a leftover staging tree
+    val root = java.nio.file.Paths.get(out)
+    Files.move(Files.createTempDirectory(root, "x"),
+      root.resolve(".retired_purchase_date=2009-01-01"))
+    Files.createDirectories(
+      root.resolve("_compact_staging/purchase_date=2009-01-01"))
+    assert(PartitionCatalog.list(spark, out, 1).toSet ==
+      Set("2009-01-01", "2009-01-02", "2009-01-03")
+        .map(v => Map("purchase_date" -> v)))
+    // the CREATE pre-check runs (and passes) for a brand-new partition
+    PartitionedSink.write(
+      purchase.limit(1).withColumn("purchase_date", lit("2009-02-01")),
+      out, cfgCreate)
+    assert(PartitionedSink.readBack(spark, out).count() == 7)
+    intercept[IllegalStateException] {
+      PartitionedSink.write(purchase.limit(1), out, cfgCreate)
+    }
+    // a `_`-led FIELD is no hidden entry: Spark reads `_src=...` as a
+    // partition directory, and so do the listing and the compaction
+    val under = tmp("underscore_field")
+    PartitionedSink.write(purchase.withColumnRenamed("purchase_date", "_src")
+      .repartition(3), under, SinkConfig(ParquetFormat, Seq("_src")))
+    assert(PartitionCatalog.list(spark, under, 1).map(_("_src")).toSet ==
+      Set("2009-01-01", "2009-01-02", "2009-01-03"))
+    PartitionedSink.compactInPlace(spark, under, Seq("_src"))
+    assert(Files.walk(java.nio.file.Paths.get(under)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet")) == 3)
+    assert(PartitionedSink.readBack(spark, under).count() == 6)
+  }
+
+  test("a partition field name that needs Hive escaping lists, drops and compacts by its own name") {
+    val out = tmp("escaped_field")
+    val df = purchase.withColumnRenamed("purchase_date", "a:b")
+    PartitionedSink.write(df.repartition(3), out,
+      SinkConfig(ParquetFormat, Seq("a:b"), runtimeNullCheck = true))
+    assert(new java.io.File(out, "a%3Ab=2009-01-01").isDirectory,
+      "Spark escapes the field name in the directory")
+    assert(PartitionCatalog.list(spark, out, 1).map(_("a:b")).toSet ==
+      Set("2009-01-01", "2009-01-02", "2009-01-03"))
+    PartitionedSink.compactInPlace(spark, out, Seq("a:b"))
+    val files = Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.size == 3, s"one file per partition after compaction: $files")
+    assert(PartitionedSink.dropPartitionsWhere(spark, out, Seq("a:b"),
+      _("a:b") == "2009-01-01") == Seq(Map("a:b" -> "2009-01-01")))
+    assert(!new java.io.File(out, "a%3Ab=2009-01-01").exists())
+    assert(PartitionedSink.readBack(spark, out).count() == 3)
+  }
+
   test("CREATE disposition fails on existing partition; CREATE_OR_APPEND appends") {
     val out = tmp("disposition")
     val cfgCreate = SinkConfig(ParquetFormat, Seq("purchase_date"), disposition = Create)

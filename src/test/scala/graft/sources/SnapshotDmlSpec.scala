@@ -208,6 +208,32 @@ class SnapshotDmlSpec extends SparkSpec {
     spark.sql("DROP TABLE dml_upd_tbl")
   }
 
+  test("DELETE, UPDATE and MERGE conditions with BETWEEN change exactly the rows in the range") {
+    val root = java.nio.file.Files.createTempDirectory("dml_between").toString
+    Snapshots.write(spark.range(0, 100).select(col("id").as("k"),
+        (col("id") % 3).cast("string").as("p"), lit(0L).as("v")).coalesce(1),
+      root, Seq("p"), statsColumns = Seq("k"))
+    spark.sql("DROP TABLE IF EXISTS dml_between_tbl")
+    Snapshots.registerTable(spark, root, "dml_between_tbl")
+    def keys(where: String): Set[Long] =
+      spark.sql(s"SELECT k FROM dml_between_tbl WHERE $where").collect()
+        .map(_.getLong(0)).toSet
+    spark.sql("UPDATE dml_between_tbl SET v = 1 WHERE k BETWEEN 10 AND 19")
+    assert(keys("v = 1") == (10L to 19L).toSet)
+    spark.sql("DELETE FROM dml_between_tbl WHERE k BETWEEN 40 AND 49")
+    assert(keys("true") == ((0L until 100L).toSet -- (40L to 49L)))
+    assert(keys("v = 1") == (10L to 19L).toSet)
+    // the same expansion serves MERGE clause conditions
+    spark.range(60, 70).select(col("id").as("k"))
+      .createOrReplaceTempView("dml_between_src")
+    spark.sql(
+      """MERGE INTO dml_between_tbl t USING dml_between_src s ON t.k = s.k
+        |WHEN MATCHED AND t.k BETWEEN 62 AND 64 THEN UPDATE SET v = 2
+        |""".stripMargin)
+    assert(keys("v = 2") == (62L to 64L).toSet)
+    spark.sql("DROP TABLE dml_between_tbl")
+  }
+
   test("MERGE INTO: canonical upsert and delete-matched map to mergeUpsert; other shapes abort loudly") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("dml_mrg").toString
