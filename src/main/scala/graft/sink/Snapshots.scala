@@ -204,7 +204,9 @@ object Snapshots {
       stats: Map[String, (Option[String], Option[String])],
       bytes: Long = -1L)
 
-  /** Dataset-level write metadata recorded in every manifest. */
+  /** Dataset-level write metadata recorded in every manifest. `schema` is
+    * absent only where the state it describes has none — a legacy (v1)
+    * head, or a rollback to one: readers then infer from the files. */
   /** `ts` is the wall-clock publish instant (epoch millis) — recorded in
     * the manifest so [[snapshotAt]]/[[readAt]] resolve "the table as of
     * 9am" without trusting file mtimes (expire's rebase-in-place rewrites
@@ -222,7 +224,7 @@ object Snapshots {
     * write-path widening gate) — an old file's physical column would
     * otherwise resurrect its bytes into an unrelated new column. */
   private case class SnapMeta(
-      mode: String, schema: StructType, format: String,
+      mode: String, schema: Option[StructType], format: String,
       codec: Option[String], statsCols: Seq[String], batchTag: Option[String],
       partitionCols: Seq[String], ts: Option[Long] = None,
       recentTags: Seq[String] = Seq.empty,
@@ -380,7 +382,7 @@ object Snapshots {
     val b = new StringBuilder
     b ++= "graftsnap=2\n"
     b ++= s"mode=${meta.mode}\n"
-    b ++= s"schema=${meta.schema.json}\n"
+    meta.schema.foreach(sc => b ++= s"schema=${sc.json}\n")
     b ++= s"format=${meta.format}\n"
     meta.codec.foreach(c => b ++= s"codec=$c\n")
     if (meta.statsCols.nonEmpty)
@@ -599,12 +601,11 @@ object Snapshots {
   /** The current snapshot id, if any write has published. */
   def currentSnapshot(spark: SparkSession, root: String): Option[Int] = {
     val (f, qroot) = FsOps.fs(spark, root)
-    FsOps.readManifest(f, qroot).map {
-      case SnapRe(n) => n.toInt
-      case other => throw new IllegalStateException(
-        s"corrupt MANIFEST at $root: expected s<N>, got '$other'")
-    }
+    mainPointer(f, qroot)
   }
+
+  private def mainPointer(f: FileSystem, qroot: Path): Option[Int] =
+    FsOps.readManifest(f, qroot).map(parseSnapRef(s"MANIFEST at $qroot", _))
 
   /** Recursive data-file listing as (relative path, mtime, length) —
     * mtime and length ride along from the listing's own
@@ -1446,35 +1447,37 @@ object Snapshots {
         FsOps.deleteIfExists(f, dstage)
         Seq(DeleteEntry(rel, id, kc, dstats, bytes = parts.head._3))
     }
-    val prevFiles = prev.map(_.files).getOrElse(Seq.empty)
-    val prevDeletes = prev.map(_.deletes).getOrElse(Seq.empty)
     val removes: Seq[String] = (mode match {
       case SnapAppend => Seq.empty[String]
       case SnapOverwritePartitions =>
         val replaced = stagedDirs ++ emptied
-        prevFiles.map(_.rel).filter(p => replaced(parentDirOf(p)))
+        prev.toSeq.flatMap(_.files).map(_.rel)
+          .filter(p => replaced(parentDirOf(p)))
     }) ++ extraRemoves
-    val dRemoves: Seq[String] =
-      if (dropDeletes) prevDeletes.map(_.rel) else Seq.empty
-    // the rolling replay-tag window rides every publish — including
-    // tag-less maintenance snapshots, which must not evict the window
-    val recentTags = (prev.map(_.recentTags).getOrElse(Seq.empty) ++ batchTag)
-      .takeRight(MaxRecentTags)
-    val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-      batchTag, partitionFields, Some(System.currentTimeMillis()), recentTags,
-      bloomCols, dsConstraints, prev.map(_.renames).getOrElse(Seq.empty))
-    val chainDepth = prev.map(_.chainDepth).getOrElse(0)
-    val content =
-      if (prev.isEmpty || chainDepth + 1 >= RebaseEvery) {
-        // rebase: a full manifest caps every future resolution's chain walk
-        val removed = removes.toSet
-        val live = prevFiles.filterNot(e => removed(e.rel)) ++ addEntries
-        val dRemoved = dRemoves.toSet
-        val dLive = prevDeletes.filterNot(d => dRemoved(d.rel)) ++ dAdds
-        renderManifest(meta, None, Seq.empty, Seq.empty, Some(live),
-          dFull = dLive)
-      } else
-        renderManifest(meta, cur, addEntries, removes, None, dAdds, dRemoves)
+    val prevDeleteRels = prev.toSeq.flatMap(_.deletes).map(_.rel)
+    val dRemoves: Seq[String] = if (dropDeletes) prevDeleteRels else Seq.empty
+    // the first write DECLARES the dataset-fixed properties; every later
+    // publish carries its head's (checked equal above, and per rebase)
+    val declared = SnapMeta(modeLabel, None, fmtTok, dsCodec, statsCols,
+      None, partitionFields, bloomCols = bloomCols)
+    // one publish attempt onto head `h`: the validated contract, the
+    // staged files and the equality-delete entry stamped with `seq` (a
+    // rebased delete entry must keep suppressing everything strictly
+    // older), and the rolling replay-tag window carried forward —
+    // including through tag-less maintenance snapshots, which must not
+    // evict it
+    def attempt(h: Option[Resolved], contract: StructType, seq: Int,
+        dRem: Seq[String]): (SnapMeta, Change) = {
+      val meta = h.fold(declared)(metaOf(_, modeLabel)).copy(
+        schema = Some(contract), partitionCols = partitionFields,
+        batchTag = batchTag,
+        recentTags = (h.toSeq.flatMap(_.recentTags) ++ batchTag)
+          .takeRight(MaxRecentTags))
+      val adds = staged.map(rel => entryFor(rel, statsByName.get(rel), seq,
+        stagedLen.getOrElse(rel, -1L), bloomRef))
+      (meta, Delta(adds, removes, dAdds.map(_.copy(seq = seq)), dRem))
+    }
+    val (meta, change) = attempt(prev, contract, seq, dRemoves)
     stageAs match {
       case Some(name) =>
         // WAP: the manifest parks under staged/<name> with its base id in a
@@ -1484,58 +1487,112 @@ object Snapshots {
         // until the write is published or abandoned).
         f.mkdirs(stagedDir(qroot))
         FsOps.atomicWrite(f, new Path(stagedDir(qroot), name),
-          s"wapbase=${cur.getOrElse(-1)}\n" + content)
-        id
-      case None if branch.isDefined =>
-        publishBranchManifest(f, qroot, branch.get, id, cur, content)
+          s"wapbase=${cur.getOrElse(-1)}\n" + renderCommit(prev, meta, change))
         id
       case None =>
-        val hook = prePublishInterleave
-        prePublishInterleave = () => ()
-        hook()
-        try { publishManifest(f, qroot, id, cur, content); id }
-        catch {
-          case race: java.util.ConcurrentModificationException =>
-            // METADATA-ONLY COMMIT RETRY for a race-losing PURE APPEND
-            // (no removes, no equality-delete entries): its staged files
-            // are already in data/ and conflict with nothing, so redoing
-            // the data write would be pure waste — rebase the delta
-            // manifest onto the new head and re-publish (the Iceberg
+        // a rebase re-checks what the staged files were written under:
+        // format/codec/stat and bloom declarations/spec, the rename
+        // ledger (the files' physical column names), and the stat-column
+        // types (staged min/max strings render the BASE type — a FLOAT
+        // bound republished under a DOUBLE contract is the wrong-prune
+        // hazard widenColumn strips for every other file)
+        def fixedPropsHold(p: Resolved): Boolean =
+          p.format == fmtTok && p.codec == dsCodec &&
+            p.statsCols == statsCols && p.bloomCols == bloomCols &&
+            p.renames == prev.toSeq.flatMap(_.renames) &&
+            (p.partitionCols.isEmpty || p.partitionCols == partitionFields) &&
+            statTypesStable(prev.flatMap(_.schema), p.schema, statsCols)
+        def revalidate(h: Option[Resolved]): StructType =
+          h.flatMap(_.schema).fold(df.schema)(stored =>
+            graft.schema.SchemaEvolution.validate(
+              stored, df.schema, partitionFields, evolution))
+        val rebase: Option[Rebase] =
+          if (branch.isDefined) None
+          else if (mode == SnapAppend && extraRemoves.isEmpty && !dropDeletes)
+            // METADATA-ONLY RETRY for a race-losing PURE APPEND (no
+            // removes): its staged files are already in data/ and
+            // conflict with nothing, so redoing the data write would be
+            // pure waste — rebase onto the new head, RE-STAMP the seqs to
+            // the new id (a winner's newer equality deletes must not
+            // suppress this batch's rows) and re-publish (the Iceberg
             // retry posture). A merge-on-read batch (adds + one
             // equality-delete file) retries the same way IFF its key
-            // ranges provably don't intersect anything the interleaved
-            // winners added or deleted (the Iceberg snapshot-isolation
-            // retry) — checked inside the retry per attempt. Anything
-            // that removes files resolved its base state and must
-            // re-read, so it aborts.
-            val retryable = mode == SnapAppend && extraRemoves.isEmpty &&
-              !dropDeletes
-            if (retryable)
-              retryAppendPublish(spark, f, qroot, root, df.schema, evolution,
-                partitionFields, modeLabel, fmtTok, dsCodec, statsCols,
-                bloomCols, batchTag, staged, statsByName, stagedLen, bloomRef,
-                race, dAdds, cur, dsConstraints,
-                prev.map(_.renames).getOrElse(Seq.empty),
-                prev.flatMap(_.schema))
-            else if (RewriteRetryModes(modeLabel) && dAdds.isEmpty)
-              // a ROW-PRESERVING maintenance rewrite (compact/fold) that
-              // lost to a commuting winner rebases instead of aborting —
-              // the Iceberg RewriteFiles retry: valid iff every retired
-              // file is still live at the head and no winner added
-              // equality-deletes (checked per attempt inside)
-              retryRewritePublish(spark, f, qroot, root, df.schema,
-                evolution, partitionFields, modeLabel, fmtTok, dsCodec,
-                statsCols, bloomCols, staged, statsByName, stagedLen,
-                bloomRef, removes, dRemoves,
-                prevDeletes.map(_.rel).toSet,
-                prev.map(_.renames).getOrElse(Seq.empty), race,
-                prev.flatMap(_.schema))
-            else throw race
-        }
+            // range is provably disjoint from everything the interleaved
+            // winners added and removed ([[mergeRebaseConflict]] — the
+            // Iceberg snapshot-isolation retry).
+            Some { (h, race) =>
+              // the winner may have been a redelivery of this very batch
+              h.filter(p => batchTag.exists(t =>
+                p.batchTag.contains(t) || p.recentTags.contains(t)))
+                .foreach(p => return p.id)
+              // constraints must MATCH the base's: the staged rows were
+              // guarded under those — an interleaved add_constraint means
+              // this data was never checked against the new rule, so the
+              // original race surfaces and the re-run re-stages under it
+              h.foreach(p => if (!fixedPropsHold(p) ||
+                p.constraints != dsConstraints) throw race)
+              val contract = revalidate(h)
+              if (dAdds.nonEmpty)
+                mergeRebaseConflict(f, qroot, cur, h.map(_.id), dAdds,
+                  contract, h.toSeq.flatMap(_.deletes)).foreach { why =>
+                  val e = new java.util.ConcurrentModificationException(
+                    s"merge-on-read batch lost a publish race at $qroot and " +
+                      s"cannot rebase: $why — re-read the new state and " +
+                      "re-merge")
+                  e.initCause(race)
+                  throw e
+                }
+              attempt(h, contract, h.fold(0)(_.id) + 1, dRemoves)
+            }
+          else if (RewriteRetryModes(modeLabel) && dAdds.isEmpty)
+            // a ROW-PRESERVING maintenance rewrite (compact/fold) that
+            // lost to a commuting winner rebases instead of aborting —
+            // the Iceberg RewriteFiles retry. The staged output holds
+            // exactly the rows of the files it retires, so the rebase
+            // equals the winners-then-rewrite serialization whenever
+            // every retired file is STILL LIVE at the head (a winner that
+            // removed or replaced one invalidated the rewrite) and no
+            // winner ADDED equality-deletes (the restaged rows' rebased
+            // seq would outrank them). Retired delete entries a winner
+            // already dropped retire as the intersection. A winner's pure
+            // APPEND — even into a compacted directory — always commutes:
+            // the explicit retire LIST (never a directory recomputation)
+            // keeps its file live beside the output. Constraint drift
+            // does not abort: restaged rows are pre-existing rows, and the
+            // rebased manifest inherits the head's constraint set.
+            Some { (h, race) =>
+              def conflict(why: String): Nothing = {
+                val e = new java.util.ConcurrentModificationException(
+                  s"$modeLabel lost a publish race at $qroot and cannot " +
+                    s"rebase: $why — re-read the new state and re-run the " +
+                    "maintenance")
+                e.initCause(race)
+                throw e
+              }
+              val p = h.getOrElse(
+                conflict("the dataset no longer has a committed snapshot"))
+              if (!fixedPropsHold(p))
+                conflict("an interleaved winner changed the dataset-fixed " +
+                  "properties (format/codec/stats/bloom/partition spec/" +
+                  "stat-column types) or the column-mapping ledger")
+              val live = p.files.map(_.rel).toSet
+              removes.find(!live(_)).foreach(rel =>
+                conflict(s"an interleaved winner removed or replaced $rel, " +
+                  "which this rewrite retires"))
+              val headDel = p.deletes.map(_.rel).toSet
+              (headDel -- prevDeleteRels).headOption.foreach(rel =>
+                conflict(s"an interleaved winner added equality-delete " +
+                  s"$rel — the restaged rows' rebased seq would outrank it"))
+              attempt(h, revalidate(h), p.id + 1, dRemoves.filter(headDel))
+            }
+          // anything else that removes files resolved its base state and
+          // must re-read: the race surfaces
+          else None
+        commit(f, qroot, branch, prev, meta, change, rebase)
     }
   }
 
-  /** Bounded attempts for [[retryAppendPublish]] — each failure means yet
+  /** Bounded commit retries ([[commit]]) — each failure means yet
     * another concurrent publish landed first; past this many, surface the
     * race (the single-maintainer contract is clearly being violated at a
     * rate retrying can't absorb). */
@@ -1563,235 +1620,134 @@ object Snapshots {
     case _ => true
   }
 
-  /** Mode labels whose lost races may rebase through
-    * [[retryRewritePublish]]: the ROW-PRESERVING maintenance rewrites —
-    * their staged output re-adds exactly the rows of the files they
-    * retire, so ordering against a commuting winner is immaterial.
-    * Content-CHANGING remove-bearing lanes (overwrite, delete_where,
-    * replace_where, merge, rollback, truncate) keep the loud abort: a
-    * winner interleaving with one of those is a real write-write
-    * conflict whose resolution needs the caller's intent. */
+  /** Mode labels whose lost races may rebase as a rewrite: the
+    * ROW-PRESERVING maintenance rewrites — their staged output re-adds
+    * exactly the rows of the files they retire, so ordering against a
+    * commuting winner is immaterial. Content-CHANGING remove-bearing
+    * lanes (overwrite, delete_where, replace_where, merge, rollback,
+    * truncate) keep the loud abort: a winner interleaving with one of
+    * those is a real write-write conflict whose resolution needs the
+    * caller's intent. */
   private val RewriteRetryModes = Set("compact", "fold")
 
   /** Test-only interleave injection: consumed (reset to no-op) and invoked
-    * once, immediately before the next publish attempt — lets specs land a
-    * deterministic concurrent writer between a write's base resolution and
-    * its pointer flip. */
+    * by [[commit]] immediately before its next pointer flip — every
+    * publish lane, main or branch — so specs can land a deterministic
+    * concurrent writer between a publish's base resolution and its flip. */
   private[sink] var prePublishInterleave: () => Unit = () => ()
 
-  /** Re-publish a race-losing pure append against the NEW head: re-resolve,
-    * re-check the dataset-fixed properties still hold (a winner that
-    * changed format/codec/stats/spec makes this batch's staged layout
-    * wrong — the original race surfaces instead), re-validate the schema
-    * contract, RE-STAMP the staged files' seqs to the new id (a concurrent
-    * winner's newer equality deletes must not suppress this batch's rows),
-    * and flip. Purely metadata: no data file is read, moved, or written.
-    *
-    * A MERGE-ON-READ batch (`dAdds` non-empty) rebases the same way, but
-    * only after the SNAPSHOT-ISOLATION check: its key range (the delete
-    * entry's recorded per-key min/max — which covers the batch's upserts
-    * too, [[mergeDeltas]] records ALL batch keys) must be provably
-    * disjoint from every data file and delete file the interleaved
-    * winners added AND removed, per [[mergeRebaseConflict]]. The rebase
-    * always equals the winners-then-loser serialization (the re-run
-    * would stage the identical manifest); disjointness additionally
-    * guarantees neither batch invalidated the other's intent — in
-    * particular a concurrent predicate delete or overwrite whose rows
-    * this batch's keys touch aborts rather than silently re-asserting
-    * them. Intersecting (or unprovable — missing stats, a winner's full
-    * rebase) aborts loudly. */
-  private def retryAppendPublish(
-      spark: SparkSession, f: FileSystem, qroot: Path, root: String,
-      incoming: StructType, evolution: graft.schema.SchemaEvolution.Policy,
-      partitionFields: Seq[String], modeLabel: String, fmtTok: String,
-      dsCodec: Option[String], statsCols: Seq[String],
-      bloomCols: Seq[String],
-      batchTag: Option[String], staged: Seq[String],
-      statsByName: Map[String, StagedStats],
-      stagedLen: Map[String, Long],
-      bloomRef: Option[String],
-      firstRace: java.util.ConcurrentModificationException,
+  // --------------------------------------------------------- commit step
+
+  /** What one publish changes against the head it resolved. */
+  private sealed trait Change
+
+  /** Added and retired entries: a delta manifest, or — at a rebase — the
+    * head's live set with them applied. */
+  private case class Delta(
+      adds: Seq[FileEntry] = Seq.empty, removes: Seq[String] = Seq.empty,
       dAdds: Seq[DeleteEntry] = Seq.empty,
-      baseCur: Option[Int] = None,
-      baseConstraints: Seq[(String, String)] = Seq.empty,
-      baseRenames: Seq[(Int, String, String)] = Seq.empty,
-      baseSchema: Option[StructType] = None): Int = {
-    var lastRace = firstRace
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      attempt += 1
-      val cur = currentSnapshot(spark, root)
-      val prev = cur.map(resolve(f, qroot, _))
-      // the winner may have been a redelivery of this very batch
-      if (batchTag.isDefined && prev.exists(p =>
-          p.batchTag == batchTag || p.recentTags.contains(batchTag.get)))
-        return cur.get
-      prev.foreach { p =>
-        // constraints must MATCH the base's: the staged rows were
-        // guarded under those — an interleaved add_constraint means
-        // this data was never checked against the new rule, so the
-        // retry aborts and the re-run re-stages under it. The rename
-        // ledger must match too: the staged files' physical column
-        // names were the base contract's — rebasing past an interleaved
-        // rename/drop would mis-map them (and the widening gate below
-        // could resurrect a just-retired name)
-        val compatible = p.format == fmtTok && p.codec == dsCodec &&
-          p.statsCols == statsCols && p.bloomCols == bloomCols &&
-          p.constraints == baseConstraints && p.renames == baseRenames &&
-          (p.partitionCols.isEmpty || p.partitionCols == partitionFields) &&
-          statTypesStable(baseSchema, p.schema, statsCols)
-        if (!compatible) throw lastRace
-      }
-      val contract = prev.flatMap(_.schema) match {
-        case Some(stored) => graft.schema.SchemaEvolution.validate(
-          stored, incoming, partitionFields, evolution)
-        case None => incoming
-      }
-      if (dAdds.nonEmpty)
-        mergeRebaseConflict(f, qroot, baseCur, cur, dAdds, contract,
-          prev.toSeq.flatMap(_.deletes)).foreach { why =>
-          val e = new java.util.ConcurrentModificationException(
-            s"merge-on-read batch lost a publish race at $qroot and " +
-              s"cannot rebase: $why — re-read the new state and re-merge")
-          e.initCause(lastRace)
-          throw e
-        }
-      val id = cur.getOrElse(0) + 1
-      val addEntries = staged.map(rel =>
-        entryFor(rel, statsByName.get(rel), id, stagedLen.getOrElse(rel, -1L),
-          bloomRef))
-      // the delete entry re-anchors at the new id too: it must keep
-      // suppressing everything strictly older, including the winners'
-      // files (provably key-disjoint, so suppressing nothing of theirs)
-      val dAddEntries = dAdds.map(_.copy(seq = id))
-      val recentTags =
-        (prev.map(_.recentTags).getOrElse(Seq.empty) ++ batchTag)
-          .takeRight(MaxRecentTags)
-      val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-        batchTag, partitionFields, Some(System.currentTimeMillis()),
-        recentTags, bloomCols, baseConstraints,
-        prev.map(_.renames).getOrElse(Seq.empty))
-      val chainDepth = prev.map(_.chainDepth).getOrElse(0)
-      val content =
-        if (prev.isEmpty || chainDepth + 1 >= RebaseEvery)
-          renderManifest(meta, None, Seq.empty, Seq.empty,
-            Some(prev.map(_.files).getOrElse(Seq.empty) ++ addEntries),
-            dFull = prev.map(_.deletes).getOrElse(Seq.empty) ++ dAddEntries)
-        else
-          renderManifest(meta, cur, addEntries, Seq.empty, None,
-            dAddEntries)
-      try { publishManifest(f, qroot, id, cur, content); return id }
-      catch {
-        case race: java.util.ConcurrentModificationException =>
-          lastRace = race
-      }
+      dRemoves: Seq[String] = Seq.empty) extends Change
+
+  /** A whole live set (rollback, fast-forward, truncate, a stat strip, a
+    * staged write): rendered as-is at a rebase or when `forceFull`, else
+    * as its delta against the head. */
+  private case class LiveSet(
+      files: Seq[FileEntry], deletes: Seq[DeleteEntry],
+      forceFull: Boolean = false) extends Change
+
+  /** The head's declarations carried into a new manifest under `mode`
+    * (no replay tag — a lane that publishes one sets it). Lanes change
+    * only the fields they change, with `.copy`. */
+  private def metaOf(h: Resolved, mode: String): SnapMeta =
+    SnapMeta(mode, h.schema, h.format, h.codec, h.statsCols, None,
+      h.partitionCols, h.ts, h.recentTags, h.bloomCols, h.constraints,
+      h.renames)
+
+  /** The manifest publishing `change` onto `head` writes, stamped with the
+    * render instant — the one delta-or-rebase decision: a delta against
+    * the head unless there is no head or the chain would reach
+    * [[RebaseEvery]] (then a FULL manifest caps every future resolution's
+    * chain walk). */
+  private def renderCommit(
+      head: Option[Resolved], meta: SnapMeta, change: Change): String = {
+    val stamped = meta.copy(ts = Some(System.currentTimeMillis()))
+    val rebase = head.forall(_.chainDepth + 1 >= RebaseEvery)
+    val files = head.toSeq.flatMap(_.files)
+    val dels = head.toSeq.flatMap(_.deletes)
+    def full(fs: Seq[FileEntry], ds: Seq[DeleteEntry]): String =
+      renderManifest(stamped, None, Seq.empty, Seq.empty, Some(fs),
+        dFull = ds)
+    def delta(d: Delta): String =
+      renderManifest(stamped, head.map(_.id), d.adds, d.removes, None,
+        d.dAdds, d.dRemoves)
+    change match {
+      case LiveSet(fs, ds, force) if force || rebase => full(fs, ds)
+      case LiveSet(fs, ds, _) =>
+        val (rels, dRels) = (fs.map(_.rel).toSet, ds.map(_.rel).toSet)
+        val headRels = files.map(_.rel).toSet
+        val headDRels = dels.map(_.rel).toSet
+        delta(Delta(fs.filterNot(e => headRels(e.rel)),
+          files.map(_.rel).filterNot(rels),
+          ds.filterNot(d => headDRels(d.rel)),
+          dels.map(_.rel).filterNot(dRels)))
+      case d: Delta if rebase =>
+        val (removed, dRemoved) = (d.removes.toSet, d.dRemoves.toSet)
+        full(files.filterNot(e => removed(e.rel)) ++ d.adds,
+          dels.filterNot(x => dRemoved(x.rel)) ++ d.dAdds)
+      case d: Delta => delta(d)
     }
-    throw lastRace
   }
 
-  /** Re-publish a race-losing ROW-PRESERVING REWRITE (compact/fold) onto
-    * the new head — the Iceberg RewriteFiles retry posture. The staged
-    * output holds exactly the rows of the files it retires, so a rebase
-    * equals the winners-then-rewrite serialization WHENEVER the winners
-    * commuted with it; per attempt, commuting means:
-    *
-    *  - the dataset-fixed properties (format/codec/stats/bloom/spec)
-    *    still hold — a winner that changed them makes the staged layout
-    *    wrong, so the original race surfaces;
-    *  - every retired data file is STILL LIVE at the head — a winner
-    *    that removed or replaced one (delete_where, overwrite, another
-    *    compact, rollback, truncate) invalidated the staged rewrite;
-    *  - no winner ADDED equality-delete entries — the restaged rows
-    *    re-anchor at the rebased id, which would outrank (and resurrect
-    *    rows from) any interleaved delete;
-    *  - delete entries this publish retires (a fold) that a winner
-    *    already dropped retire as the intersection (a no-op twice).
-    *
-    * A winner's pure APPEND — including into a directory this rewrite
-    * compacts — always commutes: the rebase keeps the explicit base-
-    * resolved retire LIST (never a directory recomputation), so the
-    * winner's file simply stays live beside the compacted output and no
-    * row is lost or doubled. Constraint drift does NOT abort: restaged
-    * rows are pre-existing table rows (the verbatim-restage exemption
-    * every maintenance lane already has), and the rebased manifest
-    * INHERITS the head's constraint set — a winner's add_constraint is
-    * never un-published by a maintenance rebase. Purely metadata: no
-    * data file is read, moved, or written. */
-  private def retryRewritePublish(
-      spark: SparkSession, f: FileSystem, qroot: Path, root: String,
-      incoming: StructType, evolution: graft.schema.SchemaEvolution.Policy,
-      partitionFields: Seq[String], modeLabel: String, fmtTok: String,
-      dsCodec: Option[String], statsCols: Seq[String],
-      bloomCols: Seq[String], staged: Seq[String],
-      statsByName: Map[String, StagedStats],
-      stagedLen: Map[String, Long], bloomRef: Option[String],
-      removes: Seq[String], dRemoves: Seq[String],
-      baseDeleteRels: Set[String],
-      baseRenames: Seq[(Int, String, String)],
-      firstRace: java.util.ConcurrentModificationException,
-      baseSchema: Option[StructType] = None): Int = {
-    def conflict(why: String): Nothing = {
-      val e = new java.util.ConcurrentModificationException(
-        s"$modeLabel lost a publish race at $qroot and cannot rebase: " +
-          s"$why — re-read the new state and re-run the maintenance")
-      e.initCause(firstRace)
-      throw e
-    }
-    var lastRace = firstRace
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      attempt += 1
-      val cur = currentSnapshot(spark, root)
-      val p = cur.map(resolve(f, qroot, _)).getOrElse(
-        conflict("the dataset no longer has a committed snapshot"))
-      val compatible = p.format == fmtTok && p.codec == dsCodec &&
-        p.statsCols == statsCols && p.bloomCols == bloomCols &&
-        p.renames == baseRenames &&
-        (p.partitionCols.isEmpty || p.partitionCols == partitionFields) &&
-        statTypesStable(baseSchema, p.schema, statsCols)
-      if (!compatible)
-        conflict("an interleaved winner changed the dataset-fixed " +
-          "properties (format/codec/stats/bloom/partition spec/stat-column " +
-          "types) or the column-mapping ledger")
-      val live = p.files.map(_.rel).toSet
-      removes.find(!live(_)).foreach(rel =>
-        conflict(s"an interleaved winner removed or replaced $rel, " +
-          "which this rewrite retires"))
-      val headDel = p.deletes.map(_.rel).toSet
-      (headDel -- baseDeleteRels).headOption.foreach(rel =>
-        conflict(s"an interleaved winner added equality-delete $rel — " +
-          "the restaged rows' rebased seq would outrank it"))
-      val dRem = dRemoves.filter(headDel)
-      val contract = p.schema match {
-        case Some(stored) => graft.schema.SchemaEvolution.validate(
-          stored, incoming, partitionFields, evolution)
-        case None => incoming
-      }
-      val id = cur.getOrElse(0) + 1
-      val addEntries = staged.map(rel =>
-        entryFor(rel, statsByName.get(rel), id, stagedLen.getOrElse(rel, -1L),
-          bloomRef))
-      val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-        None, partitionFields, Some(System.currentTimeMillis()),
-        p.recentTags.takeRight(MaxRecentTags), bloomCols, p.constraints,
-        p.renames)
-      val content =
-        if (p.chainDepth + 1 >= RebaseEvery) {
-          val removed = removes.toSet
-          val dRemoved = dRem.toSet
-          renderManifest(meta, None, Seq.empty, Seq.empty,
-            Some(p.files.filterNot(e => removed(e.rel)) ++ addEntries),
-            dFull = p.deletes.filterNot(d => dRemoved(d.rel)))
-        } else
-          renderManifest(meta, cur, addEntries, removes, None,
-            Seq.empty, dRem)
-      try { publishManifest(f, qroot, id, cur, content); return id }
-      catch {
-        case race: java.util.ConcurrentModificationException =>
-          lastRace = race
+  /** A lane's rebase check, run on each commit retry against the
+    * re-resolved head, with the race that forced it: the meta and change
+    * to republish there, or a throw naming the conflict. A check may also
+    * return from its lane outright (a redelivered batch, a merge that
+    * already landed). */
+  private type Rebase = (Option[Resolved],
+    java.util.ConcurrentModificationException) => (SnapMeta, Change)
+
+  /** THE commit step every snapshot publish goes through: render `change`
+    * onto `head` ([[renderCommit]]), consume [[prePublishInterleave]], and
+    * flip main's MANIFEST — or branch `branch`'s HEAD — through
+    * [[publishPointer]]. A lost race re-resolves the head and runs the
+    * lane's `rebase` check, at most [[MaxCommitRetries]] times; a lane
+    * without one aborts with the race, nothing flipped. Returns the
+    * published id. */
+  private def commit(
+      f: FileSystem, qroot: Path, branch: Option[String],
+      head: Option[Resolved], meta: SnapMeta, change: Change,
+      rebase: Option[Rebase] = None): Int = {
+    val msDir = branch.fold(snapshotsDir(qroot))(branchDir(qroot, _))
+    @annotation.tailrec
+    def publish(h: Option[Resolved], meta: SnapMeta, change: Change,
+        retries: Int): Int = {
+      val id = h.fold(0)(_.id) + 1
+      val content = renderCommit(h, meta, change)
+      val hook = prePublishInterleave
+      prePublishInterleave = () => ()
+      hook()
+      val lost =
+        try {
+          branch match {
+            case None => publishManifest(f, qroot, id, h.map(_.id), content)
+            case Some(b) =>
+              publishBranchManifest(f, qroot, b, id, h.map(_.id), content)
+          }
+          None
+        } catch {
+          case race: java.util.ConcurrentModificationException => Some(race)
+        }
+      (lost, rebase) match {
+        case (None, _) => id
+        case (Some(race), Some(check)) if retries < MaxCommitRetries =>
+          val now = branch.fold(mainPointer(f, qroot))(
+            branchHeadOpt(f, qroot, _)).map(resolveIn(f, msDir, _))
+          val (m, c) = check(now, race)
+          publish(now, m, c, retries + 1)
+        case (Some(race), _) => throw race
       }
     }
-    throw lastRace
+    publish(head, meta, change, 0)
   }
 
   /** Why a race-losing merge-on-read batch may NOT rebase onto the new
@@ -1848,10 +1804,8 @@ object Snapshots {
     // whose rows they re-add verbatim — their files carry rows this
     // batch's delete would have suppressed in the originals just the
     // same (both have seq < the rebased id), so an interleaved
-    // maintain() never blocks a mergeStream batch's rebase
-    val rowPreserving =
-      Set("compact", "fold", "migrate_spec", "evolve_spec", "evolve_schema",
-        "add_constraint", "drop_constraint", "rename_column", "drop_column")
+    // maintain() never blocks a mergeStream batch's rebase ([[SkipModes]]
+    // — the incremental consumers' row-preserving set)
     // entries interleaved winners ADDED then possibly removed later —
     // a later remove's stats may live here rather than in the base
     val interAdds = scala.collection.mutable.Map.empty[String, FileEntry]
@@ -1861,7 +1815,7 @@ object Snapshots {
         interAdds(e.rel) = e)
       (w.dAdds ++ w.dFull.getOrElse(Seq.empty)).foreach(d =>
         interDAdds(d.rel) = d)
-      if (rowPreserving(w.mode)) ()
+      if (SkipModes(w.mode)) ()
       else {
         if (w.full.isDefined)
           return Some(s"interleaved snapshot s${w.id} is a full manifest " +
@@ -1916,20 +1870,14 @@ object Snapshots {
     * staged files become vacuum-reclaimable orphans). */
   private[sink] def publishManifest(
       f: FileSystem, qroot: Path, id: Int, expectedCur: Option[Int],
-      content: String): Unit = {
-    def committedNow(): Option[Int] = FsOps.readManifest(f, qroot).map {
-      case SnapRe(n) => n.toInt
-      case other => throw new IllegalStateException(
-        s"corrupt MANIFEST at $qroot: expected s<N>, got '$other'")
-    }
+      content: String): Unit =
     publishPointer(f, snapshotsDir(qroot), id, expectedCur, content,
-      committedNow _, () => FsOps.writeManifest(f, qroot, s"s$id"),
+      () => mainPointer(f, qroot), () => FsOps.writeManifest(f, qroot, s"s$id"),
       now => s"snapshot write lost a race at $qroot: resolved base " +
         s"${expectedCur.fold("(none)")(c => s"s$c")} but the committed " +
         s"pointer is now ${now.fold("(none)")(c => s"s$c")} — " +
         "another writer published first; re-read and retry (this " +
         "dataset's write surface is single-maintainer by contract)")
-  }
 
   /** The one pointer-publish discipline both lineages share (main's
     * MANIFEST, a branch's HEAD): check the pointer BEFORE touching
@@ -1986,29 +1934,13 @@ object Snapshots {
     // constraints follow the TARGET (like its schema/stat declarations):
     // the restored state must re-declare what held when it was current —
     // a live-carried rule could reference a column the target predates
-    val meta = SnapMeta("rollback",
-      target.schema.getOrElse(StructType(Seq.empty)), target.format,
-      target.codec, target.statsCols, None, target.partitionCols,
-      Some(System.currentTimeMillis()), live.recentTags, target.bloomCols,
-      target.constraints, live.renames)
-    val id = cur + 1
-    val content =
-      if (live.chainDepth + 1 >= RebaseEvery)
-        renderManifest(meta, None, Seq.empty, Seq.empty, Some(target.files),
-          dFull = target.deletes)
-      else {
-        val targetRels = target.files.map(_.rel).toSet
-        val liveRels = live.files.map(_.rel).toSet
-        val targetDRels = target.deletes.map(_.rel).toSet
-        val liveDRels = live.deletes.map(_.rel).toSet
-        renderManifest(meta, Some(cur),
-          target.files.filterNot(e => liveRels(e.rel)),
-          live.files.map(_.rel).filterNot(targetRels), None,
-          target.deletes.filterNot(d => liveDRels(d.rel)),
-          live.deletes.map(_.rel).filterNot(targetDRels))
-      }
-    publishManifest(f, qroot, id, Some(cur), content)
-    id
+    // a legacy (v1) target records no schema, and neither does the
+    // restored head: reads infer from the files exactly as time travel
+    // to the target does
+    commit(f, qroot, None, Some(live),
+      metaOf(target, "rollback").copy(recentTags = live.recentTags,
+        renames = live.renames),
+      LiveSet(target.files, target.deletes))
   }
 
   /**
@@ -2327,63 +2259,39 @@ object Snapshots {
   def foldDeletes(
       spark: SparkSession, root: String,
       partitionFields: Seq[String],
-      targetFilesPerPartition: Int = 1): Option[Int] =
-    foldDeletesImpl(spark, root, partitionFields, targetFilesPerPartition,
-      MaxCommitRetries)
-
-  private def foldDeletesImpl(
-      spark: SparkSession, root: String,
-      partitionFields: Seq[String],
-      targetFilesPerPartition: Int, retries: Int): Option[Int] = {
-    import org.apache.spark.sql.functions.col
+      targetFilesPerPartition: Int = 1): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
     val (f, qroot) = FsOps.fs(spark, root)
     val id = currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, id)
-    if (m.deletes.isEmpty) return None
-    val schema = m.schema.getOrElse(StructType(Seq.empty))
-    val affectedDirs = m.files
-      .filter(e => m.deletes.exists(deleteApplies(_, e, schema)))
-      .map(e => parentDirOf(e.rel)).toSet
-    if (affectedDirs.isEmpty) {
-      // every delete is dead weight (already folded by compaction or
-      // key-range-pruned everywhere): drop the entries metadata-only
-      val meta = SnapMeta("fold", schema, m.format, m.codec, m.statsCols,
-        None, m.partitionCols, Some(System.currentTimeMillis()),
-        m.recentTags, m.bloomCols, m.constraints, m.renames)
-      val nid = id + 1
-      val content =
-        if (m.chainDepth + 1 >= RebaseEvery)
-          renderManifest(meta, None, Seq.empty, Seq.empty, Some(m.files))
-        else
-          renderManifest(meta, Some(id), Seq.empty, Seq.empty, None,
-            Seq.empty, m.deletes.map(_.rel))
-      val hook = prePublishInterleave
-      prePublishInterleave = () => ()
-      hook()
-      try publishManifest(f, qroot, nid, Some(id), content)
-      catch {
-        case race: java.util.ConcurrentModificationException =>
-          // dropping a DEAD entry set is safe to recompute wholesale:
-          // re-run against the new head (a winner may have added files
-          // or deletes that change the dispatch — the re-run re-decides
-          // between the metadata drop and the data fold). Bounded like
-          // every commit retry.
-          if (retries <= 0) throw race
-          return foldDeletesImpl(spark, root, partitionFields,
-            targetFilesPerPartition, retries - 1)
+    // the dispatch, re-decided against every head a lost race re-resolves
+    // (a winner may have added files or deletes that change it): nothing
+    // to fold; a data fold of the partitions any delete still touches; or
+    // — every delete dead weight (already folded by compaction or
+    // key-range-pruned everywhere) — a metadata-only drop of the entries,
+    // which is safe to recompute wholesale against any head
+    val dispatch: Resolved => (SnapMeta, Change) = h => {
+      if (h.deletes.isEmpty) return None
+      val schema = h.schema.getOrElse(StructType(Seq.empty))
+      val affectedDirs = h.files
+        .filter(e => h.deletes.exists(deleteApplies(_, e, schema)))
+        .map(e => parentDirOf(e.rel)).toSet
+      if (affectedDirs.nonEmpty) {
+        val entries = h.files.filter(e => affectedDirs(parentDirOf(e.rel)))
+        val folded = scanWithDeletes(spark, qroot, h, entries)
+        return Some(writeInternal(
+          splitPerPartition(folded, partitionFields, targetFilesPerPartition),
+          root, partitionFields, SnapOverwritePartitions, "fold",
+          graft.schema.SchemaEvolution.Widen,
+          touchedDirs = Some(affectedDirs), dropDeletes = true,
+          enforceConstraints = false))
       }
-      return Some(nid)
+      (metaOf(h, "fold"), Delta(dRemoves = h.deletes.map(_.rel)))
     }
-    val entries = m.files.filter(e => affectedDirs(parentDirOf(e.rel)))
-    val folded = scanWithDeletes(spark, qroot, m, entries)
-    Some(writeInternal(
-      splitPerPartition(folded, partitionFields, targetFilesPerPartition),
-      root, partitionFields, SnapOverwritePartitions, "fold",
-      graft.schema.SchemaEvolution.Widen,
-      touchedDirs = Some(affectedDirs), dropDeletes = true,
-      enforceConstraints = false))
+    val (meta, change) = dispatch(m)
+    Some(commit(f, qroot, None, Some(m), meta, change,
+      Some((h, race) => dispatch(h.getOrElse(throw race)))))
   }
 
   /** Conservative [[StatRange]]s implied by a predicate's top-level AND
@@ -2978,25 +2886,6 @@ object Snapshots {
     }
   }
 
-  /** Publish a METADATA-ONLY snapshot (unchanged live file + delete
-    * sets, new declarations in `meta`) — the one shape every
-    * declaration change shares (schema/spec/constraint evolution):
-    * delta against the current head, or a full rebase when the chain
-    * hits [[RebaseEvery]]. Returns the new id. */
-  private def publishMetaOnly(
-      f: FileSystem, qroot: Path, cur: Int, m: Resolved,
-      meta: SnapMeta): Int = {
-    val id = cur + 1
-    val content =
-      if (m.chainDepth + 1 >= RebaseEvery)
-        renderManifest(meta, None, Seq.empty, Seq.empty, Some(m.files),
-          dFull = m.deletes)
-      else
-        renderManifest(meta, Some(cur), Seq.empty, Seq.empty, None)
-    publishManifest(f, qroot, id, Some(cur), content)
-    id
-  }
-
   /**
    * SCHEMA WIDENING WITHOUT A WRITE — `ALTER TABLE t ADD COLUMN`'s
    * engine half: publish the widened contract as one METADATA-ONLY
@@ -3053,11 +2942,8 @@ object Snapshots {
     val widened = graft.schema.SchemaEvolution.validate(
       stored, StructType(stored.fields ++ columns), m.partitionCols,
       graft.schema.SchemaEvolution.Widen)
-    publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("evolve_schema", widened, m.format, m.codec,
-        m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
-        m.constraints, m.renames))
+    commit(f, qroot, None, Some(m),
+      metaOf(m, "evolve_schema").copy(schema = Some(widened)), Delta())
   }
 
   /** Column names a constraint expression references (top level of any
@@ -3147,12 +3033,11 @@ object Snapshots {
     // dataset-declared stat/bloom columns follow the rename: new files
     // record under the new name; old files' old-name stats just stop
     // pruning (conservative) until compaction re-keys them
-    publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("rename_column", newSchema, m.format, m.codec,
-        m.statsCols.map(c => if (c == field.name) to else c), None,
-        m.partitionCols, Some(System.currentTimeMillis()), m.recentTags,
-        m.bloomCols.map(c => if (c == field.name) to else c),
-        m.constraints, m.renames :+ ((cur + 1, field.name, to))))
+    def renamed(c: String) = if (c == field.name) to else c
+    commit(f, qroot, None, Some(m), metaOf(m, "rename_column").copy(
+      schema = Some(newSchema), statsCols = m.statsCols.map(renamed),
+      bloomCols = m.bloomCols.map(renamed),
+      renames = m.renames :+ ((cur + 1, field.name, to))), Delta())
   }
 
   /**
@@ -3221,21 +3106,15 @@ object Snapshots {
     // delete-entry key stats) in a FULL manifest render; integer-chain
     // and decimal promotions render identically and keep theirs.
     val staleStats = field.dataType == FloatType && newType == DoubleType
-    val meta = SnapMeta("evolve_schema", widened, m.format, m.codec,
-      m.statsCols, None, m.partitionCols,
-      Some(System.currentTimeMillis()), m.recentTags, blooms,
-      m.constraints, m.renames)
-    if (!staleStats) publishMetaOnly(f, qroot, cur, m, meta)
-    else {
-      val files = m.files.map(e =>
-        e.copy(stats = e.stats - field.name, nulls = e.nulls - field.name))
-      val dels = m.deletes.map(d => d.copy(stats = d.stats - field.name))
-      val id = cur + 1
-      publishManifest(f, qroot, id, Some(cur),
-        renderManifest(meta, None, Seq.empty, Seq.empty, Some(files),
-          dFull = dels))
-      id
-    }
+    val change =
+      if (!staleStats) Delta()
+      else LiveSet(
+        m.files.map(e =>
+          e.copy(stats = e.stats - field.name, nulls = e.nulls - field.name)),
+        m.deletes.map(d => d.copy(stats = d.stats - field.name)),
+        forceFull = true)
+    commit(f, qroot, None, Some(m), metaOf(m, "evolve_schema")
+      .copy(schema = Some(widened), bloomCols = blooms), change)
   }
 
   /** [[dropColumn]] for a list, ALL-OR-NOTHING: every column is
@@ -3262,12 +3141,10 @@ object Snapshots {
       field.name
     }
     val gone = dropped.toSet
-    publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("drop_column", remaining,
-        m.format, m.codec, m.statsCols.filterNot(gone), None,
-        m.partitionCols, Some(System.currentTimeMillis()), m.recentTags,
-        m.bloomCols.filterNot(gone), m.constraints,
-        m.renames ++ dropped.map(n => (cur + 1, n, ""))))
+    commit(f, qroot, None, Some(m), metaOf(m, "drop_column").copy(
+      schema = Some(remaining), statsCols = m.statsCols.filterNot(gone),
+      bloomCols = m.bloomCols.filterNot(gone),
+      renames = m.renames ++ dropped.map(n => (cur + 1, n, ""))), Delta())
   }
 
   /**
@@ -3290,19 +3167,12 @@ object Snapshots {
         s"no snapshot published under $root — nothing to truncate"))
     val m = resolve(f, qroot, cur)
     if (m.files.isEmpty && m.deletes.isEmpty) return None
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
+    if (m.schema.isEmpty) throw new IllegalStateException(
       s"snapshot s$cur records no schema contract (legacy v1 manifest) — " +
         "an empty state must still declare what readers resolve; one v2 " +
-        "write pins the contract first"))
-    val meta = SnapMeta("truncate", stored, m.format, m.codec,
-      m.statsCols, None, m.partitionCols,
-      Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
-      m.constraints, m.renames)
-    val id = cur + 1
-    val content =
-      renderManifest(meta, None, Seq.empty, Seq.empty, Some(Seq.empty))
-    publishManifest(f, qroot, id, Some(cur), content)
-    Some(id)
+        "write pins the contract first")
+    Some(commit(f, qroot, None, Some(m), metaOf(m, "truncate"),
+      LiveSet(Seq.empty, Seq.empty, forceFull = true)))
   }
 
   /**
@@ -3370,11 +3240,8 @@ object Snapshots {
           "(fix the data first, or pass validateExisting = false to " +
           "declare it forward-only)")
     }
-    publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("add_constraint", stored, m.format, m.codec,
-        m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
-        m.constraints :+ (name -> exprSql), m.renames))
+    commit(f, qroot, None, Some(m), metaOf(m, "add_constraint")
+      .copy(constraints = m.constraints :+ (name -> exprSql)), Delta())
   }
 
   /** Drop a named constraint (mode `drop_constraint`, metadata-only).
@@ -3387,12 +3254,8 @@ object Snapshots {
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, cur)
     if (!m.constraints.exists(_._1 == name)) return None
-    Some(publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("drop_constraint",
-        m.schema.getOrElse(StructType(Seq.empty)), m.format, m.codec,
-        m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
-        m.constraints.filterNot(_._1 == name), m.renames)))
+    Some(commit(f, qroot, None, Some(m), metaOf(m, "drop_constraint")
+      .copy(constraints = m.constraints.filterNot(_._1 == name)), Delta()))
   }
 
   /** The current snapshot's recorded CHECK constraints (name → SQL). */
@@ -3448,10 +3311,8 @@ object Snapshots {
         s"partition field $c is a recorded stats column — partition " +
           "pruning would shadow its file stats")
     }
-    publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("evolve_spec", schema, m.format, m.codec,
-        m.statsCols, None, newSpec, Some(System.currentTimeMillis()),
-        m.recentTags, m.bloomCols, m.constraints, m.renames))
+    commit(f, qroot, None, Some(m),
+      metaOf(m, "evolve_spec").copy(partitionCols = newSpec), Delta())
   }
 
   /**
@@ -4411,11 +4272,8 @@ object Snapshots {
     require(!f.exists(new Path(bdir, "HEAD")),
       s"branch '$name' already exists under $root — dropBranch first")
     val m = resolve(f, qroot, forkId)
-    val meta = SnapMeta("branch_fork",
-      m.schema.getOrElse(StructType(Seq.empty)), m.format, m.codec,
-      m.statsCols, None, m.partitionCols, Some(System.currentTimeMillis()),
-      bloomCols = m.bloomCols, constraints = m.constraints,
-      renames = m.renames)
+    val meta = metaOf(m, "branch_fork").copy(
+      ts = Some(System.currentTimeMillis()), recentTags = Seq.empty)
     f.mkdirs(bdir)
     FsOps.atomicWrite(f, new Path(bdir, "s1"),
       renderManifest(meta, None, Seq.empty, Seq.empty, Some(m.files),
@@ -4499,7 +4357,7 @@ object Snapshots {
    *    state (appends, overwrites, CDC merges) flips in as one snapshot.
    *  - main ADVANCED past the fork and the branch holds only APPENDS →
    *    REBASE-MERGE, metadata-only: the branch-added files conflict with
-   *    nothing (the [[retryAppendPublish]] argument — no removes, no
+   *    nothing (the pure-append commit retry's argument — no removes, no
    *    equality deletes, immutable shared data pool), so they replay onto
    *    the new head with re-stamped seqs; no data file is read or moved.
    *    This is what keeps the audit-branch workflow usable against a
@@ -4547,27 +4405,11 @@ object Snapshots {
     val liveRels = live.files.map(_.rel).toSet
     val merged = b.files.map(e =>
       if (liveRels(e.rel)) e else e.copy(seq = id))
-    val meta = SnapMeta("branch_merge",
-      b.schema.getOrElse(StructType(Seq.empty)), b.format, b.codec,
-      b.statsCols, Some(mergeTag), b.partitionCols,
-      Some(System.currentTimeMillis()),
-      (live.recentTags :+ mergeTag).takeRight(MaxRecentTags), b.bloomCols,
-      live.constraints, live.renames)
-    val content =
-      if (live.chainDepth + 1 >= RebaseEvery)
-        renderManifest(meta, None, Seq.empty, Seq.empty, Some(merged),
-          dFull = b.deletes)
-      else {
-        val bRels = b.files.map(_.rel).toSet
-        val bDRels = b.deletes.map(_.rel).toSet
-        val liveDRels = live.deletes.map(_.rel).toSet
-        renderManifest(meta, Some(fork),
-          merged.filterNot(e => liveRels(e.rel)),
-          live.files.map(_.rel).filterNot(bRels), None,
-          b.deletes.filterNot(d => liveDRels(d.rel)),
-          live.deletes.map(_.rel).filterNot(bDRels))
-      }
-    publishManifest(f, qroot, id, Some(fork), content)
+    commit(f, qroot, None, Some(live), metaOf(b, "branch_merge").copy(
+      batchTag = Some(mergeTag),
+      recentTags = (live.recentTags :+ mergeTag).takeRight(MaxRecentTags),
+      constraints = live.constraints, renames = live.renames),
+      LiveSet(merged, b.deletes)): Unit
     recordMerge(f, qroot, nonce, id)
     dropBranch(spark, root, name): Unit
     id
@@ -4692,20 +4534,17 @@ object Snapshots {
       dropBranch(spark, root, name)
       return cur0.getOrElse(fork)
     }
-    // metadata-only replay onto the advancing head, bounded retry (the
-    // [[retryAppendPublish]] posture — pure adds conflict with nothing)
-    var lastRace: java.util.ConcurrentModificationException = null
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      attempt += 1
-      val cur = currentSnapshot(spark, root)
-      taggedMergeId(cur).foreach { id =>
+    // metadata-only replay onto the advancing head, re-checked against
+    // every head a lost race re-resolves (the pure-append commit retry's
+    // posture — pure adds conflict with nothing)
+    val replay: Option[Resolved] => (SnapMeta, Change) = h => {
+      taggedMergeId(h.map(_.id)).foreach { id =>
         dropBranch(spark, root, name); return id
       }
-      val live = resolve(f, qroot, cur.getOrElse(
+      val live = h.getOrElse(
         throw new IllegalStateException(
           s"no snapshot published under $root — branch '$name' outlived " +
-            "its dataset")))
+            "its dataset"))
       // dataset-fixed properties must still line up: a main that changed
       // format/codec/statsCols since the fork makes the branch's staged
       // layout wrong for this dataset — not retryable, surface loudly
@@ -4734,37 +4573,25 @@ object Snapshots {
       // the merged contract widens main's current schema by the branch's
       // (the branch may itself have widened since the fork)
       val contract = (live.schema, bRes.schema) match {
-        case (Some(m), Some(b)) => graft.schema.SchemaEvolution.validate(
-          m, b, live.partitionCols, graft.schema.SchemaEvolution.Widen)
-        case (m, b) => b.orElse(m).getOrElse(StructType(Seq.empty))
+        case (Some(m), Some(b)) => Some(graft.schema.SchemaEvolution.validate(
+          m, b, live.partitionCols, graft.schema.SchemaEvolution.Widen))
+        case (m, b) => b.orElse(m)
       }
-      val id = cur.get + 1
       // re-anchor in main's CURRENT seq space: every existing equality
-      // delete has seq <= cur < id, so none suppresses the rebased rows —
-      // exactly an append's semantics
-      val rebased = branchAdded.map(_.copy(seq = id))
-      val meta = SnapMeta("branch_merge", contract, live.format, live.codec,
-        live.statsCols, Some(mergeTag), live.partitionCols,
-        Some(System.currentTimeMillis()),
-        (live.recentTags :+ mergeTag).takeRight(MaxRecentTags),
-        live.bloomCols, live.constraints, live.renames)
-      val content =
-        if (live.chainDepth + 1 >= RebaseEvery)
-          renderManifest(meta, None, Seq.empty, Seq.empty,
-            Some(live.files ++ rebased), dFull = live.deletes)
-        else
-          renderManifest(meta, cur, rebased, Seq.empty, None)
-      try {
-        publishManifest(f, qroot, id, cur, content)
-        recordMerge(f, qroot, nonce, id)
-        dropBranch(spark, root, name): Unit
-        return id
-      } catch {
-        case race: java.util.ConcurrentModificationException =>
-          lastRace = race
-      }
+      // delete has seq <= head < the new id, so none suppresses the
+      // rebased rows — exactly an append's semantics
+      (metaOf(live, "branch_merge").copy(schema = contract,
+        batchTag = Some(mergeTag),
+        recentTags = (live.recentTags :+ mergeTag).takeRight(MaxRecentTags)),
+        Delta(adds = branchAdded.map(_.copy(seq = live.id + 1))))
     }
-    throw lastRace
+    val mainHead = currentSnapshot(spark, root).map(resolve(f, qroot, _))
+    val (meta, change) = replay(mainHead)
+    val id = commit(f, qroot, None, mainHead, meta, change,
+      Some((h, _) => replay(h)))
+    recordMerge(f, qroot, nonce, id)
+    dropBranch(spark, root, name): Unit
+    id
   }
 
   /** Drop a branch without merging. Its branch-only files become
@@ -4969,7 +4796,7 @@ object Snapshots {
    */
   def publishStaged(spark: SparkSession, root: String, name: String): Int = {
     val (f, qroot) = FsOps.fs(spark, root)
-    val (base, _) = readStagedFile(f, qroot, name)
+    val (base, raw) = readStagedFile(f, qroot, name)
     val cur = currentSnapshot(spark, root)
     if (cur != base)
       throw new java.util.ConcurrentModificationException(
@@ -4977,15 +4804,14 @@ object Snapshots {
           s"${base.fold("an empty dataset")(b => s"s$b")} but the table is " +
           s"now at ${cur.fold("(none)")(c => s"s$c")} — its audit is stale; " +
           "re-stage against the current state")
-    val p = new Path(stagedDir(qroot), name)
-    val in = f.open(p)
-    val text =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val content = text.drop(text.indexOf('\n') + 1)
-    val id = base.getOrElse(0) + 1
-    publishManifest(f, qroot, id, base, content)
-    FsOps.deleteIfExists(f, p)
+    // re-rendered onto its base at PUBLISH time: the staged state with a
+    // publish-instant `ts`, so time travel to an instant between staging
+    // and publishing resolves the base — the state readers saw then
+    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val staged = resolveFrom(f, qroot, raw, cache)
+    val id = commit(f, qroot, None, base.map(resolve(f, qroot, _, cache)),
+      metaOf(staged, staged.mode), LiveSet(staged.files, staged.deletes))
+    FsOps.deleteIfExists(f, new Path(stagedDir(qroot), name))
     id
   }
 
@@ -5104,14 +4930,9 @@ object Snapshots {
         val res = resolve(f, qroot, k, cache)
         // rebase-in-place preserves the ORIGINAL publish instant — the
         // rewrite changes representation, not history
-        val meta = SnapMeta(raw.mode,
-          raw.schema.getOrElse(StructType(Seq.empty)), raw.format,
-          raw.codec, raw.statsCols, raw.batchTag, raw.partitionCols, raw.ts,
-          raw.effectiveRecentTags, raw.bloomCols, raw.constraints,
-          raw.renames)
         FsOps.atomicWrite(f, new Path(snapshotsDir(qroot), s"s$k"),
-          renderManifest(meta, None, Seq.empty, Seq.empty, Some(res.files),
-            dFull = res.deletes))
+          renderManifest(metaOf(res, res.mode).copy(batchTag = res.batchTag),
+            None, Seq.empty, Seq.empty, Some(res.files), dFull = res.deletes))
         cache.remove(k): Unit
       }
     }

@@ -7,7 +7,14 @@ import org.apache.spark.sql.functions._
 /** The snapshot/time-travel layer: append and overwrite-partitions
   * manifests, time travel, manifest-only history, retention expiry, and
   * the partition-pruned read plan. */
-class SnapshotsSpec extends SparkSpec {
+class SnapshotsSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterEach {
+
+  // a test that fails before its injected interleave is consumed must not
+  // leak it into the next test's publish
+  override def afterEach(): Unit =
+    try super.afterEach()
+    finally Snapshots.prePublishInterleave = () => ()
 
   private def orders = graft.Tables(spark, sf0001, "orders")
     .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
@@ -686,6 +693,42 @@ class SnapshotsSpec extends SparkSpec {
     }
     assert(Snapshots.read(spark, root2).count() == 1,
       "the loser's batch must not land past the widening")
+  }
+
+  test("the interleave seam covers every publish: rollback, addColumns and truncate lose to a winning append") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{StringType, StructField}
+    def fresh(tag: String): String = {
+      val root = java.nio.file.Files.createTempDirectory(tag).toString
+      Snapshots.write(Seq((1L, "a", 10.0)).toDF("k", "p", "v").coalesce(1),
+        root, Seq("p"))
+      Snapshots.write(Seq((2L, "b", 20.0)).toDF("k", "p", "v").coalesce(1),
+        root, Seq("p"), SnapAppend)
+      // the winner appends between the loser's base resolution and its
+      // pointer flip
+      Snapshots.prePublishInterleave = () =>
+        assert(Snapshots.write(Seq((3L, "a", 30.0)).toDF("k", "p", "v")
+          .coalesce(1), root, Seq("p"), SnapAppend) == 3)
+      root
+    }
+    val lanes = Seq[(String, String => Unit)](
+      "rollback" -> (root => Snapshots.rollback(spark, root, toId = 1): Unit),
+      "addColumns" -> (root => Snapshots.addColumns(spark, root,
+        Seq(StructField("note", StringType))): Unit),
+      "truncate" -> (root => Snapshots.truncate(spark, root): Unit))
+    lanes.foreach { case (lane, publish) =>
+      val root = fresh(s"snap_seam_$lane")
+      intercept[java.util.ConcurrentModificationException](publish(root))
+      assert(Snapshots.currentSnapshot(spark, root).contains(3),
+        s"$lane: the winner's snapshot must be current")
+      assert(Snapshots.read(spark, root).select("k").collect()
+        .map(_.getLong(0)).toSet == Set(1L, 2L, 3L),
+        s"$lane: the winner's state must read intact")
+      assert(Snapshots.history(spark, root).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq ==
+        Seq((1, "append"), (2, "append"), (3, "append")),
+        s"$lane: history must hold no snapshot from the loser")
+    }
   }
 
   test("renameColumn: metadata-only, old files read through the ledger, history time-travels under the old name") {
@@ -1937,6 +1980,35 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.changes(spark, root, 4, 5, Seq("id")).isEmpty)
   }
 
+  test("rollback to a legacy (v1) snapshot keeps its inferred read contract") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_rbv1").toString
+    Snapshots.write(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "p", "v")
+      .coalesce(1), root, Seq("p"))
+    // rewrite s1 as a v1 manifest: positional mode line, no schema, bare
+    // file paths
+    val p1 = java.nio.file.Paths.get(s"$root/snapshots/s1")
+    val rels = new String(java.nio.file.Files.readAllBytes(p1))
+      .linesIterator.filter(_.startsWith("file="))
+      .map(_.stripPrefix("file=").takeWhile(_ != '\t')).toSeq
+    java.nio.file.Files.write(p1,
+      ("mode=append" +: rels).mkString("", "\n", "\n").getBytes)
+    // the raw rewrite invalidates the local FS's checksum sidecar
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$root/snapshots/.s1.crc"))
+    Snapshots.write(Seq((3L, "a", 3.0)).toDF("id", "p", "v").coalesce(1),
+      root, Seq("p"), SnapAppend)
+    assert(Snapshots.rollback(spark, root, toId = 1) == 3)
+    val travelled = Snapshots.read(spark, root, asOf = Some(1))
+    val current = Snapshots.read(spark, root)
+    assert(current.columns.toSeq == travelled.columns.toSeq,
+      s"${current.columns.mkString(",")} vs " +
+        travelled.columns.mkString(","))
+    assert(current.collect().map(_.toString).sorted.toSeq ==
+      travelled.collect().map(_.toString).sorted.toSeq)
+    assert(current.count() == 2)
+  }
+
   test("rollback restores an older state metadata-only; rolled-over states stay travelable") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snap_rb").toString
@@ -2072,6 +2144,23 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.stagedWrites(spark, root).isEmpty)
     assert(keys(Snapshots.read(spark, root)) == keys(orders) ++ keys(patch))
     assert(keys(Snapshots.read(spark, root, asOf = Some(1))) == keys(orders))
+  }
+
+  test("WAP: publishStaged records the publish instant — time travel between staging and publishing resolves the base") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_wapts").toString
+    Snapshots.write(Seq((1L, "a")).toDF("k", "p"), root, Seq("p"))
+    assert(Snapshots.stageWrite(Seq((2L, "a")).toDF("k", "p"), root,
+      Seq("p"), "late") == 2)
+    Thread.sleep(5)
+    val t1 = System.currentTimeMillis()
+    Thread.sleep(5)
+    assert(Snapshots.publishStaged(spark, root, "late") == 2)
+    // at t1 no reader could see the staged rows: the table was s1
+    assert(Snapshots.snapshotAt(spark, root, t1).contains(1))
+    assert(Snapshots.readAt(spark, root, t1).count() == 1)
+    assert(Snapshots.snapshotAt(spark, root, System.currentTimeMillis())
+      .contains(2))
   }
 
   test("WAP: publish after the table advanced fails stale; abandon reclaims via vacuum") {
