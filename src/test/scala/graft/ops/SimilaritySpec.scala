@@ -850,4 +850,32 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfPqOpqTopK(q, e, k = 5, rotation = graft.ops.Pca.fit(e, 8))
     }
   }
+
+  test("hardNegatives with a distinct label per row returns exactly ivfTopK's rows") {
+    // every label differs, so the label filter drops nothing beyond the
+    // self-match ivfTopK already drops: the two lanes share the probe and
+    // the scorer, and must agree row for row
+    val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
+      .withColumn("label", col("vec_id"))
+    val q = e.filter(col("vec_id") < 10)
+    val ivf = Similarity.ivfTopK(q, e, k = 5, nCells = 8, nProbe = 2)
+      .collect().map(_.toString).sorted
+    val neg = Similarity.hardNegatives(q, e, k = 5, nCells = 8, nProbe = 2)
+      .collect().map(_.toString).sorted
+    assert(ivf.nonEmpty)
+    assert(neg.sameElements(ivf))
+  }
+
+  test("semanticDedup cells equal kmeansAssign clusters with zero refinement") {
+    val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
+    val kept = Similarity.semanticDedup(e, threshold = 0.4, nCells = 8)
+      .collect().map(r => r.getLong(0) -> r.getAs[Int]("cell")).toMap
+    val clusters = Similarity.kmeansAssign(e, k = 8, iters = 0)
+      .collect().map(r => r.getLong(0) -> r.getAs[Int]("cluster")).toMap
+    assert(kept.nonEmpty)
+    kept.foreach { case (id, cell) =>
+      assert(clusters(id) == cell, s"id $id: dedup cell $cell, k-means ${clusters(id)}")
+    }
+  }
+
 }
