@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -20,31 +19,7 @@ object Bench {
     try { java.nio.file.Files.deleteIfExists(fullPath) } catch {
       case e: Throwable => System.err.println(s"bench: could not delete stale $fullPath: $e")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // dynamic-partitioned writes: keep up to 16 output files open per task
-      // instead of planning a per-task sort on the partition expression —
-      // the sort is the write-side straggler amplifier on skewed partition
-      // values (SURVEY.md §7.4.5); 16 writers × default parquet buffers
-      // stays well inside executor memory
-      .config("spark.sql.maxConcurrentOutputFileWriters", "16")
-      // v2 file-output commit (task output promoted directly, one rename
-      // instead of two) and no _SUCCESS markers. The snapshot lanes stage
-      // into their own .stage_* trees behind an atomic manifest flip; the
-      // plain PartitionedSink lane writes straight to its destination, so
-      // under v2 a mid-job failure CAN leave committed task outputs
-      // visible there — accepted because harness runs abort on failure
-      // and use fresh output dirs. Nothing in the engine reads _SUCCESS
-      // (hidden-file filters skip it).
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.ui.enabled", "false")
-      // the library's standard deployment extension (SQL functions + the
-      // snapshot-table row-level DML rule) — Verify runs with it, so the
-      // bench must time the same session shape
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Session.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed session warmup: first-query cost in a fresh JVM is ~5-6 s of
     // one-time work (datasource init, codegen compiler warmup, JIT) that has

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: concurrent writers instead of a write-side sort
-      .config("spark.sql.maxConcurrentOutputFileWriters", "16")
-      // see Bench.scala: v2 commit + no _SUCCESS markers — the session
-      // shape must match the bench's
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.ui.enabled", "false")
-      // the library's standard deployment extension: SQL functions + the
-      // snapshot-table row-level DML rule (DELETE/UPDATE/MERGE fixtures)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Session.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for focused dev re-verification;

@@ -42,6 +42,41 @@ object Similarity {
   /** Cast a float-array embedding column to double (element-exact). */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
+  /** Query side of every scorer: (q_id, q_vec widened to double), with
+    * `extra` columns riding along. */
+  private def queryVecs(
+      df: DataFrame, idCol: String, vecCol: String, extra: Column*): DataFrame =
+    df.select(col(idCol).as("q_id") +: toDouble(col(vecCol)).as("q_vec") +: extra: _*)
+
+  /** Corpus side of every scorer: (n_id, n_vec widened to double). */
+  private def corpusVecs(
+      df: DataFrame, idCol: String, vecCol: String, extra: Column*): DataFrame =
+    df.select(col(idCol).as("n_id") +: toDouble(col(vecCol)).as("n_vec") +: extra: _*)
+
+  /** Both sides of the exact scorer, norms precomputed per row so a pair
+    * costs one dot. */
+  private def exactSides(
+      queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
+      qExtra: Seq[Column] = Nil, nExtra: Seq[Column] = Nil): (DataFrame, DataFrame) = (
+    queryVecs(queries, idCol, vecCol, qExtra: _*).withColumn("q_norm", norm(col("q_vec"))),
+    corpusVecs(corpus, idCol, vecCol, nExtra: _*).withColumn("n_norm", norm(col("n_vec"))))
+
+  /** The exact float cosine of one (query, corpus) pair over
+    * [[exactSides]] — the scorer of the exact baselines, LSH, the float
+    * IVF lanes and the rerank stage. */
+  private def exactScore: Column =
+    dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm"))
+
+  /** Every (query, corpus) pair except self-matches, scored exactly — the
+    * candidate set of both exact baselines. */
+  private def exactPairs(
+      queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val (q, c) = exactSides(queries, corpus, idCol, vecCol)
+    q.crossJoin(c)
+      .filter(col("q_id") =!= col("n_id"))
+      .select(col("q_id"), col("n_id"), exactScore.as("sim"))
+  }
+
   /**
    * Exact cosine top-k: for each query vector, the k nearest corpus vectors
    * (self-match excluded). Norms are precomputed on both sides so the join
@@ -53,18 +88,10 @@ object Similarity {
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("n_norm", norm(col("n_vec")))
-    val sims = q.crossJoin(c)
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-          .as("sim"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(round(col("sim"), 6).desc, col("n_id").asc)
-    sims.withColumn("rnk", row_number().over(w))
+    exactPairs(queries, corpus, idCol, vecCol)
+      .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), round(col("sim"), 6).as("sim_r"), col("rnk"))
   }
@@ -80,23 +107,8 @@ object Similarity {
    */
   def bruteForceTopKHeap(
       queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("n_norm", norm(col("n_vec")))
-    val sims = q.crossJoin(c)
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")), 6)
-          .as("sim_r"))
-    sims.groupBy("q_id")
-      .agg(graft.functions.topk.top_k_by_score(col("sim_r"), col("n_id"), k)
-        .as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "entry")))
-      .select(col("q_id"), col("entry.id").as("n_id"),
-        col("entry.score").as("sim_r"), (col("pos") + 1).cast("int").as("rnk"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(exactPairs(queries, corpus, idCol, vecCol), k)
 
   /** Deterministic pseudo-random hyperplane coefficients (seeded
     * `java.util.Random` Gaussians — the LCG is specified, so coefficients
@@ -134,21 +146,21 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       numPlanes: Int = 12, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("n_norm", norm(col("n_vec")))
-      .withColumn("bucket", lshBucket(col("n_vec"), dim, numPlanes, seed))
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-      .withColumn("bucket",
-        explode(probeBuckets(lshBucket(col("q_vec"), dim, numPlanes, seed), numPlanes)))
+    val (q0, c0) = exactSides(queries, corpus, idCol, vecCol)
+    val c = c0.withColumn("bucket", lshBucket(col("n_vec"), dim, numPlanes, seed))
+    val q = q0.withColumn("bucket",
+      explode(probeBuckets(lshBucket(col("q_vec"), dim, numPlanes, seed), numPlanes)))
     val sims = q.join(c, Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-          .as("sim"))
-      .groupBy("q_id", "n_id").agg(max(col("sim")).as("sim")) // dedup multi-probe hits
-    rankTopK(sims, k)
+      .select(col("q_id"), col("n_id"), exactScore.as("sim"))
+    rankTopK(maxPerPair(sims), k)
   }
+
+  /** One row per (q_id, n_id) with the best score: LSH multi-probe can
+    * reach a pair through several buckets, and in the float IVF lanes a
+    * query id repeated in the batch reaches its pairs once per copy. */
+  private def maxPerPair(sims: DataFrame): DataFrame =
+    sims.groupBy("q_id", "n_id").agg(max(col("sim")).as("sim"))
 
   /** Final ranking stage shared by the ANN variants: bounded-heap top-k
     * per query key (O(k) state, map-side combine, no per-key sort — see
@@ -163,21 +175,19 @@ object Similarity {
       .select(col("q_id"), col("entry.id").as("n_id"),
         col("entry.score").as("sim_r"), (col("pos") + 1).cast("int").as("rnk"))
 
-  /**
-   * IVF (inverted-file) approximate top-k: partition the corpus into
-   * `nCells` Voronoi cells around deterministic centroids (the md5-order
-   * sample of the corpus — reproducible, no trained model to store),
-   * assign each vector to its nearest centroid, and search only the
-   * `nProbe` cells nearest to each query. The classic ANN trade:
-   * cost ≈ (nProbe/nCells) of the corpus per query. Centroids are tiny
-   * (nCells × dim doubles) and ride along as a broadcast literal; cell
-   * assignment is one native-dot argmin per row.
-   *
-   * @param refineIters optional k-means (Lloyd) iterations over the
-   *   md5-ordered `sampleSize`-vector sample to rebalance the centroid
-   *   seed — driver-side, bounded, and order-deterministic, so the refined
-   *   coefficients stay oracle-reproducible (see `sim_topk_ivf_refined`)
-   */
+  // ------------------------------------------------- IVF retrieval pipeline
+  //
+  // Every IVF lane is one plan in three stages:
+  //  - coarse quantizer: md5-sample centroids ([[ivfCentroids]]), one
+  //    assignment expression ([[cellOf]]) and one probe expression
+  //    ([[probeQueries]]);
+  //  - code: float cosine, int8, PQ/ADC or residual PQ — each a query-side
+  //    projection plus a pair score ([[Code]]);
+  //  - ranking: [[rankTopK]], then optionally [[exactRerank]].
+  // The in-memory and indexed lanes differ only in where the cell rows
+  // come from: the corpus projected through the code ([[ivfSims]]), or the
+  // probe-pruned scan of a persisted index ([[indexedTopK]]).
+
   /** Sequential dot product on driver-side arrays — same left-to-right
     * accumulation as the native expression (bit-parity matters: refined
     * centroids must be reproducible by the SQL oracle). */
@@ -201,6 +211,18 @@ object Similarity {
     best
   }
 
+  /** The first `n` corpus vectors in md5(id) order — the deterministic,
+    * bounded sample behind the centroids and both PQ codebooks (one
+    * orderBy/limit collect, reproducible by the SQL oracle). */
+  private def md5Sample(
+      corpus: DataFrame, n: Int, idCol: String, vecCol: String): Array[Array[Double]] =
+    corpus
+      .select(col(idCol).cast("string").as("sid"), toDouble(col(vecCol)).as("v"))
+      .withColumn("__o", md5(col("sid").cast("binary")))
+      .orderBy(col("__o")).limit(n)
+      .select("v").collect()
+      .map(_.getSeq[Double](0).toArray)
+
   /** Deterministic IVF centroids: first `nCells` corpus vectors in
     * md5(id) order (reproducible, no trained model to store). With
     * refineIters > 0, Lloyd iterations run DRIVER-SIDE over the first
@@ -210,15 +232,10 @@ object Similarity {
     * refined coefficient bit-reproducible (ordinary distributed avg() is
     * not: partial-sum order is nondeterministic in IEEE doubles). */
   private def ivfCentroids(
-      corpus: DataFrame, nCells: Int, refineIters: Int, sampleSize: Int,
-      idCol: String, vecCol: String): Array[(Int, Array[Double])] = {
+      corpus: DataFrame, nCells: Int, idCol: String, vecCol: String,
+      refineIters: Int = 0, sampleSize: Int = 0): Array[(Int, Array[Double])] = {
     val nSample = if (refineIters > 0) math.max(nCells, sampleSize) else nCells
-    val sample: Array[Array[Double]] = corpus
-      .select(col(idCol).cast("string").as("sid"), toDouble(col(vecCol)).as("v"))
-      .withColumn("__o", md5(col("sid").cast("binary")))
-      .orderBy(col("__o")).limit(nSample)
-      .select("v").collect()
-      .map(_.getSeq[Double](0).toArray)
+    val sample = md5Sample(corpus, nSample, idCol, vecCol)
     var cents: Array[Array[Double]] = sample.take(nCells)
     for (_ <- 0 until refineIters) {
       val dims = cents(0).length
@@ -250,28 +267,138 @@ object Similarity {
     array_sort(array(scored.toIndexedSeq: _*))
   }
 
+  /** The nearest (d, cell) struct of a vector column. */
+  private def nearest(vec: Column, centroids: Array[(Int, Array[Double])]): Column =
+    element_at(cellRankCol(vec, centroids), 1)
+
+  /** Cell assignment of a vector column: the one assignment expression of
+    * every IVF lane, the index writer and [[semanticDedup]]. */
+  private def cellOf(vec: Column, centroids: Array[(Int, Array[Double])]): Column =
+    nearest(vec, centroids)("cell")
+
+  /** A vector code of the IVF pipeline. `cellCols` derive the cell-row
+    * columns from the widened corpus vector `n_vec` and its `cell`, in
+    * order (a later column may read an earlier one); `queryCols` derive the
+    * query columns from `q_vec`, before the probe explode; `score` scores
+    * one (query row, cell row) pair. The indexed lanes read `cellCols` by
+    * name from the stored cell rows. */
+  private final case class Code(
+      cellCols: Seq[(String, Column)], queryCols: Seq[(String, Column)], score: Column)
+
+  private def withCols(df: DataFrame, cols: Seq[(String, Column)]): DataFrame =
+    cols.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+
+  /** Float code: the exact cosine over [[exactSides]], whose norms the
+    * sides already carry. */
+  private def floatCode: Code = Code(Nil, Nil, exactScore)
+
+  /** Max-abs int8 columns of a double vector column: `scale = max|x_i|`
+    * and the code PACKED to one signed byte per component. */
+  private def int8Cols(vec: Column, scale: String, code: String): Seq[(String, Column)] = Seq(
+    scale -> int8Scale(vec),
+    code -> graft.functions.vectors.int8_pack(int8Codes(vec, col(scale))))
+
+  private def int8Scale(vec: Column): Column = array_max(transform(vec, v => abs(v)))
+
+  /** The int8 code values, `q_i = ⌊x_i·127/scale + 0.5⌋` (all zeros for
+    * the zero vector) — the one definition behind [[quantizeInt8]], the
+    * int8 IVF lanes and the stored index codes. */
+  private def int8Codes(vec: Column, scale: Column): Column =
+    when(scale === lit(0.0), transform(vec, _ => lit(0L)))
+      .otherwise(transform(vec, v => floor(v * lit(127.0) / scale + lit(0.5)).cast("long")))
+
+  /** Int8 code: integer byte dot (exact), dequantized by the fixed-shape
+    * `qdot·scale_q·scale_c/127²` the oracle replicates. Cell rows carry
+    * the stored index names `scale` and `code`. */
+  private def int8Code: Code = Code(
+    int8Cols(col("n_vec"), "scale", "code"),
+    int8Cols(col("q_vec"), "q_scale", "q_q"),
+    (graft.functions.vectors.int8_dot(col("q_q"), col("code")).cast("double")
+      * col("q_scale")) * col("scale") / lit(16129.0))
+
+  /** Query rows of the probe join: the code's query columns, then one row
+    * per probed cell (the `nProbe` nearest). */
+  private def probeQueries(
+      q: DataFrame, centroids: Array[(Int, Array[Double])], nProbe: Int,
+      code: Code): DataFrame =
+    withCols(q, code.queryCols).withColumn("cell", explode(transform(
+      slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
+
+  /** Candidate pairs: probed query rows × cell rows on the cell id,
+    * self-matches (and pairs failing `keep`) dropped, scored by the code.
+    * Each pair arises at most once per query row: a corpus row lives in one
+    * cell and the probed cells are distinct. */
+  private def scorePairs(
+      probed: DataFrame, cells: DataFrame, code: Code,
+      keep: Option[Column] = None): DataFrame =
+    probed.join(cells, Seq("cell"))
+      .filter(keep.foldLeft(col("q_id") =!= col("n_id"))(_ && _))
+      .select(col("q_id"), col("n_id"), code.score.as("sim"))
+
+  /** In-memory cell rows: the corpus side assigned to its cell, then
+    * projected through `cellCols`. */
+  private def corpusCells(
+      n: DataFrame, centroids: Array[(Int, Array[Double])],
+      cellCols: Seq[(String, Column)]): DataFrame =
+    withCols(n.withColumn("cell", cellOf(col("n_vec"), centroids)), cellCols)
+
+  /** Scored candidate pairs of an in-memory lane: (q_id, n_id, sim). */
+  private def ivfSims(
+      q: DataFrame, n: DataFrame, centroids: Array[(Int, Array[Double])],
+      nProbe: Int, code: Code, keep: Option[Column] = None): DataFrame =
+    scorePairs(probeQueries(q, centroids, nProbe, code),
+      corpusCells(n, centroids, code.cellCols), code, keep)
+
+  /** Shared rerank stage: exact float cosines over a (q_id, n_id)
+    * candidate list only — the list is small (|Q|·kCand rows), so the
+    * join back to the corpus (or to the pruned index scan) broadcasts at
+    * scale. */
+  private def exactRerank(
+      cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: Int,
+      idCol: String, vecCol: String): DataFrame = {
+    val (q, c) = exactSides(queries, corpus, idCol, vecCol)
+    val sims = cand.join(q, Seq("q_id")).join(c, Seq("n_id"))
+      .select(col("q_id"), col("n_id"), exactScore.as("sim"))
+    rankTopK(sims, k)
+  }
+
+  /** The float IVF lanes: exact cosines inside the probed cells, pairs
+    * failing the optional label mismatch dropped. */
+  private def floatIvfTopK(
+      queries: DataFrame, corpus: DataFrame, k: Int,
+      centroids: Array[(Int, Array[Double])], nProbe: Int,
+      idCol: String, vecCol: String, labelCol: Option[String]): DataFrame = {
+    val (q, n) = exactSides(queries, corpus, idCol, vecCol,
+      labelCol.map(l => col(l).as("q_label")).toSeq,
+      labelCol.map(l => col(l).as("n_label")).toSeq)
+    val keep = labelCol.map(_ => col("q_label") =!= col("n_label"))
+    rankTopK(maxPerPair(ivfSims(q, n, centroids, nProbe, floatCode, keep)), k)
+  }
+
+  /**
+   * IVF (inverted-file) approximate top-k: partition the corpus into
+   * `nCells` Voronoi cells around deterministic centroids (the md5-order
+   * sample of the corpus — reproducible, no trained model to store),
+   * assign each vector to its nearest centroid, and search only the
+   * `nProbe` cells nearest to each query. The classic ANN trade:
+   * cost ≈ (nProbe/nCells) of the corpus per query. Centroids are tiny
+   * (nCells × dim doubles) and ride along as a broadcast literal; cell
+   * assignment is one native-dot argmin per row.
+   *
+   * @param refineIters optional k-means (Lloyd) iterations over the
+   *   md5-ordered `sampleSize`-vector sample to rebalance the centroid
+   *   seed — computed on the collected sample, bounded, and
+   *   order-deterministic, so the refined coefficients stay
+   *   oracle-reproducible (see `sim_topk_ivf_refined`)
+   */
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       refineIters: Int = 0, sampleSize: Int = 1024,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = ivfCentroids(corpus, nCells, refineIters, sampleSize, idCol, vecCol)
-    def cellRank(vec: Column): Column = cellRankCol(vec, centroids)
-
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("n_norm", norm(col("n_vec")))
-      .withColumn("cell", element_at(cellRank(col("n_vec")), 1)("cell"))
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-      .withColumn("cell", explode(transform(
-        slice(cellRank(col("q_vec")), 1, nProbe), s => s("cell"))))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm"))).as("sim"))
-      .groupBy("q_id", "n_id").agg(max(col("sim")).as("sim"))
-    rankTopK(sims, k)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    floatIvfTopK(queries, corpus, k,
+      ivfCentroids(corpus, nCells, idCol, vecCol, refineIters, sampleSize),
+      nProbe, idCol, vecCol, labelCol = None)
 
   /**
    * Hard-negative mining — the contrastive-training data-prep step
@@ -294,26 +421,9 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      labelCol: String = "label"): DataFrame = {
-    val centroids = ivfCentroids(corpus, nCells, 0, 1024, idCol, vecCol)
-    def cellRank(vec: Column): Column = cellRankCol(vec, centroids)
-    val c = corpus.select(col(idCol).as("n_id"),
-        toDouble(col(vecCol)).as("n_vec"), col(labelCol).as("n_label"))
-      .withColumn("n_norm", norm(col("n_vec")))
-      .withColumn("cell", element_at(cellRank(col("n_vec")), 1)("cell"))
-    val q = queries.select(col(idCol).as("q_id"),
-        toDouble(col(vecCol)).as("q_vec"), col(labelCol).as("q_label"))
-      .withColumn("q_norm", norm(col("q_vec")))
-      .withColumn("cell", explode(transform(
-        slice(cellRank(col("q_vec")), 1, nProbe), s => s("cell"))))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id") && col("q_label") =!= col("n_label"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-          .as("sim"))
-      .groupBy("q_id", "n_id").agg(max(col("sim")).as("sim"))
-    rankTopK(sims, k)
-  }
+      labelCol: String = "label"): DataFrame =
+    floatIvfTopK(queries, corpus, k, ivfCentroids(corpus, nCells, idCol, vecCol),
+      nProbe, idCol, vecCol, Some(labelCol))
 
   /**
    * SemDeDup-style semantic deduplication: partition the corpus into
@@ -336,26 +446,13 @@ object Similarity {
   def semanticDedup(
       df: DataFrame, threshold: Double, nCells: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // deterministic centroid seed — identical to ivfTopK's (refineIters=0)
-    val cents: Array[(Int, Array[Double])] = df
-      .select(col(idCol).cast("string").as("sid"), toDouble(col(vecCol)).as("v"))
-      .withColumn("__o", md5(col("sid").cast("binary")))
-      .orderBy(col("__o")).limit(nCells)
-      .select("v").collect()
-      .map(_.getSeq[Double](0).toArray).zipWithIndex.map(_.swap)
-    def cellOf(vec: Column): Column = {
-      val scored = cents.map { case (i, c) =>
-        val dist = -(dot(vec, typedlit(c.toSeq)) - lit(c.map(x => x * x).sum / 2))
-        struct(dist.as("d"), lit(i).as("cell"))
-      }
-      element_at(array_sort(array(scored.toIndexedSeq: _*)), 1)("cell")
-    }
+    val cents = ivfCentroids(df, nCells, idCol, vecCol)
     // materialized once: the assignment (nCells dots per row over the
     // parquet scan) feeds three plan branches (both pair sides + the
     // anti-join base); released at exit via the localCheckpoint pattern
     val v = df.select(col(idCol).as("vid"), toDouble(col(vecCol)).as("vec"))
       .withColumn("vnorm", norm(col("vec")))
-      .withColumn("cell", cellOf(col("vec")))
+      .withColumn("cell", cellOf(col("vec"), cents))
       .cache()
     val a = v.select(col("cell"), col("vid").as("a_id"),
       col("vec").as("a_vec"), col("vnorm").as("a_norm"))
@@ -487,11 +584,11 @@ object Similarity {
   def kmeansAssign(
       df: DataFrame, k: Int = 16, iters: Int = 2, sampleSize: Int = 256,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cents = ivfCentroids(df, k, iters, sampleSize, idCol, vecCol)
+    val cents = ivfCentroids(df, k, idCol, vecCol, iters, sampleSize)
     require(cents.nonEmpty, "kmeansAssign: empty corpus")
     val v = col("__v")
     df.withColumn("__v", toDouble(col(vecCol)))
-      .withColumn("__best", element_at(cellRankCol(v, cents), 1))
+      .withColumn("__best", nearest(v, cents))
       .select(col(idCol),
         col("__best")("cell").as("cluster"),
         // ‖v−c‖² = ‖v‖² + 2·d where d is the ranking key −(v·c − ‖c‖²/2)
@@ -584,16 +681,6 @@ object Similarity {
   }
 
   /**
-   * Symmetric max-abs int8 quantization of an embedding column — the
-   * standard 4× memory/bandwidth cut for ANN indexes at scale (float32
-   * vectors of a 100 TB corpus shrink to a quarter; recall loss at 127
-   * levels is sub-percent for cosine). Per vector: `scale = max|x_i|`,
-   * `q_i = ⌊x_i·127/scale + 0.5⌋` (zero vector → all-zero codes).
-   * Row-local array expressions, zero shuffle; the double math is one
-   * fixed-shape expression over exactly-widened floats, so any IEEE
-   * engine reproduces the identical codes (full DuckDB oracle).
-   */
-  /**
    * Retrieval over the int8 codes end-to-end: integer dot products —
    * exact in ANY engine, so the whole approximate-scoring path is
    * oracle-checkable, unusual for ANN — dequantized by
@@ -641,52 +728,31 @@ object Similarity {
    * Cell geometry stays in float space (assignment = nCells native dots
    * on the widened vector, same deterministic md5-order centroids as
    * [[ivfTopK]]); scoring uses the max-abs int8 codes of
-   * [[quantizeInt8]] held as integer-valued DOUBLE arrays so the
-   * allocation-free DotProduct kernel applies. Integer dots are exact in
-   * any IEEE engine and the dequantize `qdot·scale_q·scale_c/127²` is
-   * one fixed-shape double expression, so the whole approximate path is
-   * hash-verifiable by the DuckDB oracle (rare for ANN). Each (query,
-   * neighbor) pair arises at most once — the corpus row lives in exactly
-   * one cell and probe cells are distinct — so ranking needs no
-   * pair-dedup shuffle first.
+   * [[quantizeInt8]], PACKED to one signed byte per component so the
+   * join/shuffle carries dim bytes per vector, not dim doubles. Integer
+   * dots are exact in any IEEE engine and the dequantize
+   * `qdot·scale_q·scale_c/127²` is one fixed-shape double expression, so
+   * the whole approximate path is hash-verifiable by the DuckDB oracle
+   * (rare for ANN). Each (query, neighbor) pair arises at most once, so
+   * ranking needs no pair-dedup shuffle first.
    */
   def ivfQuantizedTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = ivfCentroids(corpus, nCells, refineIters = 0,
-      sampleSize = nCells, idCol = idCol, vecCol = vecCol)
-    // max-abs int8 codes, computed inline on the widened vector so one
-    // projection yields both the cell assignment and the codes (exactly
-    // quantizeInt8's arithmetic: scale = max|x|, q = ⌊x·127/scale + 0.5⌋,
-    // zero vector → all-zero codes) — then PACKED to binary, one signed
-    // byte per component: the join/shuffle carries dim bytes per vector,
-    // not dim doubles, which is where the 4× bandwidth claim becomes real
-    def codes(vec: Column, scale: Column): Column =
-      graft.functions.vectors.int8_pack(
-        when(scale === lit(0.0), transform(vec, _ => lit(0L)))
-          .otherwise(transform(vec, v =>
-            floor(v * lit(127.0) / scale + lit(0.5)).cast("long"))))
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(ivfSims(queryVecs(queries, idCol, vecCol), corpusVecs(corpus, idCol, vecCol),
+      ivfCentroids(corpus, nCells, idCol, vecCol), nProbe, int8Code), k)
 
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("cell", element_at(cellRankCol(col("n_vec"), centroids), 1)("cell"))
-      .withColumn("n_scale", array_max(transform(col("n_vec"), v => abs(v))))
-      .select(col("cell"), col("n_id"), col("n_scale"),
-        codes(col("n_vec"), col("n_scale")).as("n_q"))
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("cell", explode(transform(
-        slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
-      .withColumn("q_scale", array_max(transform(col("q_vec"), v => abs(v))))
-      .select(col("cell"), col("q_id"), col("q_scale"),
-        codes(col("q_vec"), col("q_scale")).as("q_q"))
-    // integer byte dot, exact; dequantized by the same fixed-shape double
-    // expression the oracle replicates
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        ((graft.functions.vectors.int8_dot(col("q_q"), col("n_q")).cast("double")
-          * col("q_scale")) * col("n_scale") / lit(16129.0)).as("sim"))
-    rankTopK(sims, k)
+  /** Two-stage retrieval: `candidates(kc)` generates kc (≤ 0 resolves to
+    * 4·k) candidates per query, then [[exactRerank]] rescores only those
+    * against `corpus` and keeps k. */
+  private def reranked(
+      queries: DataFrame, corpus: DataFrame, k: Int, kCand: Int,
+      idCol: String, vecCol: String)(candidates: Int => DataFrame): DataFrame = {
+    val kc = if (kCand <= 0) 4 * k else kCand
+    require(kc >= k, s"kCand $kc must be >= k $k")
+    exactRerank(candidates(kc).select(col("q_id"), col("n_id")),
+      queries, corpus, k, idCol, vecCol)
   }
 
   /**
@@ -700,35 +766,15 @@ object Similarity {
    * every candidate in the probed cells. Every stage is deterministic
    * (integer candidate dots, rounded rerank cosines, id tiebreaks), so
    * the composition keeps a full-algorithm DuckDB oracle.
+   *
+   * @param kCand candidate-list size; ≤ 0 (the default) resolves to 4·k.
    */
-  /** @param kCand candidate-list size; ≤ 0 (the default) resolves to 4·k. */
   def ivfQuantizedTopKRerank(
       queries: DataFrame, corpus: DataFrame, k: Int,
       kCand: Int = -1, nCells: Int = 16, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val kc = if (kCand <= 0) 4 * k else kCand
-    require(kc >= k, s"kCand $kc must be >= k $k")
-    val cand = ivfQuantizedTopK(queries, corpus, kc, nCells, nProbe,
-      idCol, vecCol).select(col("q_id"), col("n_id"))
-    exactRerank(cand, queries, corpus, k, idCol, vecCol)
-  }
-
-  /** Shared rerank stage: exact float cosines over a (q_id, n_id)
-    * candidate list only — the list is driver-bounded (|Q|·kCand), so the
-    * join back to the corpus broadcasts at scale. */
-  private def exactRerank(
-      cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      .withColumn("q_norm", norm(col("q_vec")))
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("n_norm", norm(col("n_vec")))
-    val sims = cand.join(q, Seq("q_id")).join(c, Seq("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-          .as("sim"))
-    rankTopK(sims, k)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    reranked(queries, corpus, k, kCand, idCol, vecCol)(kc =>
+      ivfQuantizedTopK(queries, corpus, kc, nCells, nProbe, idCol, vecCol))
 
   /** [[ivfPqTopK]] plus the exact-rerank stage — the standard IVF-PQ
     * deployment: 4-bit ADC GENERATES `kCand` candidates per query (the
@@ -739,46 +785,26 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, k: Int,
       kCand: Int = -1, nCells: Int = 16, nProbe: Int = 4,
       m: Int = 8, kSub: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val kc = if (kCand <= 0) 4 * k else kCand
-    require(kc >= k, s"kCand $kc must be >= k $k")
-    val cand = ivfPqTopK(queries, corpus, kc, nCells, nProbe, m, kSub,
-      idCol, vecCol).select(col("q_id"), col("n_id"))
-    exactRerank(cand, queries, corpus, k, idCol, vecCol)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    reranked(queries, corpus, k, kCand, idCol, vecCol)(kc =>
+      ivfPqTopK(queries, corpus, kc, nCells, nProbe, m, kSub, idCol, vecCol))
+
+  /** PQ geometry bounds: kSub codes fit a nibble, m nibbles fit a long —
+    * out-of-range values would silently pack overlapping nibbles. */
+  private def requirePq(m: Int, kSub: Int, mName: String, kSubName: String): Unit = {
+    require(kSub >= 2 && kSub <= 16, s"$kSubName must be in [2, 16] (4-bit packed codes)")
+    require(m >= 1 && m <= 15, s"$mName must be in [1, 15] (m nibbles in one long)")
   }
 
-  /**
-   * IVF-PQ retrieval with asymmetric-distance scoring (ADC) — the memory
-   * rung BELOW int8 SQ ([[ivfQuantizedTopK]]): each corpus vector is
-   * stored inside its probe cell as `m` 4-bit codebook indices packed
-   * into one long (dim=64 → 4 bytes per vector vs 64 int8 bytes vs 512
-   * float64 bytes), and queries score candidates through per-subspace
-   * inner-product LOOKUP TABLES — `m` table probes per candidate, never
-   * touching original vectors inside the cells. This is the classic
-   * IVF-PQ/ADC composition (Jégou et al., "Product Quantization for
-   * Nearest Neighbor Search", direct non-residual variant).
-   *
-   * Determinism end-to-end, so the WHOLE approximate path keeps a
-   * full-algorithm DuckDB oracle (the [[ivfQuantizedTopK]] precedent):
-   * the per-subspace codebooks are the md5-ordered corpus sample (the
-   * same bounded-sample trick as the cell centroids — no trained model),
-   * sub-code assignment uses the shared `-(x·c - |c|²/2)` ranking with
-   * lowest-code tie-break, and the ADC sum folds subspaces in fixed
-   * j = 0..m-1 order — every double op sequence is mirrored by the SQL.
-   *
-   * Scale posture: the shuffle/scan inside probe cells carries
-   * (cell, id, one long) per candidate; the per-query LUT is m·kSub
-   * doubles computed once per probed query row from the literal
-   * codebook (no join); ranking is the bounded-heap aggregate. The
-   * codebook/centroid collects are bounded (kSub, nCells rows).
-   */
-  /** md5-ordered PQ codebook sample: kSub full-dim corpus vectors (each
-    * subspace's codebook is its slice — one bounded collect serves all
-    * m subspaces). */
+  /** PQ codebook: kSub full-dim md5-sample corpus vectors (each
+    * subspace's codebook is its slice — one bounded collect serves all m
+    * subspaces). kSub == nCells ⇒ the codebook IS the centroid sample
+    * (same md5-ordered first-k), so the second collect is skipped. */
   private def pqCodebook(
-      corpus: DataFrame, kSub: Int, idCol: String, vecCol: String): Array[Array[Double]] =
-    ivfCentroids(corpus, kSub, refineIters = 0, sampleSize = kSub,
-      idCol = idCol, vecCol = vecCol).map(_._2)
+      corpus: DataFrame, centroids: Array[(Int, Array[Double])], nCells: Int,
+      kSub: Int, idCol: String, vecCol: String): Array[Array[Double]] =
+    if (kSub == nCells) centroids.map(_._2)
+    else md5Sample(corpus, kSub, idCol, vecCol)
 
   private def pqSub(v: Column, j: Int, dsub: Int): Column =
     slice(v, j * dsub + 1, dsub)
@@ -821,59 +847,49 @@ object Similarity {
       shiftright(code, 4 * j).bitwiseAND(lit(15L)).cast("int") + lit(1)))
       .reduce(_ + _)
 
+  /** PQ/ADC code: cell rows carry the packed `pq_code` long (the stored
+    * index name); the query side carries its ADC lookup table, built
+    * BEFORE the probe explode so it is computed once per query, not
+    * nProbe times. */
+  private def pqCode(codebook: Array[Array[Double]], m: Int): Code = Code(
+    Seq("pq_code" -> pqPackedCodeCol(col("n_vec"), codebook, m)),
+    Seq("lut" -> pqLutCol(col("q_vec"), codebook, m)),
+    pqAdcScore(col("lut"), col("pq_code"), m))
+
+  /**
+   * IVF-PQ retrieval with asymmetric-distance scoring (ADC) — the memory
+   * rung BELOW int8 SQ ([[ivfQuantizedTopK]]): each corpus vector is
+   * stored inside its probe cell as `m` 4-bit codebook indices packed
+   * into one long (dim=64 → 4 bytes per vector vs 64 int8 bytes vs 512
+   * float64 bytes), and queries score candidates through per-subspace
+   * inner-product LOOKUP TABLES — `m` table probes per candidate, never
+   * touching original vectors inside the cells. This is the classic
+   * IVF-PQ/ADC composition (Jégou et al., "Product Quantization for
+   * Nearest Neighbor Search", direct non-residual variant).
+   *
+   * Determinism end-to-end, so the WHOLE approximate path keeps a
+   * full-algorithm DuckDB oracle (the [[ivfQuantizedTopK]] precedent):
+   * the per-subspace codebooks are the md5-ordered corpus sample (the
+   * same bounded-sample trick as the cell centroids — no trained model),
+   * sub-code assignment uses the shared `-(x·c - |c|²/2)` ranking with
+   * lowest-code tie-break, and the ADC sum folds subspaces in fixed
+   * j = 0..m-1 order — every double op sequence is mirrored by the SQL.
+   *
+   * Scale posture: the shuffle/scan inside probe cells carries
+   * (cell, id, one long) per candidate; the per-query LUT is m·kSub
+   * doubles computed once per query row from the literal codebook (no
+   * join); ranking is the bounded-heap aggregate. The codebook/centroid
+   * collects are bounded (kSub, nCells rows).
+   */
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4, m: Int = 8, kSub: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(kSub >= 2 && kSub <= 16, "kSub must be in [2, 16] (4-bit packed codes)")
-    require(m >= 1 && m <= 15, "m must be in [1, 15] (m nibbles in one long)")
-    val centroids = ivfCentroids(corpus, nCells, refineIters = 0,
-      sampleSize = nCells, idCol = idCol, vecCol = vecCol)
-    // kSub == nCells ⇒ the codebook IS the centroid sample (same
-    // md5-ordered first-k) — skip the second corpus orderBy/collect
-    val codebook =
-      if (kSub == nCells) centroids.map(_._2)
-      else pqCodebook(corpus, kSub, idCol, vecCol)
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("cell", element_at(cellRankCol(col("n_vec"), centroids), 1)("cell"))
-      .withColumn("code", pqPackedCodeCol(col("n_vec"), codebook, m))
-      .select(col("cell"), col("n_id"), col("code"))
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-      // ADC lookup table FIRST (m·kSub dots per query row, from the
-      // literal codebook), THEN the probe-cell explode — the other order
-      // would recompute the table nProbe times per query
-      .withColumn("lut", pqLutCol(col("q_vec"), codebook, m))
-      .withColumn("cell", explode(transform(
-        slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
-      .select(col("cell"), col("q_id"), col("lut"))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        pqAdcScore(col("lut"), col("code"), m).as("sim"))
-    rankTopK(sims, k)
-  }
-
-  /** Residual-PQ codebook: the md5-ordered corpus sample AFTER the
-    * centroid sample (offset nCells — the centroid rows themselves would
-    * residualize to the zero vector and collapse the codebook), each
-    * residualized against its nearest centroid. Driver-side and bounded
-    * (nCells + kSub rows), deterministic, and SQL-re-derivable. */
-  private def pqResidualCodebook(
-      corpus: DataFrame, centroids: Array[(Int, Array[Double])], kSub: Int,
-      idCol: String, vecCol: String): Array[Array[Double]] = {
-    val nCells = centroids.length
-    val cents = centroids.map(_._2)
-    corpus
-      .select(col(idCol).cast("string").as("sid"), toDouble(col(vecCol)).as("v"))
-      .withColumn("__o", md5(col("sid").cast("binary")))
-      .orderBy(col("__o")).limit(nCells + kSub)
-      .select("v").collect()
-      .map(_.getSeq[Double](0).toArray)
-      .drop(nCells)
-      .map { v =>
-        val c = cents(nearestCell(v, cents))
-        Array.tabulate(v.length)(i => v(i) - c(i))
-      }
+    requirePq(m, kSub, "m", "kSub")
+    val centroids = ivfCentroids(corpus, nCells, idCol, vecCol)
+    val codebook = pqCodebook(corpus, centroids, nCells, kSub, idCol, vecCol)
+    rankTopK(ivfSims(queryVecs(queries, idCol, vecCol), corpusVecs(corpus, idCol, vecCol),
+      centroids, nProbe, pqCode(codebook, m)), k)
   }
 
   /**
@@ -886,50 +902,46 @@ object Similarity {
    * variants measure comparably — the spec pins the shared floor; the
    * structural win needs real cluster structure.)
    * Scoring decomposes exactly: `q·x = q·centroid[cell] + q·residual` —
-   * the first term is one dot against the literal centroid matrix computed
-   * at probe time (per probed (query, cell) pair, BEFORE the candidate
-   * join), the second is the same m-probe ADC lookup as the direct
-   * variant, now over the residual codebook.
+   * the first term comes from the query's dots against every centroid
+   * (computed once per query row, BEFORE the candidate join), the second
+   * is the same m-probe ADC lookup as the direct variant, now over the
+   * residual codebook.
    *
    * Determinism end-to-end (the [[ivfPqTopK]] oracle contract): centroids
    * are the md5-ordered first-nCells sample; the residual codebook is the
    * NEXT kSub vectors in the same order, residualized driver-side with the
-   * shared tie-break ([[pqResidualCodebook]]); the score folds the cell
-   * term first, then subspaces in fixed j = 0..m-1 order — every double op
-   * sequence is mirrored by the SQL oracle.
+   * shared tie-break; the score folds the cell term first, then subspaces
+   * in fixed j = 0..m-1 order — every double op sequence is mirrored by
+   * the SQL oracle.
    */
   def ivfPqResidualTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4, m: Int = 8, kSub: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(kSub >= 2 && kSub <= 16, "kSub must be in [2, 16] (4-bit packed codes)")
-    require(m >= 1 && m <= 15, "m must be in [1, 15] (m nibbles in one long)")
-    val centroids = ivfCentroids(corpus, nCells, refineIters = 0,
-      sampleSize = nCells, idCol = idCol, vecCol = vecCol)
-    val codebook = pqResidualCodebook(corpus, centroids, kSub, idCol, vecCol)
-    val centMat = typedlit(centroids.map(_._2.toSeq).toSeq)
-    def centOf(cell: Column): Column = element_at(centMat, cell + lit(1))
-    val c = corpus.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-      .withColumn("cell", element_at(cellRankCol(col("n_vec"), centroids), 1)("cell"))
-      // materialize the residual once — pqPackedCodeCol slices it m·kSub times
-      .withColumn("__res", zip_with(col("n_vec"), centOf(col("cell")), (a, b) => a - b))
-      .withColumn("code", pqPackedCodeCol(col("__res"), codebook, m))
-      .select(col("cell"), col("n_id"), col("code"))
-    val q = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
+    requirePq(m, kSub, "m", "kSub")
+    val centroids = ivfCentroids(corpus, nCells, idCol, vecCol)
+    // residual codebook: the md5-order sample AFTER the centroid sample
+    // (the centroid rows themselves would residualize to the zero vector
+    // and collapse the codebook), each residualized against its nearest
+    // centroid — computed on the collected sample (nCells + kSub rows)
+    val cents = centroids.map(_._2)
+    val codebook = md5Sample(corpus, nCells + kSub, idCol, vecCol).drop(nCells).map { v =>
+      val c = cents(nearestCell(v, cents))
+      Array.tabulate(v.length)(i => v(i) - c(i))
+    }
+    val centMat = typedlit(cents.map(_.toSeq).toSeq)
+    val residual = Code(
+      // the residual is materialized once — pqPackedCodeCol slices it m·kSub times
+      Seq("__res" -> zip_with(col("n_vec"), element_at(centMat, col("cell") + lit(1)),
+          (a, b) => a - b),
+        "pq_code" -> pqPackedCodeCol(col("__res"), codebook, m)),
       // LUT over the RAW query against the residual codebook (q·r term),
-      // hoisted above the probe explode like the direct variant
-      .withColumn("lut", pqLutCol(col("q_vec"), codebook, m))
-      .withColumn("cell", explode(transform(
-        slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
-      // per-(query, probed cell) centroid term — computed before the
-      // candidate join, so it prices at |Q|·nProbe, not per candidate
-      .withColumn("coff", dot(col("q_vec"), centOf(col("cell"))))
-      .select(col("cell"), col("q_id"), col("lut"), col("coff"))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (col("coff") + pqAdcScore(col("lut"), col("code"), m)).as("sim"))
-    rankTopK(sims, k)
+      // plus the q·centroid term for every cell
+      Seq("lut" -> pqLutCol(col("q_vec"), codebook, m),
+        "coffs" -> array(cents.toIndexedSeq.map(c => dot(col("q_vec"), typedlit(c.toSeq))): _*)),
+      element_at(col("coffs"), col("cell") + lit(1)) + pqAdcScore(col("lut"), col("pq_code"), m))
+    rankTopK(ivfSims(queryVecs(queries, idCol, vecCol), corpusVecs(corpus, idCol, vecCol),
+      centroids, nProbe, residual), k)
   }
 
   /**
@@ -983,26 +995,18 @@ object Similarity {
       corpus: DataFrame, path: String, nCells: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
       pqM: Int = 8, pqKSub: Int = 16): Unit = {
-    // same bounds the in-memory PQ path enforces — out-of-range values
-    // would silently pack overlapping nibbles into stored pq_codes
-    require(pqKSub >= 2 && pqKSub <= 16, "pqKSub must be in [2, 16] (4-bit packed codes)")
-    require(pqM >= 1 && pqM <= 15, "pqM must be in [1, 15] (m nibbles in one long)")
+    requirePq(pqM, pqKSub, "pqM", "pqKSub") // the in-memory PQ path's bounds
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centroids = ivfCentroids(corpus, nCells, refineIters = 0,
-      sampleSize = nCells, idCol = idCol, vecCol = vecCol)
+    val centroids = ivfCentroids(corpus, nCells, idCol, vecCol)
     centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
       .toDF("cell", "coefs").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
     // PQ codebook sidecar: like the centroids, the stored sample is the
     // source of truth — appends must encode with the SAME codebook or
     // stored codes would stop being comparable (frozen geometry, same
-    // caveat and same rebuild remedy as cell centroids). When the
-    // geometries coincide the codebook IS the centroid sample — skip the
-    // second md5-ordered corpus scan
-    val codebook =
-      if (pqKSub == nCells) centroids.map(_._2)
-      else pqCodebook(corpus, pqKSub, idCol, vecCol)
+    // caveat and same rebuild remedy as cell centroids)
+    val codebook = pqCodebook(corpus, centroids, nCells, pqKSub, idCol, vecCol)
     codebook.zipWithIndex.map { case (cb, i) => (i, cb.toSeq, pqM) }.toSeq
       .toDF("c", "coefs", "m").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/pqcodebook")
@@ -1025,11 +1029,17 @@ object Similarity {
       .map(v => s"$path/$v").getOrElse(path)
   }
 
+  /** Read the stored centroid sidecar: (cell, centroid) in cell order.
+    * @param resolvedRoot the LIVE root from [[liveIndexRoot]] — callers
+    *   pass their operation's single resolution, never re-resolve here. */
+  private def readCentroids(
+      spark: org.apache.spark.sql.SparkSession, resolvedRoot: String): Array[(Int, Array[Double])] =
+    spark.read.parquet(s"$resolvedRoot/centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+
   /** Read the stored PQ codebook sidecar: (codebook rows in c order, m).
     * Fails with an actionable message on trees persisted before the PQ
-    * sidecar existed. */
-  /** @param resolvedRoot the LIVE root from [[liveIndexRoot]] — callers
-    *   pass their operation's single resolution, never re-resolve here. */
+    * sidecar existed. `resolvedRoot` as in [[readCentroids]]. */
   private def readPqCodebook(
       spark: org.apache.spark.sql.SparkSession, resolvedRoot: String): (Array[Array[Double]], Int) = {
     val sidecar = new org.apache.hadoop.fs.Path(s"$resolvedRoot/pqcodebook")
@@ -1062,9 +1072,7 @@ object Similarity {
     // between a per-subtree centroid read and the cells write would
     // append old-geometry rows into the new generation
     val live = liveIndexRoot(spark, path)
-    val centroids: Array[(Int, Array[Double])] =
-      spark.read.parquet(s"$live/centroids").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    val centroids = readCentroids(spark, live)
     val (codebook, m) = readPqCodebook(spark, live)
     val rows = indexRows(batch, centroids, codebook, m, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1107,108 +1115,87 @@ object Similarity {
   def appendStreamToIvfIndex(
       stream: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      rebuildCheckEvery: Int = 0, nCells: Int = 16,
+      rebuildCheckEvery: Int = 0,
       rebuildThreshold: Double = IvfRebuildSkewThreshold)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         appendToIvfIndex(batch.toDF(), path, idCol, vecCol)
         if (rebuildCheckEvery > 0 && (id + 1) % rebuildCheckEvery == 0)
-          rebuildIfSkewed(batch.sparkSession, path, nCells, idCol, vecCol,
+          rebuildIfSkewed(batch.sparkSession, path, idCol, vecCol,
             rebuildThreshold): Unit
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** Shared index-row projection: cell assignment + scale + packed int8
-    * code + packed PQ code (one pass over the batch; exactly
-    * [[quantizeInt8]]'s / [[pqPackedCodeCol]]'s arithmetic). */
+  /** Shared index-row projection: cell assignment + the int8 code
+    * (`scale`, packed `code`) + the packed PQ code (`pq_code`) — one pass
+    * over the batch through the same [[Code]] columns the in-memory lanes
+    * project, so stored and in-memory codes are identical. */
   private def indexRows(
       corpus: DataFrame, centroids: Array[(Int, Array[Double])],
       codebook: Array[Array[Double]], pqM: Int,
-      idCol: String, vecCol: String): DataFrame = {
-    val packed = when(col("__scale") === lit(0.0),
-      graft.functions.vectors.int8_pack(transform(col("__v"), _ => lit(0L))))
-      .otherwise(graft.functions.vectors.int8_pack(transform(col("__v"), x =>
-        floor(x * lit(127.0) / col("__scale") + lit(0.5)).cast("long"))))
-    corpus.select(col(idCol), col(vecCol))
-      .withColumn("__v", toDouble(col(vecCol)))
-      .withColumn("cell", element_at(cellRankCol(col("__v"), centroids), 1)("cell"))
-      .withColumn("__scale", array_max(transform(col("__v"), v => abs(v))))
-      .select(col(idCol), col(vecCol), col("cell"),
-        col("__scale").as("scale"), packed.as("code"),
-        pqPackedCodeCol(col("__v"), codebook, pqM).as("pq_code"))
-  }
+      idCol: String, vecCol: String): DataFrame =
+    corpusCells(
+      corpus.select(col(idCol), col(vecCol)).withColumn("n_vec", toDouble(col(vecCol))),
+      centroids, int8Code.cellCols ++ pqCode(codebook, pqM).cellCols)
+      .select(col(idCol), col(vecCol), col("cell"), col("scale"), col("code"), col("pq_code"))
 
-  /**
-   * Quantized retrieval over a [[writeIvfIndex]] tree. The query batch's
-   * probed-cell union (≤ nCells values — driver-bounded by construction)
-   * becomes an `isin` literal on the partition column, so the scan is
-   * directory-pruned before any row is read; scoring and ranking are
-   * identical to [[ivfQuantizedTopK]] (same centroids, same codes — the
-   * two paths return the same rows, which the equivalence test and the
-   * shared oracle pin).
-   */
-  /** @param kCand when > k, the int8 stage keeps `kCand` candidates per
-    *   query and ONLY those are rescored with exact float cosines against
-    *   the vectors STORED IN THE INDEX (still just the pruned cell
-    *   directories — no second corpus pass), mirroring
-    *   [[ivfQuantizedTopKRerank]]. 0 (default) = no rerank. */
-  def ivfQuantizedTopKIndexed(
-      indexPath: String, queries: DataFrame, k: Int, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      kCand: Int = 0): DataFrame = {
+  /** The indexed lanes: the IVF pipeline with the cell rows read from a
+    * [[writeIvfIndex]] tree instead of projected from a corpus. One
+    * live-root resolution and one centroid read per op; `code` may read
+    * more sidecars from the live root. The query batch's probed-cell union
+    * (≤ nCells values by construction) becomes an `isin`
+    * literal on the partition column, so the scan is directory-pruned
+    * before any row is read. With `kCand > k` the code keeps kCand
+    * candidates and [[exactRerank]] rescores them against the vectors
+    * STORED IN THE INDEX (the same pruned scan — no second corpus pass). */
+  private def indexedTopK(
+      indexPath: String, queries: DataFrame, k: Int, nProbe: Int,
+      idCol: String, vecCol: String, kCand: Int)(code: String => Code): DataFrame = {
     val spark = queries.sparkSession
     val live = liveIndexRoot(spark, indexPath) // one resolution per op
-    val centroids: Array[(Int, Array[Double])] =
-      spark.read.parquet(s"$live/centroids").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val q0 = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-    val q = q0
-      .withColumn("cell", explode(transform(
-        slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
-      .withColumn("q_scale", array_max(transform(col("q_vec"), v => abs(v))))
-      .withColumn("q_q", when(col("q_scale") === lit(0.0),
-        graft.functions.vectors.int8_pack(transform(col("q_vec"), _ => lit(0L))))
-        .otherwise(graft.functions.vectors.int8_pack(transform(col("q_vec"), x =>
-          floor(x * lit(127.0) / col("q_scale") + lit(0.5)).cast("long")))))
-      .select(col("cell"), col("q_id"), col("q_scale"), col("q_q"))
+    val centroids = readCentroids(spark, live)
+    val c = code(live)
+    val q = probeQueries(queryVecs(queries, idCol, vecCol), centroids, nProbe, c)
     // the batch's probe-cell union: bounded by nCells, so the collect is a
     // handful of ints — it exists precisely to become a partition filter
     val probedCells = q.select("cell").distinct().collect().map(_.getInt(0)).sorted
     val cells = spark.read.parquet(s"$live/cells")
       .filter(col("cell").isin(probedCells.toIndexedSeq.map(_.asInstanceOf[Any]): _*))
-    val c = cells.select(col("cell"), col(idCol).as("n_id"),
-      col("scale").as("n_scale"), col("code").as("n_q"))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        ((graft.functions.vectors.int8_dot(col("q_q"), col("n_q")).cast("double")
-          * col("q_scale")) * col("n_scale") / lit(16129.0)).as("sim"))
+    val sims = scorePairs(q, cells.withColumnRenamed(idCol, "n_id"), c)
     if (kCand <= k) rankTopK(sims, k)
-    else {
-      val cand = rankTopK(sims, kCand).select(col("q_id"), col("n_id"))
-      val qv = q0.withColumn("q_norm", norm(col("q_vec")))
-      val nv = cells.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-        .withColumn("n_norm", norm(col("n_vec")))
-      val exact = cand.join(qv, Seq("q_id")).join(nv, Seq("n_id"))
-        .select(col("q_id"), col("n_id"),
-          (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-            .as("sim"))
-      rankTopK(exact, k)
-    }
+    else reranked(queries, cells, k, kCand, idCol, vecCol)(rankTopK(sims, _))
   }
+
+  /**
+   * Quantized retrieval over a [[writeIvfIndex]] tree: [[indexedTopK]]
+   * with the int8 code. Scoring and ranking are identical to
+   * [[ivfQuantizedTopK]] (same centroids, same codes — the two paths
+   * return the same rows, which the equivalence test and the shared
+   * oracle pin).
+   *
+   * @param kCand when > k, the int8 stage keeps `kCand` candidates per
+   *   query and ONLY those are rescored with exact float cosines against
+   *   the vectors stored in the index, mirroring
+   *   [[ivfQuantizedTopKRerank]]. 0 (default) = no rerank.
+   */
+  def ivfQuantizedTopKIndexed(
+      indexPath: String, queries: DataFrame, k: Int, nProbe: Int = 4,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      kCand: Int = 0): DataFrame =
+    indexedTopK(indexPath, queries, k, nProbe, idCol, vecCol, kCand)(_ => int8Code)
 
   /**
    * PQ/ADC retrieval over a [[writeIvfIndex]] tree — the stored `pq_code`
    * longs scored through per-query lookup tables built from the
    * `pqcodebook/` sidecar. Same directory-pruned scan as
-   * [[ivfQuantizedTopKIndexed]] (the probe set is an `isin` partition
-   * filter), but the candidate pass reads 4 BYTES of code per vector
-   * instead of the dim-byte int8 code — the bandwidth rung a 100 TB
-   * corpus scan cares about. Row-identical to [[ivfPqTopK]] over the same
-   * corpus by construction (same md5 centroid sample, same codebook, same
-   * fold orders — the shared-oracle pattern of the int8 indexed path).
+   * [[ivfQuantizedTopKIndexed]], but the candidate pass reads 4 BYTES of
+   * code per vector instead of the dim-byte int8 code — the bandwidth
+   * rung a 100 TB corpus scan cares about. Row-identical to [[ivfPqTopK]]
+   * over the same corpus by construction (same md5 centroid sample, same
+   * codebook, same fold orders — the shared-oracle pattern of the int8
+   * indexed path).
    *
    * @param kCand when > k: ADC keeps kCand candidates and ONLY those are
    *   rescored with exact float cosines from the vectors stored in the
@@ -1217,40 +1204,11 @@ object Similarity {
   def ivfPqTopKIndexed(
       indexPath: String, queries: DataFrame, k: Int, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      kCand: Int = 0): DataFrame = {
-    val spark = queries.sparkSession
-    val live = liveIndexRoot(spark, indexPath) // one resolution per op
-    val centroids: Array[(Int, Array[Double])] =
-      spark.read.parquet(s"$live/centroids").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val (codebook, m) = readPqCodebook(spark, live)
-    val q0 = queries.select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
-    val q = q0
-      .withColumn("lut", pqLutCol(col("q_vec"), codebook, m))
-      .withColumn("cell", explode(transform(
-        slice(cellRankCol(col("q_vec"), centroids), 1, nProbe), s => s("cell"))))
-      .select(col("cell"), col("q_id"), col("lut"))
-    val probedCells = q.select("cell").distinct().collect().map(_.getInt(0)).sorted
-    val cells = spark.read.parquet(s"$live/cells")
-      .filter(col("cell").isin(probedCells.toIndexedSeq.map(_.asInstanceOf[Any]): _*))
-    val c = cells.select(col("cell"), col(idCol).as("n_id"), col("pq_code"))
-    val sims = q.join(c, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        pqAdcScore(col("lut"), col("pq_code"), m).as("sim"))
-    if (kCand <= k) rankTopK(sims, k)
-    else {
-      val cand = rankTopK(sims, kCand).select(col("q_id"), col("n_id"))
-      val qv = q0.withColumn("q_norm", norm(col("q_vec")))
-      val nv = cells.select(col(idCol).as("n_id"), toDouble(col(vecCol)).as("n_vec"))
-        .withColumn("n_norm", norm(col("n_vec")))
-      val exact = cand.join(qv, Seq("q_id")).join(nv, Seq("n_id"))
-        .select(col("q_id"), col("n_id"),
-          (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-            .as("sim"))
-      rankTopK(exact, k)
+      kCand: Int = 0): DataFrame =
+    indexedTopK(indexPath, queries, k, nProbe, idCol, vecCol, kCand) { live =>
+      val (codebook, m) = readPqCodebook(queries.sparkSession, live)
+      pqCode(codebook, m)
     }
-  }
 
   /**
    * Skew ratio above which [[ivfIndexHealth]] recommends a full
@@ -1331,7 +1289,7 @@ object Similarity {
    *    cannot mix generations here by construction).
    */
   def rebuildIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String, nCells: Int = 16,
+      spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     import org.apache.hadoop.fs.Path
     val (hfs, root) = graft.sink.FsOps.fs(spark, path)
@@ -1346,8 +1304,10 @@ object Similarity {
     val live = liveIndexRoot(spark, path) // one resolution per rebuild
     val corpus = spark.read.parquet(s"$live/cells")
       .select(col(idCol), col(vecCol))
-    // carry the index's PQ geometry (m, kSub) through the rebuild — the
-    // codebook itself is re-sampled over the grown corpus, like centroids
+    // carry the index's geometry (nCells, m, kSub) through the rebuild —
+    // the centroids and codebook themselves are re-sampled over the grown
+    // corpus
+    val nCells = readCentroids(spark, live).length
     val (oldCodebook, oldM) = readPqCodebook(spark, live)
     val staging = new Path(root, ".rebuild")
     graft.sink.FsOps.deleteIfExists(hfs, staging)
@@ -1394,31 +1354,29 @@ object Similarity {
     * parquet footers; the rebuild costs one full index pass — which is
     * the point of gating it. */
   def rebuildIfSkewed(
-      spark: org.apache.spark.sql.SparkSession, path: String, nCells: Int = 16,
+      spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = IvfRebuildSkewThreshold): Boolean = {
     val skew = ivfIndexHealth(spark, path)
       .select("skew_ratio").head().getDouble(0)
-    if (skew >= threshold) { rebuildIvfIndex(spark, path, nCells, idCol, vecCol); true }
+    if (skew >= threshold) { rebuildIvfIndex(spark, path, idCol, vecCol); true }
     else false
   }
 
-  /** [[quantizeInt8]] with the code vector PACKED to binary (exactly dim
-    * bytes per vector — the representation [[ivfQuantizedTopK]] ships
-    * through shuffles/broadcasts; score packed codes with
-    * `graft.functions.vectors.int8_dot`). */
-  def quantizeInt8Packed(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    quantizeInt8(df, idCol, vecCol).select(col(idCol), col("scale"),
-      graft.functions.vectors.int8_pack(col("qvec")).as("code"))
-
+  /**
+   * Symmetric max-abs int8 quantization of an embedding column — the
+   * standard 4× memory/bandwidth cut for ANN indexes at scale (float32
+   * vectors of a 100 TB corpus shrink to a quarter; recall loss at 127
+   * levels is sub-percent for cosine). Per vector: `scale = max|x_i|`,
+   * `q_i = ⌊x_i·127/scale + 0.5⌋` (zero vector → all-zero codes).
+   * Row-local array expressions, zero shuffle; the double math is one
+   * fixed-shape expression over exactly-widened floats, so any IEEE
+   * engine reproduces the identical codes (full DuckDB oracle). The codes
+   * are unpacked here; the IVF lanes and the index pack the same values.
+   */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val x = col(vecCol)
-    val scale = array_max(transform(x, v => abs(v.cast("double"))))
-    df.select(col(idCol),
-      scale.as("scale"),
-      when(scale === lit(0.0), transform(x, _ => lit(0L)))
-        .otherwise(transform(x, v =>
-          floor(v.cast("double") * lit(127.0) / scale + lit(0.5))))
-        .as("qvec"))
+    val v = toDouble(col(vecCol))
+    val scale = int8Scale(v)
+    df.select(col(idCol), scale.as("scale"), int8Codes(v, scale).as("qvec"))
   }
 }

@@ -85,13 +85,23 @@ private[graft] object FsOps {
 
   def readManifest(f: FileSystem, root: Path): Option[String] = {
     val m = new Path(root, "MANIFEST")
-    if (!f.exists(m)) None
-    else {
-      val in = f.open(m)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim).filter(_.nonEmpty)
-      finally in.close()
-    }
+    // on a checksummed local FS `atomicWrite`'s overwrite-rename moves the
+    // file, then its .crc: a read between the two steps fails the checksum
+    // of complete content, so it is retried (real corruption still throws
+    // after the last attempt)
+    def read(attempt: Int): Option[String] =
+      if (!f.exists(m)) None
+      else try {
+        val in = f.open(m)
+        try Some(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8).trim).filter(_.nonEmpty)
+        finally in.close()
+      } catch {
+        case _: org.apache.hadoop.fs.ChecksumException if attempt < 5 =>
+          Thread.sleep(10L * attempt)
+          read(attempt + 1)
+      }
+    read(1)
   }
 
   /** Atomically replace `target`'s content: write to a dot-hidden

@@ -1,17 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke for the driver's t1 gate: runs SparkEntry.entry and prints the
   * row count (driver checks rows > 0). `sbt 'runMain graft.tools.EntrySmoke'` */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build(8)
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     df.show(20, truncate = false)

@@ -1,21 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for headline queries so the
   * pushdown/broadcast/codegen posture is auditable.
   * `sbt 'runMain graft.tools.ExplainAudit [names...]'` */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the standard deployment extension — the SQL-DML fixtures need the
-      // snapshot rule to even construct their result frame
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.build(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq

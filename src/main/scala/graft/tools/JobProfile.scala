@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run one registered query and print every Spark JOB the run
   * fired — start offset, wall duration, task count and the call site — so a
@@ -17,15 +16,7 @@ object JobProfile {
     val sfDir = args.lift(2).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.maxConcurrentOutputFileWriters", "16")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     case class J(id: Int, start: Long, var end: Long, tasks: Int,
       site: String)

@@ -2,16 +2,13 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Dev: stage-by-stage timing of the prefix-filtered ngram join at sf0.1. */
 object NgramProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build(8)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables(spark, "/root/testdata/sf0.1", "documents")
     def time[T](label: String)(f: => T): T = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registered query N times in a warm session and print
   * per-run wall time plus the formatted physical plan. Usage:
   * {{{ sbt "runMain graft.tools.Probe <queryName> [runs] [sfDir]" }}} */
@@ -12,17 +10,7 @@ object Probe {
     val sfDir = args.lift(2).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.ui.enabled", "false")
-      // the standard deployment extension, matching Bench/Verify — the
-      // SQL-DML fixtures need the rule, and probing a different session
-      // shape than the gates time would mis-adjudicate drift
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated names all probe inside the same warm session, so the
     // per-JVM codegen/datasource warmup is paid once, not once per query

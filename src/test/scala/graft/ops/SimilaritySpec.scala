@@ -350,7 +350,7 @@ class SimilaritySpec extends SparkSpec {
     // complete immutable tree: rebuild publishes v2, v1 stays on disk
     val v1Cells = s"$idx/v1/cells"
     val preCount = spark.read.parquet(v1Cells).count()
-    Similarity.rebuildIvfIndex(spark, idx, nCells = 8)
+    Similarity.rebuildIvfIndex(spark, idx)
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(idx, "MANIFEST")).trim == "v2")
     assert(spark.read.parquet(v1Cells).count() == preCount,
@@ -364,7 +364,7 @@ class SimilaritySpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/v2/cells").count() == preCount + 3)
     assert(spark.read.parquet(v1Cells).count() == preCount, "v1 untouched by append")
     // the next publish retires v1 (only live + previous are retained)
-    Similarity.rebuildIvfIndex(spark, idx, nCells = 8)
+    Similarity.rebuildIvfIndex(spark, idx)
     assert(!new java.io.File(s"$idx/v1").exists())
     assert(new java.io.File(s"$idx/v2").exists())
     assert(java.nio.file.Files.readString(
@@ -383,7 +383,7 @@ class SimilaritySpec extends SparkSpec {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(idx, "cells"),
       java.nio.file.Paths.get(idx, ".retired_cells"))
-    Similarity.rebuildIvfIndex(spark, idx, nCells = 8)
+    Similarity.rebuildIvfIndex(spark, idx)
     val q = e.filter(col("vec_id") < 5)
     val out = Similarity.ivfQuantizedTopKIndexed(idx, q, k = 5, nProbe = 2)
     assert(out.count() > 0, "healed + rebuilt index must answer queries")
@@ -529,7 +529,7 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("cell").collect().map(_.toString).toSeq
     // no-op path: an unreachable threshold must not touch the tree
     val centsBefore = cents()
-    assert(!Similarity.rebuildIfSkewed(spark, idx, nCells = 8, threshold = 1e9))
+    assert(!Similarity.rebuildIfSkewed(spark, idx, threshold = 1e9))
     assert(cents() == centsBefore)
     // drift: a hot CLUSTER around one vector — per-row perturbations, NOT
     // identical copies (identical vectors land in one cell under ANY
@@ -549,7 +549,7 @@ class SimilaritySpec extends SparkSpec {
       .select("skew_ratio").head().getDouble(0)
     assert(skewBefore >= Similarity.IvfRebuildSkewThreshold,
       s"planted drift must trip the policy (skew $skewBefore)")
-    assert(Similarity.rebuildIfSkewed(spark, idx, nCells = 8))
+    assert(Similarity.rebuildIfSkewed(spark, idx))
     val after = Similarity.ivfIndexHealth(spark, idx).collect()
     assert(after.map(_.getAs[Long]("n_rows")).sum == 3 * n, "rebuild must not lose rows")
     val skewAfter = after.head.getAs[Double]("skew_ratio")
@@ -630,7 +630,7 @@ class SimilaritySpec extends SparkSpec {
     input.addData(hot)
     val sq = Similarity.appendStreamToIvfIndex(
       input.toDF().toDF("vec_id", "embedding"), idx,
-      rebuildCheckEvery = 1, nCells = 8)
+      rebuildCheckEvery = 1)
     sq.awaitTermination(60000)
     assert(cents() != centsBefore, "the gated rebuild must have run")
     val health = Similarity.ivfIndexHealth(spark, idx).collect()
@@ -878,4 +878,12 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("rebuildIvfIndex keeps the stored cell count") {
+    val e = Tables(spark, sf0001, "embeddings").select("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_cells").toString
+    Similarity.writeIvfIndex(e, idx, nCells = 8)
+    Similarity.rebuildIvfIndex(spark, idx)
+    assert(spark.read.parquet(s"$idx/centroids").count() == 8)
+    assert(Similarity.ivfIndexHealth(spark, idx).count() == 8)
+  }
 }
