@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem helpers for staged-write → rename-swap maintenance
@@ -24,12 +24,23 @@ private[graft] object FsOps {
   def isHidden(rel: String): Boolean = rel.split('/').exists(seg =>
     seg.startsWith(".") || (seg.startsWith("_") && !seg.contains("=")))
 
-  /** The data files a reader of the tree at `root` sees (one listing). */
-  def visibleFiles(f: FileSystem, root: Path): Iterator[LocatedFileStatus] = {
-    val it = f.listFiles(root, true)
+  /** Every file under `root` (`root` itself when it is a file), depth
+    * first in listing order: what `listFiles(root, true)` returns, from
+    * one `listStatus` per directory, walked lazily. `listFiles` wraps each
+    * file in a `LocatedFileStatus`, whose constructor reads the file's
+    * permission, and without libhadoop the local FS reads a permission by
+    * starting an `ls -ld` process. A plain status never reads it. A
+    * missing `root` throws `FileNotFoundException`, as `listFiles` does;
+    * callers apply their own hidden-name rule. */
+  def walkFiles(f: FileSystem, root: Path): Iterator[FileStatus] =
+    f.listStatus(root).iterator.flatMap(s =>
+      if (s.isFile) Iterator.single(s) else walkFiles(f, s.getPath))
+
+  /** The data files a reader of the tree at `root` sees (one walk). */
+  def visibleFiles(f: FileSystem, root: Path): Iterator[FileStatus] = {
     val prefix = root.toString.stripSuffix("/") + "/"
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter(s =>
-      s.isFile && !isHidden(s.getPath.toString.stripPrefix(prefix)))
+    walkFiles(f, root).filter(s =>
+      !isHidden(s.getPath.toString.stripPrefix(prefix)))
   }
 
   def deleteIfExists(f: FileSystem, p: Path): Unit = { f.delete(p, true): Unit }
@@ -104,14 +115,19 @@ private[graft] object FsOps {
     read(1)
   }
 
-  /** Atomically replace `target`'s content: write to a dot-hidden
-    * sibling, then overwrite-rename it onto `target` through
-    * `FileContext` (posix/HDFS atomic overwrite-rename) — a plain
-    * `create(overwrite=true)` would TRUNCATE the live file first, and a
-    * reader in that window would see a partial or empty file. Filesystems
-    * without FileContext support fall back to the direct create — on
-    * object stores a small single PUT is atomic anyway, which is the
-    * case the versioned layout targets. */
+  /** Replace `target`'s content: write to a dot-hidden sibling, then
+    * rename it onto `target` through `FileContext` with `OVERWRITE` — a
+    * plain `create(overwrite=true)` would TRUNCATE the live file first,
+    * and a reader in that window would see a partial or empty file. The
+    * rename is atomic only where the filesystem overrides overwrite-rename
+    * (HDFS). The local FS (Hadoop 3.4) takes `AbstractFileSystem`'s
+    * default: it deletes `target`, then renames, so a reader between the
+    * two steps finds no `target` at all (open in ROADMAP item 4); it also
+    * probes both paths and their `.crc` with `getFileLinkStatus`, a
+    * `readlink` process each without libhadoop. Filesystems without
+    * FileContext support fall back to the direct create — on object
+    * stores a small single PUT is atomic anyway, which is the case the
+    * versioned layout targets. */
   def atomicWrite(f: FileSystem, target: Path, content: String): Unit = {
     val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val tmp = new Path(target.getParent, s".${target.getName}.tmp")

@@ -607,23 +607,19 @@ object Snapshots {
   private def mainPointer(f: FileSystem, qroot: Path): Option[Int] =
     FsOps.readManifest(f, qroot).map(parseSnapRef(s"MANIFEST at $qroot", _))
 
-  /** Recursive data-file listing as (relative path, mtime, length) —
-    * mtime and length ride along from the listing's own
-    * `LocatedFileStatus`, so age filters (vacuum/expire grace) and
-    * manifest byte recording cost zero extra RPCs. */
-  private def listDataFilesWithMtime(
+  /** Recursive data-file listing as (relative path, mtime, length),
+    * skipping `_`- and `.`-led file names — mtime and length ride along
+    * from the walk's own statuses ([[FsOps.walkFiles]]), so age filters
+    * (vacuum/expire grace) and manifest byte recording cost zero extra
+    * RPCs. */
+  private[sink] def listDataFilesWithMtime(
       f: FileSystem, base: Path): Seq[(String, Long, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
     val baseUri = base.toUri.getPath
-    val it = f.listFiles(base, true)
-    while (it.hasNext) {
-      val s = it.next()
+    FsOps.walkFiles(f, base).filter { s =>
       val name = s.getPath.getName
-      if (s.isFile && !name.startsWith("_") && !name.startsWith("."))
-        out += ((s.getPath.toUri.getPath.stripPrefix(baseUri)
-          .stripPrefix("/"), s.getModificationTime, s.getLen))
-    }
-    out.toSeq
+      !name.startsWith("_") && !name.startsWith(".")
+    }.map(s => (s.getPath.toUri.getPath.stripPrefix(baseUri).stripPrefix("/"),
+      s.getModificationTime, s.getLen)).toSeq
   }
 
   private def listDataFiles(f: FileSystem, base: Path): Seq[String] =
@@ -3415,7 +3411,7 @@ object Snapshots {
     orphans.foreach(rel => FsOps.deleteIfExists(f, new Path(data, rel)))
     orphans.map(parentDirOf).distinct.filter(_.nonEmpty).foreach { d =>
       val p = new Path(data, d)
-      if (f.exists(p) && !f.listFiles(p, true).hasNext)
+      if (f.exists(p) && !FsOps.walkFiles(f, p).hasNext)
         FsOps.deleteIfExists(f, p)
     }
     // orphan equality-delete files (a crashed merge that staged its delete
@@ -4973,7 +4969,7 @@ object Snapshots {
     // name=value dir would otherwise surface a phantom partition value)
     dead.map(parentDirOf).distinct.filter(_.nonEmpty).foreach { d =>
       val p = new Path(data, d)
-      if (f.exists(p) && !f.listFiles(p, true).hasNext)
+      if (f.exists(p) && !FsOps.walkFiles(f, p).hasNext)
         FsOps.deleteIfExists(f, p)
     }
     (expired, dead.length + deadDel.length)

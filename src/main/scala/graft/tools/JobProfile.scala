@@ -15,7 +15,7 @@ object JobProfile {
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = args.lift(2).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.Session.build(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     case class J(id: Int, start: Long, var end: Long, tasks: Int,
