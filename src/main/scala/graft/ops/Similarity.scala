@@ -1034,8 +1034,9 @@ object Similarity {
     *   pass their operation's single resolution, never re-resolve here. */
   private def readCentroids(
       spark: org.apache.spark.sql.SparkSession, resolvedRoot: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$resolvedRoot/centroids").collect()
+    graft.sink.LocalParquet.read(spark, s"$resolvedRoot/centroids")
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+      .toArray
 
   /** Read the stored PQ codebook sidecar: (codebook rows in c order, m).
     * Fails with an actionable message on trees persisted before the PQ
@@ -1047,10 +1048,10 @@ object Similarity {
     if (!fs.exists(sidecar)) throw new IllegalStateException(
       s"index at $resolvedRoot has no pqcodebook/ sidecar (persisted by an older " +
         "build) — run writeIvfIndex over its cells/ to migrate")
-    val rows = spark.read.parquet(sidecar.toString).collect()
+    val rows = graft.sink.LocalParquet.read(spark, sidecar.toString)
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray, r.getInt(2)))
       .sortBy(_._1)
-    (rows.map(_._2), rows.head._3)
+    (rows.map(_._2).toArray, rows.head._3)
   }
 
   /**

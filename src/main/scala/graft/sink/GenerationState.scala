@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
  * Shared machinery for PERSISTED SKETCH/COUNTER STATE trees — the
@@ -83,15 +83,13 @@ private[graft] object GenerationState {
     * read order for older single-split ledgers. Pre-fingerprint id-only
     * rows upgrade to [[LegacyFp]] match-any sentinels. */
   def seenTags(spark: SparkSession, liveRoot: String): Seq[(Long, Long)] = {
-    val seenDf = spark.read.parquet(s"$liveRoot/seen")
-    val rows =
-      if (seenDf.columns.contains("pos"))
-        seenDf.select("batch_id", "fp", "pos").collect()
-          .sortBy(_.getLong(2)).toSeq
-      else seenDf.collect().toSeq
-    if (seenDf.columns.contains("fp"))
-      rows.map(r => (r.getLong(0), r.getLong(1)))
-    else rows.map(r => (r.getLong(0), LegacyFp))
+    val rows = LocalParquet.read(spark, s"$liveRoot/seen")
+    def has(r: Row, c: String) = r.schema.fieldNames.contains(c)
+    val ordered =
+      if (rows.forall(has(_, "pos"))) rows.sortBy(_.getAs[Long]("pos"))
+      else rows
+    ordered.map(r => (r.getAs[Long]("batch_id"),
+      if (has(r, "fp")) r.getAs[Long]("fp") else LegacyFp))
   }
 
   /** Whether this batch tag was already folded into the state — the

@@ -828,9 +828,11 @@ object Snapshots {
     * against unclustered appends). Applies to [[StatRange]]s with
     * `lower == upper` and to [[StatRange.anyOf]] disjunctions (IN-lists —
     * a file survives when ANY value's probe says "maybe") on declared
-    * bloomColumns; the referenced batch sidecars load in ONE small
-    * driver-side read, and only when such a bound is present — every
-    * other read path pays nothing. Timestamp columns work here when the
+    * bloomColumns. The referenced batch sidecars are decoded on the
+    * driver by [[LocalParquet.read]] — no Spark job, no schema
+    * inference — and only when such a bound is present: every other read
+    * path pays nothing, and a lookup that prunes every file launches no
+    * job at all. Timestamp columns work here when the
     * probe value is exact: [[StatRange.exactEq]]-carried internal values,
     * or typed objects (Timestamp/Instant) that convert losslessly. A
     * string-sourced timestamp bound WITHOUT exactEq never probes — a
@@ -893,9 +895,8 @@ object Snapshots {
     val probes = bounds.map { case (col, ivs, dt) =>
       col -> ivs.map(iv => graft.functions.BloomBuf.hashes(iv, dt))
     }
-    val filters = spark.read
-      .parquet(present.map(r => new Path(bloomsDir(qroot), r).toString): _*)
-      .collect()
+    val filters = LocalParquet
+      .read(spark, present.map(r => new Path(bloomsDir(qroot), r).toString): _*)
       .map(row => (row.getString(0), row.getString(1)) ->
         graft.functions.BloomBuf.fromBytes(row.getAs[Array[Byte]](2))).toMap
     entries.filter { e =>

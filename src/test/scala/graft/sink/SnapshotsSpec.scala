@@ -2,6 +2,7 @@ package graft.sink
 
 import graft.SparkSpec
 import graft.sink.Snapshots.{SnapAppend, SnapOverwritePartitions}
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
 /** The snapshot/time-travel layer: append and overwrite-partitions
@@ -1475,13 +1476,26 @@ class SnapshotsSpec extends SparkSpec
       .filterNot(_.getName.startsWith(".")).map(_.getName).toSeq
     assert(bloomFiles.length == 1,
       s"only the compacted batch's sidecar should survive: $bloomFiles")
-    // post-compaction point reads still prune and still answer correctly
-    val after = Snapshots.read(spark, root,
-      prune = Seq(Snapshots.StatRange("k", Some(42L), Some(42L))))
-    assert(after.filter(col("k") === 42L).count() == 1)
-    assert(Snapshots.read(spark, root,
-      prune = Seq(Snapshots.StatRange("k", Some(43L), Some(43L))))
-      .count() == 0, "the deleted key's bloom is gone with its file")
+    // post-compaction point reads still prune and still answer correctly.
+    // The sidecar read runs on the driver: resolving a lookup launches NO
+    // Spark job, so a lookup that keeps one file costs only its scan's job
+    val (after, afterJobs) = JobCounter(spark)(
+      Snapshots.read(spark, root,
+        prune = Seq(Snapshots.StatRange("k", Some(42L), Some(42L)))))
+    assert(afterJobs == 0, s"resolving a point lookup ran $afterJobs jobs")
+    assert(after.inputFiles.length == 1)
+    val (hit, scanJobs) = JobCounter(spark)(
+      after.filter(col("k") === 42L).collect())
+    assert(hit.length == 1)
+    assert(scanJobs == 1, s"the one-file lookup ran $scanJobs jobs")
+    // 43 sits inside the compacted file's min/max, so only its Bloom
+    // filter prunes the file — and that lookup launches no job at all
+    val (gone, goneJobs) = JobCounter(spark)(
+      Snapshots.read(spark, root,
+        prune = Seq(Snapshots.StatRange("k", Some(43L), Some(43L)))))
+    assert(gone.inputFiles.isEmpty, "the bloom must prune every file")
+    assert(goneJobs == 0, s"a Bloom-pruned-empty lookup ran $goneJobs jobs")
+    assert(gone.count() == 0, "the deleted key's bloom is gone with its file")
     // a bloom column's TYPE is frozen: widening it would desync the
     // recorded hash bits and silently mis-prune — the write must abort
     val r2 = java.nio.file.Files.createTempDirectory("snap_bloomw").toString
