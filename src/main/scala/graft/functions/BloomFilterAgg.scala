@@ -15,13 +15,18 @@ import org.apache.spark.sql.types._
  * different tasks MERGE by bitwise OR — the filter is a commutative
  * monoid, so map-side partial aggregation applies untouched.
  *
- * Capacity math (classic fpp bound): at k=6 and bits/n ≈ 9.6 the false
- * positive rate is ~1%. The default 2^20 bits (128 KiB per file per
- * column — sidecar-file territory, never a text manifest's) holds
- * ~100k distinct values at 1%, still prunes usefully at ~1M (fpp ≈
- * 25%), and degrades gracefully past that — an over-full filter only
- * prunes LESS, never wrongly (a Bloom "no" is definite, a "yes" is a
- * maybe; consumers treat "yes" as keep).
+ * Capacity math (classic fpp bound): at k=6 the false positive rate is
+ * `fill^k`, `fill` the share of set bits — ~1% at bits/n ≈ 9.6, 0.1% at
+ * bits/n ≈ 15.8. Aggregation buffers are 2^20 bits, so partials from
+ * tasks that share one file OR-merge exactly. The persisted image is the
+ * [[compacted]] one, the smallest [[folded]] size whose `fill^k` stays
+ * within [[BloomBuf.PersistFpp]]: 264 bytes for a 100-key file, the full
+ * 128 KiB from ~33k distinct values up (2^19 bits hold ~33k at 0.1%,
+ * 2^20 bits ~66k). A full-size filter still prunes usefully at ~1M
+ * values (fpp ≈ 25%) and degrades gracefully past that — an over-full
+ * filter only prunes LESS, never wrongly (a Bloom "no" is definite, a
+ * "yes" is a maybe; consumers treat "yes" as keep). Every image records
+ * its own `bits` and `k`, so readers probe any power-of-two size.
  */
 final class BloomBuf(val bits: Int, val k: Int) {
   require(bits > 0 && (bits & (bits - 1)) == 0, "bits must be a power of two")
@@ -56,8 +61,38 @@ final class BloomBuf(val bits: Int, val k: Int) {
     while (i < words.length) { words(i) |= other.words(i); i += 1 }
   }
 
-  /** Self-describing byte image: bits, k, then the packed words —
-    * exactly what the snapshot manifest sidecars persist. */
+  /** The filter built at `bits / 2` from the same items, bit for bit:
+    * both sizes probe `h1 + i·h2`, and for power-of-two sizes
+    * `x mod (m/2) = (x mod m) mod (m/2)`, so the upper half ORs onto the
+    * lower. Defined down to one word (64 bits). */
+  def folded: BloomBuf = {
+    require(bits > 64, "cannot fold a Bloom buffer below 64 bits")
+    val half = new BloomBuf(bits / 2, k)
+    val n = half.words.length
+    var i = 0
+    while (i < n) { half.words(i) = words(i) | words(i + n); i += 1 }
+    half
+  }
+
+  /** Share of set bits. */
+  def fill: Double =
+    words.iterator.map(java.lang.Long.bitCount).sum.toDouble / bits
+
+  /** The smallest fold whose estimated false-positive rate `fill^k` is
+    * at most [[BloomBuf.PersistFpp]], never below 64 bits; `this` when
+    * even the first fold would exceed it. Folding never lowers `fill`,
+    * so the first fold past the target ends the search. */
+  @annotation.tailrec
+  def compacted: BloomBuf =
+    if (bits <= 64) this
+    else {
+      val half = folded
+      if (math.pow(half.fill, k) <= BloomBuf.PersistFpp) half.compacted
+      else this
+    }
+
+  /** Self-describing byte image: bits, k, then the packed words. The
+    * snapshot manifest sidecars persist the [[compacted]] buffer's. */
   def toBytes: Array[Byte] = {
     val buf = java.nio.ByteBuffer.allocate(8 + words.length * 8)
     buf.putInt(bits).putInt(k)
@@ -69,6 +104,8 @@ final class BloomBuf(val bits: Int, val k: Int) {
 object BloomBuf {
   val DefaultBits: Int = 1 << 20
   val DefaultK: Int = 6
+  /** Estimated false-positive rate a persisted image may reach. */
+  val PersistFpp: Double = 0.001
 
   def fromBytes(bytes: Array[Byte]): BloomBuf = {
     val buf = java.nio.ByteBuffer.wrap(bytes)
@@ -94,7 +131,10 @@ object BloomBuf {
 
 /**
  * `bloom_sketch(col, bits, k)` — aggregates the column's non-null
- * values into a [[BloomBuf]] byte image (BinaryType). Grouped by
+ * values into a `bits`-sized [[BloomBuf]] and returns its
+ * [[BloomBuf.compacted]] byte image (BinaryType): a filter that answers
+ * exactly as one built at the image's smaller size. Partial buffers
+ * (serialize/deserialize) stay at `bits`. Grouped by
  * `input_file_name()` over a staged write, this is the per-file
  * point-lookup index the snapshot manifests reference
  * ([[graft.sink.Snapshots]] `bloomColumns`): equality prunes consult it
@@ -126,7 +166,7 @@ case class BloomSketch(
     b.merge(other); b
   }
 
-  override def eval(b: BloomBuf): Any = b.toBytes
+  override def eval(b: BloomBuf): Any = b.compacted.toBytes
 
   override def serialize(b: BloomBuf): Array[Byte] = b.toBytes
   override def deserialize(bytes: Array[Byte]): BloomBuf =

@@ -1388,10 +1388,13 @@ object Snapshots {
           p.files.map(_.seq) ++ p.deletes.map(_.seq)) :+ 0).max + 1
     }
     // per-file Bloom filters land in ONE batch sidecar under blooms/
-    // (the Iceberg-puffin shape — KBs per file per column would bloat a
-    // text manifest; a sidecar parquet costs one small read per batch at
-    // point-lookup time and nothing otherwise). Crash before the
-    // manifest publish leaves an unreferenced sidecar — vacuum food.
+    // (the Iceberg-puffin shape — binary images per file per column would
+    // bloat a text manifest; a sidecar parquet costs one small read per
+    // batch at point-lookup time and nothing otherwise). Each image is
+    // right-sized by bloom_sketch (the smallest fold within
+    // BloomBuf.PersistFpp, 64 bits to 128 KiB) and records its own size,
+    // so one sidecar may mix sizes. Crash before the manifest publish
+    // leaves an unreferenced sidecar — vacuum food.
     val bloomRef: Option[String] =
       if (bloomCols.isEmpty || staged.isEmpty) None
       else {

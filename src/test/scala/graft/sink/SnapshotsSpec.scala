@@ -1454,6 +1454,56 @@ class SnapshotsSpec extends SparkSpec
     assert(pruned.inputFiles.length == 1,
       s"bloom must separate interleaved files: ${pruned.inputFiles.length}")
     assert(pruned.filter(col("k") === 42L).count() == 1)
+    // each 100-key file persists a right-sized image: the smallest fold
+    // within BloomBuf.PersistFpp, 264 bytes (a fixed 2^20-bit image is
+    // 131,080)
+    import graft.functions.BloomBuf
+    def fpp(b: BloomBuf): Double = math.pow(b.fill, b.k)
+    val sidecars = new java.io.File(s"$root/blooms").listFiles()
+      .filterNot(_.getName.startsWith(".")).map(_.getPath).toSeq.sorted
+    val images = sidecars.map { sc =>
+      val rows = LocalParquet.read(spark, sc)
+      assert(rows.length == 1, s"$sc holds ${rows.length} images")
+      (sc, rows.head.getString(0), rows.head.getAs[Array[Byte]](2))
+    }
+    assert(images.length == 2)
+    images.foreach { case (_, rel, img) =>
+      val b = BloomBuf.fromBytes(img)
+      assert(img.length <= 264, s"$rel: ${img.length}-byte image for 100 keys")
+      assert(fpp(b) <= BloomBuf.PersistFpp, s"$rel: fpp ${fpp(b)}")
+      assert(b.bits == 64 || fpp(b.folded) > BloomBuf.PersistFpp,
+        s"$rel: ${b.bits} bits is not the smallest fold within the target")
+    }
+    // a full 2^20-bit image of the same keys (what fixed-size writers
+    // persisted) in one sidecar, right-sized in the other: both lookups
+    // prune exactly the files they pruned before
+    def lookup(key: Long): Set[String] = Snapshots.read(spark, root,
+      prune = Seq(Snapshots.StatRange("k", Some(key), Some(key))))
+      .inputFiles.toSet
+    val before = Seq(42L, 43L).map(lookup)
+    assert(before.forall(_.size == 1) && before.distinct.size == 2, before)
+    val (evensSidecar, evensRel, evensImg) =
+      images.find(i => before.head.head.endsWith(i._2)).get
+    val full = new BloomBuf(BloomBuf.DefaultBits, BloomBuf.DefaultK)
+    (0L until 200L by 2).foreach { v =>
+      val (h1, h2) = BloomBuf.hashes(v, org.apache.spark.sql.types.LongType)
+      full.add(h1, h2)
+    }
+    assert(full.compacted.toBytes.sameElements(evensImg),
+      "the persisted image is the fold of the full-size filter")
+    val legacy = java.nio.file.Files.createTempDirectory("snap_bloom_full")
+      .resolve("sidecar").toString
+    LocalParquet.write(Seq((evensRel, "k", full.toBytes))
+      .toDF("rel", "col", "filter"), legacy)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = new org.apache.hadoop.fs.Path(evensSidecar)
+    assert(fs.delete(target, false) && fs.rename(fs.listStatus(
+      new org.apache.hadoop.fs.Path(legacy)).head.getPath, target))
+    assert(LocalParquet.read(spark, evensSidecar).head
+      .getAs[Array[Byte]](2).length == 8 + BloomBuf.DefaultBits / 8)
+    assert(Seq(42L, 43L).map(lookup) == before,
+      "mixed image sizes must prune exactly as before")
     // a key beyond every file's range prunes everything (stat prune) and
     // the empty read still answers under the contract
     val absent = Snapshots.read(spark, root,
