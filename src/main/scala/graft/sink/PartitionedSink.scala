@@ -704,13 +704,12 @@ object PartitionedSink {
     val touched = touchedDf.collect()
 
     // survivors: rows of touched partitions whose key is not in the batch.
-    // Pruning via [[Snapshots.pruneToTouched]] — a per-column InSet
-    // prefilter partition-prunes the parquet scan at planning time, the
-    // broadcast semi join enforces the exact tuple set, and the plan
-    // stays small at ANY touched-partition count (a literal Or-chain
-    // would not). Persist so the partition census below and the rewrite
-    // share one base read.
-    val survivors = Snapshots.pruneToTouched(
+    // Pruning via [[pruneToTouched]] — a per-column InSet prefilter
+    // partition-prunes the parquet scan at planning time, the broadcast
+    // semi join enforces the exact tuple set, and the plan stays small at
+    // ANY touched-partition count (a literal Or-chain would not). Persist
+    // so the partition census below and the rewrite share one base read.
+    val survivors = pruneToTouched(
         base, touched.toSeq, touchedDf.schema, cfg.partitionFields)
       .join(broadcast(allKeys), keyFields.toSeq, "left_anti")
       .persist()
@@ -740,6 +739,43 @@ object PartitionedSink {
         new Path(root, PartitionCatalog.relDir(cfg.partitionFields, vals))))
       MergeStats(touched.length - emptied.length, emptied.length)
     } finally { survivors.unpersist(): Unit }
+  }
+
+  /** Prune `base` to rows whose partition values appear in `touched`,
+    * never via a literal OR-chain predicate (a CDC batch touching
+    * thousands of partitions would build a thousands-term Or tree that
+    * Catalyst constraint propagation and codegen degrade badly on). Two
+    * cooperating layers, each O(1)-ish in plan size:
+    *  - a coarse PER-COLUMN `isin` prefilter — one `InSet` node per
+    *    partition column (set-lookup codegen, no expression blowup) that
+    *    the file index evaluates at PLANNING time, so untouched
+    *    partitions' files are statically pruned from the scan;
+    *  - an exact BROADCAST SEMI JOIN on the full value tuples (null-safe
+    *    `<=>`, so a null partition value still prunes to ITS partition),
+    *    which removes the per-column filter's cross-column false
+    *    positives. */
+  private[sink] def pruneToTouched(
+      base: DataFrame, touched: Seq[org.apache.spark.sql.Row],
+      touchedSchema: org.apache.spark.sql.types.StructType,
+      partitionFields: Seq[String]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    // backtick-quote every resolution: Dataset#apply parses dotted names
+    // as nested-field access, and the sink admits partition fields
+    // containing dots (the qcol discipline)
+    def qname(n: String) = "`" + n.replace("`", "``") + "`"
+    val perCol = partitionFields.zipWithIndex.map { case (fn, i) =>
+      val vals = touched.map(_.get(i)).distinct
+      val nonNull = vals.filterNot(_ == null)
+      val in =
+        if (nonNull.isEmpty) lit(false)
+        else base(qname(fn)).isin(nonNull: _*)
+      if (vals.contains(null)) in || base(qname(fn)).isNull else in
+    }.reduce(_ && _)
+    val local = base.sparkSession.createDataFrame(
+      touched.asJava, touchedSchema)
+    val cond = partitionFields.map(fn => base(qname(fn)) <=> local(qname(fn)))
+      .reduce(_ && _)
+    base.filter(perCol).join(broadcast(local), cond, "left_semi")
   }
 
   /** T2 analogue (`_CDAPStageName` constant injection,

@@ -598,6 +598,15 @@ object Snapshots {
       top.bloomCols, top.constraints, top.renames)
   }
 
+  /** The resolved head of main, or of `branch` (which must exist). */
+  private def headOf(
+      f: FileSystem, qroot: Path, branch: Option[String]): Option[Resolved] =
+    branch match {
+      case None => mainPointer(f, qroot).map(resolve(f, qroot, _))
+      case Some(b) =>
+        Some(resolveIn(f, branchDir(qroot, b), branchHead(f, qroot, b)))
+    }
+
   /** The current snapshot id, if any write has published. */
   def currentSnapshot(spark: SparkSession, root: String): Option[Int] = {
     val (f, qroot) = FsOps.fs(spark, root)
@@ -1096,7 +1105,8 @@ object Snapshots {
       extraRemoves: Seq[String] = Seq.empty,
       branch: Option[String] = None,
       bloomColumns: Seq[String] = Seq.empty,
-      enforceConstraints: Boolean = true): Int = {
+      enforceConstraints: Boolean = true,
+      head: Option[Resolved] = None): Int = {
     require(partitionFields.nonEmpty, "snapshot datasets are partitioned")
     stageAs.foreach { n =>
       requireRefName("staged write", n)
@@ -1109,18 +1119,17 @@ object Snapshots {
     branch.foreach { b =>
       requireRefName("branch", b)
       require(stageAs.isEmpty && batchTag.isEmpty && deleteKeys.isEmpty &&
-        !dropDeletes && extraRemoves.isEmpty,
-        "branch writes are plain appends/overwrites — WAP, stream tags " +
-          "and merge-on-read publish against main")
+        !dropDeletes,
+        "branch writes are appends, overwrites and file rewrites — WAP, " +
+          "stream tags and merge-on-read publish against main")
     }
     val spark = batch.sparkSession
     val (f, qroot) = FsOps.fs(spark, root)
-    val cur = branch match {
-      case None => currentSnapshot(spark, root)
-      case Some(b) => Some(branchHead(f, qroot, b))
-    }
-    val msDir = branch.fold(snapshotsDir(qroot))(branchDir(qroot, _))
-    val prev = cur.map(resolveIn(f, msDir, _))
+    // a rewrite statement passes the head it discovered against, so a
+    // pointer that moved since surfaces as the commit race instead of
+    // publishing removes computed on an older state
+    val prev = head.orElse(headOf(f, qroot, branch))
+    val cur = prev.map(_.id)
     // canonicalize batch column CASING to the stored contract's (session
     // resolver — case-insensitive by default, like every analyzer
     // comparison): a batch column cased differently IS the contract
@@ -1208,7 +1217,7 @@ object Snapshots {
         .foreach(e => throw new IllegalStateException(
           s"dataset at $root holds files from an older partition spec " +
             s"(e.g. ${e.rel}) — run migrateSpec before partition-replacing " +
-            "writes (overwrite/merge/compact/fold)"))
+            "writes (overwrite/compact/fold)"))
     // schema-evolution gate BEFORE any file lands (the PartitionedSink
     // append/merge discipline): the batch either breaks the recorded
     // contract loudly with nothing written, or the recorded schema
@@ -1347,19 +1356,22 @@ object Snapshots {
         bloomCols.map(c =>
           c -> contract.fields.find(_.name == c).get.dataType))
     val stagedDirs = staged.map(parentDirOf).toSet
-    // partitions a merge touched but staged nothing back into: every row
+    // partitions a fold rewrote but staged nothing back into: every row
     // deleted — they must leave the manifest even with no replacement file
     val emptied = touchedDirs.map(_ -- stagedDirs).getOrElse(Set.empty)
     if (staged.isEmpty && emptied.isEmpty && deleteKeys.isEmpty &&
-      extraRemoves.isEmpty && modeLabel == "replace_where" &&
-      prev.flatMap(_.schema).contains(contract)) {
-      // an idempotent backfill re-run: the predicate matched nothing and
-      // the source was empty — publishing would burn a snapshot id to
-      // record a no-op, and "rebuild day X" MUST be re-runnable against
-      // an already-empty region (the replaceWhere contract). Gated on
-      // the contract being UNCHANGED: an empty batch that carries a
-      // WIDENING must not silently drop it — that shape keeps the loud
-      // empty-batch error below (widen via ALTER/addColumns instead).
+      extraRemoves.isEmpty && (modeLabel == "merge" ||
+        modeLabel == "replace_where" &&
+          prev.flatMap(_.schema).contains(contract))) {
+      // a statement that changes nothing: a merge whose batch only
+      // deletes absent keys, or an idempotent backfill re-run (the
+      // predicate matched nothing and the source was empty) — publishing
+      // would burn a snapshot id to record a no-op, and "rebuild day X"
+      // MUST be re-runnable against an already-empty region (the
+      // replaceWhere contract). A replaceWhere is gated on the contract
+      // being UNCHANGED: an empty batch that carries a WIDENING must not
+      // silently drop it — that shape keeps the loud empty-batch error
+      // below (widen via ALTER/addColumns instead).
       FsOps.deleteIfExists(f, staging)
       return cur.get
     }
@@ -1507,7 +1519,7 @@ object Snapshots {
             graft.schema.SchemaEvolution.validate(
               stored, df.schema, partitionFields, evolution))
         val rebase: Option[Rebase] =
-          if (branch.isDefined) None
+          if (branch.isDefined || ReadDependentModes(modeLabel)) None
           else if (mode == SnapAppend && extraRemoves.isEmpty && !dropDeletes)
             // METADATA-ONLY RETRY for a race-losing PURE APPEND (no
             // removes): its staged files are already in data/ and
@@ -1629,6 +1641,13 @@ object Snapshots {
     * those is a real write-write conflict whose resolution needs the
     * caller's intent. */
   private val RewriteRetryModes = Set("compact", "fold")
+
+  /** Mode labels whose added rows were decided against the state they
+    * read, so even a remove-free publish (a MERGE that only inserts, a
+    * replaceWhere that matched nothing) never takes the pure-append
+    * metadata retry: two MERGEs inserting one new key would both land,
+    * breaking the per-key uniqueness [[changes]] assumes. */
+  private val ReadDependentModes = Set("merge", "replace_where")
 
   /** Test-only interleave injection: consumed (reset to no-op) and invoked
     * by [[commit]] immediately before its next pointer flip — every
@@ -2032,25 +2051,25 @@ object Snapshots {
 
   /**
    * CDC MERGE (upsert + delete) published as a NEW SNAPSHOT —
-   * [[PartitionedSink.mergeUpsert]]'s copy-on-write-at-partition-
-   * granularity semantics made non-destructive: replaced partitions'
-   * files leave the live set but stay on disk, so the pre-merge state
-   * remains time-travelable (audit the table as of before any change
-   * batch) until [[expire]] reclaims it.
+   * [[PartitionedSink.mergeUpsert]]'s per-key semantics made
+   * non-destructive and file-bounded: the files holding a batch key are
+   * rewritten without it and leave the live set by name (they stay on
+   * disk, so the pre-merge state remains time-travelable until
+   * [[expire]] reclaims it); every other file rides through by
+   * reference, even in the partitions the merge touches.
    *
    * Semantics match the sink: per key, a non-delete row REPLACES the
    * stored row (inserting if absent; the replacement may land in a
    * different partition and the old copy leaves its old one), a
    * `deleteCol=true` row removes the key wherever it lives; batch keys
-   * must be unique (checked). Only partitions that can change are read —
-   * those receiving upserts plus those holding updated keys (one
-   * column-pruned key+partition scan) — via [[pruneToTouched]] (per-column
-   * InSet planning-time pruning + an exact broadcast semi join; plan size
-   * stays flat at any touched-partition count); update keys broadcast.
-   * The merged frame is evaluated ONCE (by the
-   * staging write): partitions whose every row disappeared are derived
-   * inside the write as touched-minus-staged, not pre-counted with a
-   * second scan. Returns the new snapshot id.
+   * must be unique (checked). The rewrite is [[rewriteMatching]], the
+   * core DELETE and UPDATE share: one [min, max] bound over the batch
+   * keys stat-prunes the candidates (when the dataset records stats or
+   * blooms for a key column), a semi join on the keys names the files
+   * holding one, an anti join drops the keys from them, and the upserts
+   * publish in the same snapshot. A batch that changes nothing (e.g.
+   * deletes of absent keys) publishes nothing. Returns the new snapshot
+   * id (the current one for a no-op).
    */
   def mergeUpsert(
       spark: SparkSession, root: String, updates: DataFrame,
@@ -2065,11 +2084,11 @@ object Snapshots {
       "partition fields cannot be merge keys (a key that IS the partition " +
         "value cannot move; route through a payload column instead)")
     // PIN the batch for the statement's lifetime: the dup-key guard, the
-    // touched-partition collect, and the staging write each execute the
-    // updates frame (a SQL MERGE arrives as source⋈target projections —
-    // re-deriving that join per action re-scans the table each time).
-    // O(batch) state, spilled past memory, dropped before returning —
-    // never a cross-run cache.
+    // key-range bound, the discovery join and the staging write each
+    // execute the updates frame (a SQL MERGE arrives as source⋈target
+    // projections — re-deriving that join per action re-scans the table
+    // each time). O(batch) state, spilled past memory, dropped before
+    // returning — never a cross-run cache.
     val pinned = updates.persist()
     try {
       val dupKeys = pinned.groupBy(keyFields.map(qc): _*)
@@ -2081,116 +2100,21 @@ object Snapshots {
       val upserts = deleteCol
         .foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
       val allKeys = pinned.select(keyFields.map(qc): _*).distinct()
-      val pCols = partitionFields.map(qc)
-      // with `branch`, the whole merge runs against the BRANCH state and
-      // publishes to the branch head — CDC on the audit branch (the
-      // copy-on-write lane composes with branches because it adds no
-      // equality-delete entries, so fastForward stays metadata-only; the
-      // O(batch) merge-on-read lane remains main-only)
-      val base = branch.fold(read(spark, root))(b => readBranch(spark, root, b))
-      // the touched-partition PROBE only needs files whose key ranges can
-      // intersect the batch's keys: one metadata-cost [min,max] bound over
-      // the pinned batch stat-prunes the probe scan (a file provably
-      // outside every batch key range contributes nothing to the
-      // semi-join, so pruning it is exact — its partition can still enter
-      // `touched` through the upserts' own partition values). The
-      // SURVIVOR scan below deliberately stays UNPRUNED: the overwrite
-      // restages EVERY row of a touched partition, including rows in
-      // files no batch key touches. Branch reads keep the full scan (the
-      // branch lane takes no prune parameter).
-      val probeBase = branch match {
-        case None =>
-          // gated on the dataset actually RECORDING stats or blooms for a
-          // key column — deriving bounds against a stat-less manifest
-          // would pay the (small) batch aggregate and prune nothing
-          val (f, qroot) = FsOps.fs(spark, root)
-          val recorded = currentSnapshot(spark, root)
-            .map(readSnapshotFile(f, qroot, _))
-            .map(h => (h.statsCols ++ h.bloomCols).toSet)
-            .getOrElse(Set.empty)
-          if (keyFields.exists(recorded)) read(spark, root,
-            prune = minMaxStatRanges(allKeys, keyFields.map(k => k -> k)))
-          else base
-        case Some(_) => base
-      }
-      val touchedDf = upserts.select(pCols: _*)
-        .unionByName(
-          probeBase.join(broadcast(allKeys), keyFields.toSeq, "left_semi")
-            .select(pCols: _*))
-        .distinct()
-      // bounded by partition cardinality — the manifest write needs these
-      // values collected anyway to derive the touched directory set
-      val touched = touchedDf.collect()
-      // a batch that changes nothing (e.g. deletes of absent keys) is a
-      // NO-OP — don't burn a snapshot id on an identical manifest
-      if (touched.isEmpty)
-        return branch match {
-          case None => currentSnapshot(spark, root).getOrElse(
-            throw new IllegalStateException(
-              s"no snapshot published under $root"))
-          case Some(b) =>
-            val (f, qroot) = FsOps.fs(spark, root)
-            branchHead(f, qroot, b)
-        }
-      val survivors =
-        pruneToTouched(base, touched.toSeq, touchedDf.schema, partitionFields)
-          .join(broadcast(allKeys), keyFields.toSeq, "left_anti")
-      val out = evolution match {
-        case graft.schema.SchemaEvolution.Widen =>
-          survivors.unionByName(upserts, allowMissingColumns = true)
-        case _ => survivors.unionByName(upserts)
-      }
-      writeInternal(out, root, partitionFields, SnapOverwritePartitions,
-        "merge", evolution,
-        touchedDirs = Some(
-          touched.map(r => PartitionCatalog.relDir(partitionFields,
-            // null stays null: it maps to __HIVE_DEFAULT_PARTITION__
-            r.toSeq.map(v => Option(v).map(_.toString).orNull))).toSet),
-        branch = branch)
+      // update keys broadcast: CDC batches are small by definition
+      rewriteMatching(spark, root, partitionFields, "merge", 1,
+        deriveFor = (_, statsCols, bloomCols) => minMaxStatRanges(allKeys,
+          keyFields.filter((statsCols ++ bloomCols).contains).map(k => k -> k)),
+        discover = _.join(broadcast(allKeys), keyFields, "left_semi"),
+        transform = _.join(broadcast(allKeys), keyFields, "left_anti"),
+        adds = Some(upserts), evolution = evolution, branch = branch).get
     } finally pinned.unpersist(): Unit
-  }
-
-  /** Prune `base` to rows whose partition values appear in `touched`,
-    * never via a literal OR-chain predicate (a CDC batch touching
-    * thousands of partitions would build a thousands-term Or tree that
-    * Catalyst constraint propagation and codegen degrade badly on). Two
-    * cooperating layers, each O(1)-ish in plan size:
-    *  - a coarse PER-COLUMN `isin` prefilter — one `InSet` node per
-    *    partition column (set-lookup codegen, no expression blowup) that
-    *    the file index evaluates at PLANNING time, so untouched
-    *    partitions' files are statically pruned from the scan;
-    *  - an exact BROADCAST SEMI JOIN on the full value tuples (null-safe
-    *    `<=>`, so a null partition value still prunes to ITS partition),
-    *    which removes the per-column filter's cross-column false
-    *    positives. */
-  private[sink] def pruneToTouched(
-      base: DataFrame, touched: Seq[Row], touchedSchema: StructType,
-      partitionFields: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
-    import scala.jdk.CollectionConverters._
-    // backtick-quote every resolution (qname): Dataset#apply parses
-    // dotted names as nested-field access, and the sink surface admits
-    // partition fields containing dots (its qcol discipline)
-    val perCol = partitionFields.zipWithIndex.map { case (fn, i) =>
-      val vals = touched.map(_.get(i)).distinct
-      val nonNull = vals.filterNot(_ == null)
-      val in =
-        if (nonNull.isEmpty) lit(false)
-        else base(qname(fn)).isin(nonNull: _*)
-      if (vals.contains(null)) in || base(qname(fn)).isNull else in
-    }.reduce(_ && _)
-    val local = base.sparkSession.createDataFrame(
-      touched.asJava, touchedSchema)
-    val cond = partitionFields.map(fn => base(qname(fn)) <=> local(qname(fn)))
-      .reduce(_ && _)
-    base.filter(perCol).join(broadcast(local), cond, "left_semi")
   }
 
   /**
    * MERGE-ON-READ CDC (Iceberg-v2-style equality deletes): the same
    * per-key semantics as [[mergeUpsert]] — a non-delete row replaces the
    * stored row wherever it lives, a `deleteCol=true` row removes the key —
-   * but the WRITE is O(batch), not O(touched partitions): upsert rows
+   * but the WRITE is O(batch), not O(touched files): upsert rows
    * land as ordinary data files (seq = the new snapshot id) and ONE small
    * equality-delete file records every key the batch touches; no base
    * data is read, located, or rewritten. [[read]] suppresses matching
@@ -2201,9 +2125,10 @@ object Snapshots {
    * cadence to fold them back into plain data files.
    *
    * This is the CDC lane to choose when change batches are small and
-   * frequent relative to partition size (the 100 TB streaming-CDC shape);
-   * [[mergeUpsert]]'s copy-on-write remains better for rare, large
-   * batches that rewrite most of what they touch.
+   * frequent relative to file size (the 100 TB streaming-CDC shape):
+   * [[mergeUpsert]]'s copy-on-write rewrites every file holding a batch
+   * key, and remains better for rare, large batches whose reads must
+   * stay join-free.
    *
    * Returns the published snapshot id (the current one unchanged for an
    * empty batch).
@@ -2474,14 +2399,32 @@ object Snapshots {
       condition: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       targetFilesPerPartition: Int = 1): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val assign = updateAssignments(spark, root, assignments)
+    rewriteWhere(spark, root, partitionFields, condition, "update_where",
+      targetFilesPerPartition,
+      rows =>
+        rows.select(assign(rows.schema, coalesce(condition, lit(false))): _*))
+  }
+
+  /** The UPDATE assignments shared by [[updateWhere]] and
+    * [[updateWhereIn]]: validated UP FRONT against the recorded contract
+    * (the transform only runs when a file matches, and a typo'd column
+    * must not report the same success-shaped None as a legitimate
+    * no-match; legacy schema-less datasets check against the rows), then
+    * ONE projection over the rows' schema — every right-hand side sees
+    * the pre-update row, casts to the column's type, and applies only
+    * where `matched` holds (the condition never re-evaluates against an
+    * already-updated column). */
+  private def updateAssignments(
+      spark: SparkSession, root: String,
+      assignments: Seq[(String, org.apache.spark.sql.Column)])
+      : (StructType, org.apache.spark.sql.Column) =>
+        Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.when
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     require(assignments.map(_._1).distinct.length == assignments.length,
       s"duplicate assignment targets: ${assignments.map(_._1).mkString(",")}")
-    // validate targets against the recorded contract UP FRONT: the
-    // transform only runs when a file matches, and a typo'd column must
-    // not report the same success-shaped None as a legitimate no-match
-    // (legacy schema-less datasets keep the in-transform check)
     recordedSchemaOpt(spark, root).foreach(sc =>
       assignments.foreach { case (c, _) =>
         require(sc.fieldNames.contains(c),
@@ -2489,23 +2432,19 @@ object Snapshots {
             s"has ${sc.fieldNames.mkString(", ")}")
       })
     val byCol = assignments.toMap
-    rewriteWhere(spark, root, partitionFields, condition, "update_where",
-      targetFilesPerPartition, { rows =>
-        assignments.foreach { case (c, _) =>
-          require(rows.columns.contains(c),
-            s"unknown UPDATE target column '$c'") }
-        val matched = coalesce(condition, lit(false))
-        // ONE projection: every RHS sees the pre-update row, and the
-        // condition never re-evaluates against an already-updated column
-        rows.select(rows.columns.toSeq.map { c =>
-          byCol.get(c) match {
-            case Some(e) =>
-              when(matched, e.cast(rows.schema(c).dataType))
-                .otherwise(qc(c)).as(c)
-            case None => qc(c)
-          }
-        }: _*)
-      })
+    (schema, matched) => {
+      assignments.foreach { case (c, _) =>
+        require(schema.fieldNames.contains(c),
+          s"unknown UPDATE target column '$c'") }
+      schema.fields.toSeq.map { fd =>
+        byCol.get(fd.name) match {
+          case Some(e) =>
+            when(matched, e.cast(fd.dataType)).otherwise(qc(fd.name))
+              .as(fd.name)
+          case None => qc(fd.name)
+        }
+      }
+    }
   }
 
   /**
@@ -2569,17 +2508,8 @@ object Snapshots {
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       targetFilesPerPartition: Int = 1,
       keysNormalized: Boolean = false): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    require(assignments.map(_._1).distinct.length == assignments.length,
-      s"duplicate assignment targets: ${assignments.map(_._1).mkString(",")}")
-    recordedSchemaOpt(spark, root).foreach(sc =>
-      assignments.foreach { case (c, _) =>
-        require(sc.fieldNames.contains(c),
-          s"unknown UPDATE target column '$c' — the recorded contract " +
-            s"has ${sc.fieldNames.mkString(", ")}")
-      })
-    val byCol = assignments.toMap
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val assign = updateAssignments(spark, root, assignments)
     rewriteWhereInSet(spark, root, partitionFields, keyColumn, keys, rest,
       "update_where", targetFilesPerPartition, keysNormalized,
       transform = (keySet, rows) => {
@@ -2591,14 +2521,7 @@ object Snapshots {
           rows(qname(keyColumn)) === marked("__graft_in_key"), "left_outer")
         val matched = rest.map(c => coalesce(c, lit(false)))
           .getOrElse(lit(true)) && qc("__graft_in_hit").isNotNull
-        joined.select(rows.columns.toSeq.map { c =>
-          byCol.get(c) match {
-            case Some(e) =>
-              when(matched, e.cast(rows.schema(c).dataType))
-                .otherwise(qc(c)).as(c)
-            case None => qc(c)
-          }
-        }: _*)
+        joined.select(assign(rows.schema, matched): _*)
       })
   }
 
@@ -2676,7 +2599,7 @@ object Snapshots {
         .unionByName(guarded, allowMissingColumns = true)
     writeInternal(out, root, partitionFields, SnapAppend,
       "replace_where", graft.schema.SchemaEvolution.Widen,
-      extraRemoves = rewrite.map(_.rel))
+      extraRemoves = rewrite.map(_.rel), head = Some(m))
   }
 
   /** Per-column [min, max] [[StatRange]]s over a frame, rendered
@@ -2778,40 +2701,57 @@ object Snapshots {
       // delete survivors are unchanged history (see rewriteWhereInSet)
       enforceConstraints = modeLabel != "delete_where")
 
-  /** The generalized rewrite core behind [[rewriteWhere]] and
-    * [[deleteWhereIn]]: `deriveFor` yields conservative prune ranges
-    * given (recorded schema, statsCols, bloomCols); `discover` narrows
-    * the raw candidate scan to rows that MATCH (it may filter or
-    * semi-join — the scan arrives with `__graft_file` already
-    * materialized scan-side, since `input_file_name()` is unreliable
-    * after any shuffle); `transform` maps each rewriting file's rows to
-    * their replacement. */
+  /** The file-bounded rewrite core behind every row-level statement
+    * ([[rewriteWhere]], [[rewriteWhereInSet]], [[mergeUpsert]]):
+    * `deriveFor` yields conservative prune ranges given (recorded
+    * schema, statsCols, bloomCols); `discover` narrows the raw candidate
+    * scan to rows that MATCH (it may filter or semi-join — the scan
+    * arrives with `__graft_file` already materialized scan-side, since
+    * `input_file_name()` is unreliable after any shuffle); `transform`
+    * maps each rewriting file's rows to their replacement. `adds` are
+    * new rows published in the same snapshot (a MERGE's upserts, gated by
+    * `evolution`), split per partition with the restaged rows. Returns
+    * None when nothing matched and there is nothing to add. */
   private def rewriteMatching(
       spark: SparkSession, root: String, partitionFields: Seq[String],
       modeLabel: String, targetFilesPerPartition: Int,
       deriveFor: (StructType, Seq[String], Seq[String]) => Seq[StatRange],
       discover: DataFrame => DataFrame,
       transform: DataFrame => DataFrame,
-      enforceConstraints: Boolean = true): Option[Int] = {
+      enforceConstraints: Boolean = true,
+      adds: Option[DataFrame] = None,
+      evolution: graft.schema.SchemaEvolution.Policy =
+        graft.schema.SchemaEvolution.Widen,
+      branch: Option[String] = None): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
     val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
+    val m = headOf(f, qroot, branch).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, id)
     m.partitionCols.headOption.foreach(_ => require(
       partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
         s"cannot rewrite under ${partitionFields.mkString(",")}"))
-    if (m.files.isEmpty) return None
-    val rewrite = discoverRewriteSet(spark, qroot, m, deriveFor, discover)
-    if (rewrite.isEmpty) return None
-    val out = transform(scanWithDeletes(spark, qroot, m, rewrite))
+    val rewrite =
+      if (m.files.isEmpty) Seq.empty
+      else discoverRewriteSet(spark, qroot, m, deriveFor, discover)
+    if (rewrite.isEmpty && adds.isEmpty) return None
+    val restaged =
+      if (rewrite.nonEmpty)
+        Some(transform(scanWithDeletes(spark, qroot, m, rewrite)))
+      // nothing to restage: an empty frame of the (read-side, nullable)
+      // contract keeps the added rows' union shape without a scan
+      else m.schema.map(sc => spark.createDataFrame(
+        new java.util.ArrayList[Row](),
+        StructType(sc.fields.map(_.copy(nullable = true)))))
+    val out = (restaged ++ adds).reduce((l, r) =>
+      l.unionByName(r,
+        allowMissingColumns = evolution == graft.schema.SchemaEvolution.Widen))
     Some(writeInternal(
       splitPerPartition(out, partitionFields, targetFilesPerPartition),
-      root, partitionFields, SnapAppend, modeLabel,
-      graft.schema.SchemaEvolution.Widen,
+      root, partitionFields, SnapAppend, modeLabel, evolution,
       extraRemoves = rewrite.map(_.rel),
-      enforceConstraints = enforceConstraints))
+      branch = branch,
+      enforceConstraints = enforceConstraints, head = Some(m)))
   }
 
   /** The candidate-narrowing + exact-discovery front half EVERY
@@ -3758,8 +3698,8 @@ object Snapshots {
    * Continuous CDC application: every micro-batch of change rows lands
    * through [[mergeDeltas]] — merge-on-read, so each batch costs O(batch)
    * regardless of how big the dataset has grown (the 100 TB streaming-CDC
-   * shape; the copy-on-write alternative rewrites touched partitions per
-   * batch). Exactly-once over at-least-once delivery by the same
+   * shape; the copy-on-write alternative rewrites every file holding a
+   * batch key). Exactly-once over at-least-once delivery by the same
    * content-derived replay tag as [[snapshotStream]] — safe across
    * checkpoint-lineage restarts. Pair with [[maintain]] (fold + compact +
    * retention) on a schedule to bound read-side delete-join work.

@@ -781,15 +781,9 @@ case class SnapshotMergeCommand(
     val src = GraftSqlBridge.ofRows(session, source)
     def q(c: String) = col(s"`${c.replace("`", "``")}`")
     if (deleteOnly) {
-      // the upsert lane's routing select needs the partition columns
-      // PRESENT on the updates frame even when every row is a delete
-      // (a delete removes the key wherever it lives — the values are
-      // never read); typed nulls satisfy the contract
-      val schema = Snapshots.tableSchema(session, root)
-      val updates = fields.foldLeft(
-        src.select(keys.map(q): _*).distinct()) { (df, p) =>
-          df.withColumn(p, lit(null).cast(schema(p).dataType))
-        }.withColumn("__graft_merge_del", lit(true))
+      // a delete removes the key wherever it lives: the keys alone
+      val updates = src.select(keys.map(q): _*).distinct()
+        .withColumn("__graft_merge_del", lit(true))
       Snapshots.mergeUpsert(session, root, updates, fields, keys,
         deleteCol = Some("__graft_merge_del")): Unit
     } else {

@@ -627,15 +627,13 @@ class SnapshotsSpec extends SparkSpec
       .map(_.getLong(0)).toSet == Set(1L))
   }
 
-  test("mergeUpsert key-range probe prune: files outside the batch's key range still restage in touched partitions") {
+  test("mergeUpsert key-range prune: files outside the batch's key range keep their rows") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snap_mprune").toString
     // partition a holds TWO files with DISJOINT key ranges (separate
     // appends, per-file k stats recorded): the batch touches only the
-    // second file's range, so the probe scan stat-prunes the first —
-    // which must NOT leak into the survivor rewrite (the overwrite
-    // restages every row of a touched partition, including rows in
-    // files no batch key can reach)
+    // second file's range, so discovery stat-prunes the first — whose
+    // rows must still be live after the merge
     Snapshots.write(Seq((1L, "a", 10.0), (2L, "a", 20.0))
       .toDF("k", "p", "v").coalesce(1), root, Seq("p"),
       statsColumns = Seq("k"))
@@ -650,6 +648,69 @@ class SnapshotsSpec extends SparkSpec
     // untouched partition b rides through by reference (same file)
     assert(Snapshots.read(spark, root).inputFiles.count(_.contains("p=b"))
       == 1)
+  }
+
+  test("mergeUpsert rewrites files, not partitions: the untouched file of a touched partition stays live by name") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_mfile").toString
+    Snapshots.write(Seq((1L, "a", 10.0), (2L, "a", 20.0))
+      .toDF("k", "p", "v").coalesce(1), root, Seq("p"))
+    Snapshots.write(Seq((3L, "a", 30.0), (4L, "a", 40.0))
+      .toDF("k", "p", "v").coalesce(1), root, Seq("p"), SnapAppend)
+    def files(id: Int): Set[String] =
+      Snapshots.read(spark, root, asOf = Some(id)).inputFiles
+        .map(_.split('/').last).toSet
+    val untouched = files(1)
+    val touched = files(2) -- untouched
+    assert(untouched.size == 1 && touched.size == 1)
+    // replaces k=3 and inserts k=5, both in partition a
+    assert(Snapshots.mergeUpsert(spark, root,
+      Seq((3L, "a", 33.0), (5L, "a", 50.0)).toDF("k", "p", "v"),
+      Seq("p"), Seq("k")) == 3)
+    assert(manifestLines(root, 3, "remove=").map(_.split('/').last) ==
+      touched.toSeq, "exactly the file holding a batch key is removed")
+    val live = files(3)
+    assert(untouched.subsetOf(live) && live.intersect(touched).isEmpty,
+      s"the file holding no batch key must stay live by name: $live")
+    val m = Snapshots.read(spark, root).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(m == Map(1L -> 10.0, 2L -> 20.0, 3L -> 33.0, 4L -> 40.0,
+      5L -> 50.0), m.toString)
+  }
+
+  test("a MERGE that only inserts never takes the blind-append retry: losing to a winner that inserted the same key aborts") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_mrace").toString
+    Snapshots.write(Seq((1L, "a", 10.0)).toDF("k", "p", "v"), root, Seq("p"))
+    // the winner inserts key 7 between the loser's discovery (no file
+    // holds 7, so the loser's publish removes nothing) and its flip
+    Snapshots.prePublishInterleave = () =>
+      assert(Snapshots.mergeUpsert(spark, root,
+        Seq((7L, "b", 71.0)).toDF("k", "p", "v"), Seq("p"), Seq("k")) == 2)
+    intercept[java.util.ConcurrentModificationException] {
+      Snapshots.mergeUpsert(spark, root,
+        Seq((7L, "b", 70.0)).toDF("k", "p", "v"), Seq("p"), Seq("k"))
+    }
+    assert(Snapshots.read(spark, root).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted ==
+      Seq(1L -> 10.0, 7L -> 71.0), "key 7 must appear once, the winner's")
+  }
+
+  test("a replaceWhere that matched nothing never takes the blind-append retry: losing to a winner's replacement aborts") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_rwrace").toString
+    Snapshots.write(Seq((1L, "a", 10.0)).toDF("k", "p", "v"), root, Seq("p"))
+    // both statements replace the empty region p = c: serialized, the
+    // second would remove the first's row
+    Snapshots.prePublishInterleave = () =>
+      Snapshots.replaceWhere(Seq((8L, "c", 81.0)).toDF("k", "p", "v"),
+        root, Seq("p"), col("p") === "c"): Unit
+    intercept[java.util.ConcurrentModificationException] {
+      Snapshots.replaceWhere(Seq((9L, "c", 90.0)).toDF("k", "p", "v"),
+        root, Seq("p"), col("p") === "c")
+    }
+    assert(Snapshots.read(spark, root).filter(col("p") === "c")
+      .select("k").collect().map(_.getLong(0)).toSeq == Seq(8L))
   }
 
   test("a commit retry past an interleaved float→double widening aborts: restaged stat strings rendered the BASE type") {
@@ -1832,7 +1893,7 @@ class SnapshotsSpec extends SparkSpec
       .toDF("k", "p", "v")
     val touched = (0 until 150).map(i => Row(s"p$i"))
     val schema = StructType(Seq(StructField("p", StringType)))
-    val pruned = Snapshots.pruneToTouched(base, touched, schema, Seq("p"))
+    val pruned = PartitionedSink.pruneToTouched(base, touched, schema, Seq("p"))
     val orCount = pruned.queryExecution.optimizedPlan.collect {
       case n => n.expressions.map(_.collect { case _: Or => 1 }.sum).sum
     }.sum
@@ -2907,6 +2968,44 @@ class SnapshotsSpec extends SparkSpec
       Snapshots.evolvePartitioning(spark, root,
         Seq("o_orderpriority", "o_orderstatus"))
     }
+  }
+
+  test("mergeUpsert on an era-mixed dataset removes files by name, no migrateSpec needed") {
+    val root = java.nio.file.Files.createTempDirectory("snap_evmrg").toString
+    val base = graft.Tables(spark, sf0001, "orders")
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderpriority")
+    val spec = Seq("o_orderpriority", "o_orderstatus")
+    Snapshots.write(
+      base.filter(col("o_orderkey") % 2 === 0).coalesce(1), root,
+      Seq("o_orderpriority"))
+    Snapshots.evolvePartitioning(spark, root, spec)
+    Snapshots.write(
+      base.filter(col("o_orderkey") % 2 === 1).coalesce(1), root, spec)
+    // the batch replaces keys of BOTH eras and inserts new ones
+    val k = col("o_orderkey")
+    val updates = base.filter(k % 10 === 0 || k % 10 === 1)
+      .withColumn("o_totalprice", lit(1.0))
+      .unionByName(base.filter(k % 100 === 3).withColumn("o_orderkey", -k))
+    assert(Snapshots.mergeUpsert(spark, root, updates, spec,
+      Seq("o_orderkey")) == 4)
+    val removes = manifestLines(root, 4, "remove=")
+    assert(removes.exists(_.count(_ == '/') == 1) &&
+      removes.exists(_.count(_ == '/') == 2),
+      s"files of both eras must be removed by name: $removes")
+    assert(manifestLines(root, 4, "add=").forall(_.count(_ == '/') == 2),
+      "the rewrite lands under the current spec")
+    val price = Snapshots.read(spark, root)
+      .select("o_orderkey", "o_totalprice").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = base.select("o_orderkey", "o_totalprice").collect()
+      .map { r =>
+        val key = r.getLong(0)
+        key -> (if (key % 10 == 0 || key % 10 == 1) 1.0 else r.getDouble(1))
+      }.toMap ++ base.filter(k % 100 === 3)
+      .select((-k).as("o_orderkey"), col("o_totalprice")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1))
+    assert(price == want)
   }
 
   test("equality deletes apply across partition-spec eras and through migration") {
