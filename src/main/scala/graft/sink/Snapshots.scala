@@ -520,66 +520,46 @@ object Snapshots {
     }
   }
 
-  /** Read manifest `s<id>` from an explicit manifests directory — the
-    * main `snapshots/` tree or a `branches/<name>/` tree ([[createBranch]];
+  private type ManifestCache = scala.collection.mutable.Map[Int, RawManifest]
+
+  /** Read manifest `s<id>` from a manifests directory — the main
+    * `snapshots/` tree or a `branches/<name>/` tree ([[createBranch]];
     * branch chains are self-contained because the fork manifest is FULL,
-    * so resolution never crosses namespaces). */
-  private def readSnapshotFileIn(
-      f: FileSystem, msDir: Path, id: Int): RawManifest = {
-    val p = new Path(msDir, s"s$id")
-    if (!f.exists(p))
-      throw new IllegalStateException(
-        s"snapshot s$id does not exist under $msDir — never written, or " +
-          "expired by Snapshots.expire (time travel only reaches retained " +
-          "snapshots)")
-    val in = f.open(p)
-    val text =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    parseManifest(id, text)
-  }
-
+    * so resolution never crosses namespaces) — through `cache` when the
+    * caller shares one across resolutions (the default is a fresh one). */
   private def readSnapshotFile(
-      f: FileSystem, root: Path, id: Int): RawManifest =
-    readSnapshotFileIn(f, snapshotsDir(root), id)
-
-  /** Apply the delta chain: walk `parent` pointers to the nearest full
-    * manifest (≤ [[RebaseEvery]] hops by construction), then replay
-    * removes/adds oldest-first. Metadata comes from the REQUESTED
-    * manifest — each snapshot carries its own schema/mode. */
-  private def resolve(
-      f: FileSystem, root: Path, id: Int,
-      cache: scala.collection.mutable.Map[Int, RawManifest] =
-        scala.collection.mutable.Map.empty): Resolved =
-    resolveIn(f, snapshotsDir(root), id, cache)
-
-  private def resolveIn(
       f: FileSystem, msDir: Path, id: Int,
-      cache: scala.collection.mutable.Map[Int, RawManifest] =
-        scala.collection.mutable.Map.empty): Resolved =
-    resolveFromIn(f, msDir,
-      cache.getOrElseUpdate(id, readSnapshotFileIn(f, msDir, id)), cache)
+      cache: ManifestCache = scala.collection.mutable.Map.empty): RawManifest =
+    cache.getOrElseUpdate(id, {
+      val p = new Path(msDir, s"s$id")
+      if (!f.exists(p))
+        throw new IllegalStateException(
+          s"snapshot s$id does not exist under $msDir — never written, or " +
+            "expired by Snapshots.expire (time travel only reaches retained " +
+            "snapshots)")
+      val in = f.open(p)
+      val text =
+        try new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      parseManifest(id, text)
+    })
 
-  /** [[resolve]] with an explicit head manifest — the head need not live
-    * under `snapshots/` (a STAGED write's manifest resolves through its
-    * committed parent chain exactly like a published one). */
+  /** Apply the delta chain below `head`: walk `parent` pointers through
+    * `msDir` to the nearest full manifest (≤ [[RebaseEvery]] hops by
+    * construction), then replay removes/adds oldest-first. Metadata comes
+    * from `head` — each snapshot carries its own schema/mode. The head
+    * need not live in `msDir` (a STAGED write's manifest resolves through
+    * its committed parent chain exactly like a published one). */
   private def resolveFrom(
-      f: FileSystem, root: Path, head: RawManifest,
-      cache: scala.collection.mutable.Map[Int, RawManifest] =
-        scala.collection.mutable.Map.empty): Resolved =
-    resolveFromIn(f, snapshotsDir(root), head, cache)
-
-  private def resolveFromIn(
       f: FileSystem, msDir: Path, head: RawManifest,
-      cache: scala.collection.mutable.Map[Int, RawManifest] =
-        scala.collection.mutable.Map.empty): Resolved = {
-    def raw(i: Int) = cache.getOrElseUpdate(i, readSnapshotFileIn(f, msDir, i))
+      cache: ManifestCache = scala.collection.mutable.Map.empty): Resolved = {
     var chain = List(head)
     while (chain.head.parent.isDefined) {
       val p = chain.head.parent.get
       require(p < chain.head.id,
         s"corrupt manifest chain: s${chain.head.id} points at s$p")
-      chain = raw(p) :: chain
+      chain = readSnapshotFile(f, msDir, p, cache) :: chain
     }
     val top = chain.last
     val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
@@ -598,14 +578,56 @@ object Snapshots {
       top.bloomCols, top.constraints, top.renames)
   }
 
-  /** The resolved head of main, or of `branch` (which must exist). */
+  /** [[resolveFrom]] manifest `s<id>` of `msDir`. */
+  private def resolve(
+      f: FileSystem, msDir: Path, id: Int,
+      cache: ManifestCache = scala.collection.mutable.Map.empty): Resolved =
+    resolveFrom(f, msDir, readSnapshotFile(f, msDir, id, cache), cache)
+
+  /** How an operation that needs a published snapshot fails on a dataset
+    * with none; `why` names the operation's remedy. */
+  private def noSnapshot(root: String, why: String = ""): Nothing =
+    throw new IllegalStateException(s"no snapshot published under $root$why")
+
+  /** The resolved head of main, or of `branch` (which must exist) — one
+    * pointer read, one chain walk; None when main has published nothing. */
   private def headOf(
-      f: FileSystem, qroot: Path, branch: Option[String]): Option[Resolved] =
+      f: FileSystem, qroot: Path,
+      branch: Option[String] = None): Option[Resolved] =
     branch match {
-      case None => mainPointer(f, qroot).map(resolve(f, qroot, _))
+      case None => mainPointer(f, qroot).map(resolve(f, snapshotsDir(qroot), _))
       case Some(b) =>
-        Some(resolveIn(f, branchDir(qroot, b), branchHead(f, qroot, b)))
+        Some(resolve(f, branchDir(qroot, b), branchHead(f, qroot, b)))
     }
+
+  /** The snapshot id an operation works on — retained snapshot `asOf`, or
+    * main's current one through ONE pointer read — with the dataset's
+    * filesystem and qualified root. For operations that read one manifest
+    * or resolve a snapshot other than the head. */
+  private def headId(
+      spark: SparkSession, root: String, why: String = "",
+      asOf: Option[Int] = None): (FileSystem, Path, Int) = {
+    val (f, qroot) = FsOps.fs(spark, root)
+    (f, qroot,
+      asOf.orElse(mainPointer(f, qroot)).getOrElse(noSnapshot(root, why)))
+  }
+
+  /** THE snapshot resolver of every operation: the dataset's filesystem,
+    * its qualified root, and the snapshot resolved through one pointer
+    * read and one chain walk — main's head, `branch`'s head, or retained
+    * snapshot `asOf` (no pointer read). An operation that publishes hands
+    * this head down to [[commit]], so a pointer that moved after the read
+    * surfaces as the commit race (rebased or refused per lane) — never as
+    * removes computed on one head and published against another. */
+  private def resolveHead(
+      spark: SparkSession, root: String, why: String = "",
+      asOf: Option[Int] = None,
+      branch: Option[String] = None): (FileSystem, Path, Resolved) = {
+    val (f, qroot) = FsOps.fs(spark, root)
+    val head = asOf.fold(headOf(f, qroot, branch))(id =>
+      Some(resolve(f, snapshotsDir(qroot), id)))
+    (f, qroot, head.getOrElse(noSnapshot(root, why)))
+  }
 
   /** The current snapshot id, if any write has published. */
   def currentSnapshot(spark: SparkSession, root: String): Option[Int] = {
@@ -1085,15 +1107,23 @@ object Snapshots {
       statsColumns: Seq[String] = Seq.empty,
       format: Option[SinkFormat] = None, codec: Option[String] = None,
       batchTag: Option[String] = None,
-      bloomColumns: Seq[String] = Seq.empty): Int =
+      bloomColumns: Seq[String] = Seq.empty): Int = {
+    val (f, qroot) = FsOps.fs(df.sparkSession, root)
     writeInternal(df, root, partitionFields, mode, mode.name, evolution,
-      touchedDirs = None, batchTag = batchTag, statsColumns = statsColumns,
+      headOf(f, qroot), batchTag = batchTag, statsColumns = statsColumns,
       format = format, codec = codec, bloomColumns = bloomColumns)
+  }
 
+  /** The staging-and-publish step every data-writing lane shares. `prev`
+    * is the head the caller read (None on a first write): the batch is
+    * validated against it and the publish is rendered onto it, so a
+    * pointer that moved since the caller's read surfaces as the commit
+    * race — this step never reads the pointer itself. */
   private def writeInternal(
       batch: DataFrame, root: String, partitionFields: Seq[String],
       mode: SnapshotMode, modeLabel: String,
       evolution: graft.schema.SchemaEvolution.Policy,
+      prev: Option[Resolved],
       touchedDirs: Option[Set[String]] = None,
       batchTag: Option[String] = None,
       statsColumns: Seq[String] = Seq.empty,
@@ -1105,8 +1135,7 @@ object Snapshots {
       extraRemoves: Seq[String] = Seq.empty,
       branch: Option[String] = None,
       bloomColumns: Seq[String] = Seq.empty,
-      enforceConstraints: Boolean = true,
-      head: Option[Resolved] = None): Int = {
+      enforceConstraints: Boolean = true): Int = {
     require(partitionFields.nonEmpty, "snapshot datasets are partitioned")
     stageAs.foreach { n =>
       requireRefName("staged write", n)
@@ -1125,10 +1154,6 @@ object Snapshots {
     }
     val spark = batch.sparkSession
     val (f, qroot) = FsOps.fs(spark, root)
-    // a rewrite statement passes the head it discovered against, so a
-    // pointer that moved since surfaces as the commit race instead of
-    // publishing removes computed on an older state
-    val prev = head.orElse(headOf(f, qroot, branch))
     val cur = prev.map(_.id)
     // canonicalize batch column CASING to the stored contract's (session
     // resolver — case-insensitive by default, like every analyzer
@@ -1360,18 +1385,16 @@ object Snapshots {
     // deleted — they must leave the manifest even with no replacement file
     val emptied = touchedDirs.map(_ -- stagedDirs).getOrElse(Set.empty)
     if (staged.isEmpty && emptied.isEmpty && deleteKeys.isEmpty &&
-      extraRemoves.isEmpty && (modeLabel == "merge" ||
-        modeLabel == "replace_where" &&
-          prev.flatMap(_.schema).contains(contract))) {
-      // a statement that changes nothing: a merge whose batch only
-      // deletes absent keys, or an idempotent backfill re-run (the
-      // predicate matched nothing and the source was empty) — publishing
-      // would burn a snapshot id to record a no-op, and "rebuild day X"
-      // MUST be re-runnable against an already-empty region (the
-      // replaceWhere contract). A replaceWhere is gated on the contract
-      // being UNCHANGED: an empty batch that carries a WIDENING must not
-      // silently drop it — that shape keeps the loud empty-batch error
-      // below (widen via ALTER/addColumns instead).
+      extraRemoves.isEmpty && modeLabel == "replace_where" &&
+        prev.flatMap(_.schema).contains(contract)) {
+      // an idempotent backfill re-run (the predicate matched nothing and
+      // the source was empty) changes nothing — publishing would burn a
+      // snapshot id to record a no-op, and "rebuild day X" MUST be
+      // re-runnable against an already-empty region (the replaceWhere
+      // contract). Gated on the contract being UNCHANGED: an empty batch
+      // that carries a WIDENING must not silently drop it — that shape
+      // keeps the loud empty-batch error below (widen via
+      // ALTER/addColumns instead).
       FsOps.deleteIfExists(f, staging)
       return cur.get
     }
@@ -1760,7 +1783,7 @@ object Snapshots {
         case (None, _) => id
         case (Some(race), Some(check)) if retries < MaxCommitRetries =>
           val now = branch.fold(mainPointer(f, qroot))(
-            branchHeadOpt(f, qroot, _)).map(resolveIn(f, msDir, _))
+            branchHeadOpt(f, qroot, _)).map(resolve(f, msDir, _))
           val (m, c) = check(now, race)
           publish(now, m, c, retries + 1)
         case (Some(race), _) => throw race
@@ -1806,11 +1829,12 @@ object Snapshots {
           case _ => false // missing stats: cannot prove disjoint
         })
       }
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val ms = snapshotsDir(qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
     // the base state the loser resolved: removed rels look their key
     // stats up here (a delta manifest's remove lines are bare paths)
     lazy val baseState: Option[Resolved] =
-      try baseCur.map(resolve(f, qroot, _, cache))
+      try baseCur.map(resolve(f, ms, _, cache))
       catch {
         // an interleaved expire reclaimed the base chain: removed rels
         // can't be attributed — every remove becomes a conflict below
@@ -1818,7 +1842,7 @@ object Snapshots {
       }
     val interleaved = committedIds(f, qroot, cur)
       .filter(_ > baseCur.getOrElse(0))
-      .map(id => readSnapshotFileCached(f, qroot, id, cache))
+      .map(id => readSnapshotFile(f, ms, id, cache))
     // row-preserving rewrites hold no NEW keys and remove only files
     // whose rows they re-add verbatim — their files carry rows this
     // batch's delete would have suppressed in the originals just the
@@ -1940,14 +1964,12 @@ object Snapshots {
    * allows, a rebased full manifest otherwise. Returns the new id.
    */
   def rollback(spark: SparkSession, root: String, toId: Int): Int = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
+    val (f, qroot, cur) = headId(spark, root)
     require(toId <= cur, s"cannot roll back to s$toId: newest is s$cur")
     if (toId == cur) return cur
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val target = resolve(f, qroot, toId, cache)
-    val live = resolve(f, qroot, cur, cache)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
+    val target = resolve(f, snapshotsDir(qroot), toId, cache)
+    val live = resolve(f, snapshotsDir(qroot), cur, cache)
     // the replay window is the HEAD's (rollback rewinds data, not the
     // stream guard — a re-delivered recent batch must still converge)
     // constraints follow the TARGET (like its schema/stat declarations):
@@ -1984,10 +2006,7 @@ object Snapshots {
       targetFilesPerPartition: Int = 1,
       sortBy: Seq[String] = Seq.empty): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, id)
+    val (_, qroot, m) = resolveHead(spark, root)
     sortBy.foreach { c =>
       require(m.schema.forall(s => s.fields.exists(_.name == c)),
         s"sort column $c is not in the snapshot schema")
@@ -2046,7 +2065,7 @@ object Snapshots {
     }
     Some(writeInternal(rewritten, root, partitionFields,
       SnapOverwritePartitions, "compact", graft.schema.SchemaEvolution.Widen,
-      enforceConstraints = false))
+      Some(m), enforceConstraints = false))
   }
 
   /**
@@ -2100,8 +2119,9 @@ object Snapshots {
       val upserts = deleteCol
         .foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
       val allKeys = pinned.select(keyFields.map(qc): _*).distinct()
+      val (_, _, m) = resolveHead(spark, root, branch = branch)
       // update keys broadcast: CDC batches are small by definition
-      rewriteMatching(spark, root, partitionFields, "merge", 1,
+      rewriteMatching(spark, root, m, partitionFields, "merge", 1,
         deriveFor = (_, statsCols, bloomCols) => minMaxStatRanges(allKeys,
           keyFields.filter((statsCols ++ bloomCols).contains).map(k => k -> k)),
         discover = _.join(broadcast(allKeys), keyFields, "left_semi"),
@@ -2145,16 +2165,15 @@ object Snapshots {
     require(!keyFields.exists(partitionFields.contains),
       "partition fields cannot be merge keys (a key that IS the partition " +
         "value cannot move; route through a payload column instead)")
-    currentSnapshot(spark, root).getOrElse(throw new IllegalStateException(
-      s"no snapshot published under $root — land the initial state with " +
-        "write() first"))
+    val (_, _, m) = resolveHead(spark, root,
+      " — land the initial state with write() first")
     // PIN the batch (the mergeUpsert discipline): the emptiness probe,
     // the dup-key guard, the upsert staging write and the delete-key
     // staging write each execute the updates frame otherwise. O(batch)
     // state, dropped before returning.
     val pinned = updates.persist()
     try {
-      if (pinned.isEmpty) return currentSnapshot(spark, root).get
+      if (pinned.isEmpty) return m.id
       val dupKeys = pinned.groupBy(keyFields.map(qc): _*)
         .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
       require(dupKeys == 0L,
@@ -2165,7 +2184,7 @@ object Snapshots {
         .foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
       val allKeys = pinned.select(keyFields.map(qc): _*)
       writeInternal(upserts, root, partitionFields, SnapAppend, "merge_mor",
-        evolution, batchTag = batchTag,
+        evolution, Some(m), batchTag = batchTag,
         deleteKeys = Some((allKeys, keyFields)))
     } finally pinned.unpersist(): Unit
   }
@@ -2186,13 +2205,11 @@ object Snapshots {
       partitionFields: Seq[String],
       targetFilesPerPartition: Int = 1): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, id)
+    val (f, qroot, m) = resolveHead(spark, root)
     // the dispatch, re-decided against every head a lost race re-resolves
     // (a winner may have added files or deletes that change it): nothing
-    // to fold; a data fold of the partitions any delete still touches; or
+    // to fold; a data fold of the partitions any delete still touches,
+    // published against `h`, the head it scanned; or
     // — every delete dead weight (already folded by compaction or
     // key-range-pruned everywhere) — a metadata-only drop of the entries,
     // which is safe to recompute wholesale against any head
@@ -2208,7 +2225,7 @@ object Snapshots {
         return Some(writeInternal(
           splitPerPartition(folded, partitionFields, targetFilesPerPartition),
           root, partitionFields, SnapOverwritePartitions, "fold",
-          graft.schema.SchemaEvolution.Widen,
+          graft.schema.SchemaEvolution.Widen, Some(h),
           touchedDirs = Some(affectedDirs), dropDeletes = true,
           enforceConstraints = false))
       }
@@ -2374,7 +2391,8 @@ object Snapshots {
       condition: org.apache.spark.sql.Column,
       targetFilesPerPartition: Int = 1): Option[Int] = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rewriteWhere(spark, root, partitionFields, condition, "delete_where",
+    val (_, _, m) = resolveHead(spark, root)
+    rewriteWhere(spark, root, m, partitionFields, condition, "delete_where",
       targetFilesPerPartition,
       rows => rows.filter(not(coalesce(condition, lit(false)))))
   }
@@ -2400,32 +2418,32 @@ object Snapshots {
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       targetFilesPerPartition: Int = 1): Option[Int] = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val assign = updateAssignments(spark, root, assignments)
-    rewriteWhere(spark, root, partitionFields, condition, "update_where",
+    val (_, _, m) = resolveHead(spark, root)
+    val assign = updateAssignments(m, assignments)
+    rewriteWhere(spark, root, m, partitionFields, condition, "update_where",
       targetFilesPerPartition,
       rows =>
         rows.select(assign(rows.schema, coalesce(condition, lit(false))): _*))
   }
 
   /** The UPDATE assignments shared by [[updateWhere]] and
-    * [[updateWhereIn]]: validated UP FRONT against the recorded contract
-    * (the transform only runs when a file matches, and a typo'd column
-    * must not report the same success-shaped None as a legitimate
-    * no-match; legacy schema-less datasets check against the rows), then
-    * ONE projection over the rows' schema — every right-hand side sees
-    * the pre-update row, casts to the column's type, and applies only
-    * where `matched` holds (the condition never re-evaluates against an
-    * already-updated column). */
+    * [[updateWhereIn]]: validated UP FRONT against the contract the
+    * statement's head `m` records (the transform only runs when a file
+    * matches, and a typo'd column must not report the same success-shaped
+    * None as a legitimate no-match; legacy schema-less datasets check
+    * against the rows), then ONE projection over the rows' schema — every
+    * right-hand side sees the pre-update row, casts to the column's type,
+    * and applies only where `matched` holds (the condition never
+    * re-evaluates against an already-updated column). */
   private def updateAssignments(
-      spark: SparkSession, root: String,
-      assignments: Seq[(String, org.apache.spark.sql.Column)])
+      m: Resolved, assignments: Seq[(String, org.apache.spark.sql.Column)])
       : (StructType, org.apache.spark.sql.Column) =>
         Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.when
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     require(assignments.map(_._1).distinct.length == assignments.length,
       s"duplicate assignment targets: ${assignments.map(_._1).mkString(",")}")
-    recordedSchemaOpt(spark, root).foreach(sc =>
+    m.schema.foreach(sc =>
       assignments.foreach { case (c, _) =>
         require(sc.fieldNames.contains(c),
           s"unknown UPDATE target column '$c' — the recorded contract " +
@@ -2476,7 +2494,8 @@ object Snapshots {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val matchedRest =
       rest.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-    rewriteWhereInSet(spark, root, partitionFields, keyColumn, keys, rest,
+    val (_, _, m) = resolveHead(spark, root)
+    rewriteWhereInSet(spark, root, m, partitionFields, keyColumn, keys, rest,
       "delete_where", targetFilesPerPartition, keysNormalized,
       transform = (keySet, rows) => {
         def anti(df: DataFrame): DataFrame =
@@ -2509,8 +2528,9 @@ object Snapshots {
       targetFilesPerPartition: Int = 1,
       keysNormalized: Boolean = false): Option[Int] = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val assign = updateAssignments(spark, root, assignments)
-    rewriteWhereInSet(spark, root, partitionFields, keyColumn, keys, rest,
+    val (_, _, m) = resolveHead(spark, root)
+    val assign = updateAssignments(m, assignments)
+    rewriteWhereInSet(spark, root, m, partitionFields, keyColumn, keys, rest,
       "update_where", targetFilesPerPartition, keysNormalized,
       transform = (keySet, rows) => {
         // membership as a marker column (left join against the deduped
@@ -2564,14 +2584,13 @@ object Snapshots {
           lit("replaceWhere: incoming row does not satisfy the " +
             "predicate: "),
           to_json(struct(df.columns.toSeq.map(qc): _*))))))
-    val cur = currentSnapshot(spark, root) match {
+    val (f, qroot) = FsOps.fs(spark, root)
+    val m = headOf(f, qroot) match {
       case None =>
         return writeInternal(guarded, root, partitionFields, SnapAppend,
-          "replace_where", graft.schema.SchemaEvolution.Widen)
-      case Some(id) => id
+          "replace_where", graft.schema.SchemaEvolution.Widen, None)
+      case Some(h) => h
     }
-    val (f, qroot) = FsOps.fs(spark, root)
-    val m = resolve(f, qroot, cur)
     m.partitionCols.headOption.foreach(_ => require(
       partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
@@ -2598,8 +2617,8 @@ object Snapshots {
         partitionFields, targetFilesPerPartition)
         .unionByName(guarded, allowMissingColumns = true)
     writeInternal(out, root, partitionFields, SnapAppend,
-      "replace_where", graft.schema.SchemaEvolution.Widen,
-      extraRemoves = rewrite.map(_.rel), head = Some(m))
+      "replace_where", graft.schema.SchemaEvolution.Widen, Some(m),
+      extraRemoves = rewrite.map(_.rel))
   }
 
   /** Per-column [min, max] [[StatRange]]s over a frame, rendered
@@ -2643,8 +2662,8 @@ object Snapshots {
     * set, discover member-holding files with a semi-join, and publish
     * `transform(keySet, rows)` through [[rewriteMatching]]. */
   private def rewriteWhereInSet(
-      spark: SparkSession, root: String, partitionFields: Seq[String],
-      keyColumn: String, keys: DataFrame,
+      spark: SparkSession, root: String, m: Resolved,
+      partitionFields: Seq[String], keyColumn: String, keys: DataFrame,
       rest: Option[org.apache.spark.sql.Column],
       modeLabel: String, targetFilesPerPartition: Int,
       keysNormalized: Boolean,
@@ -2657,7 +2676,7 @@ object Snapshots {
       if (keysNormalized) renamed else renamed.na.drop().distinct()
     if (!keysNormalized) keySet.persist()
     try {
-      rewriteMatching(spark, root, partitionFields, modeLabel,
+      rewriteMatching(spark, root, m, partitionFields, modeLabel,
         targetFilesPerPartition,
         deriveFor = { (sc, statsCols, bloomCols) =>
           val fromRest = rest.toSeq.flatMap(c =>
@@ -2686,11 +2705,12 @@ object Snapshots {
     * scan, then publish `transform(survivor rows)` as one copy-on-write
     * snapshot that removes the originals by name. */
   private def rewriteWhere(
-      spark: SparkSession, root: String, partitionFields: Seq[String],
+      spark: SparkSession, root: String, m: Resolved,
+      partitionFields: Seq[String],
       condition: org.apache.spark.sql.Column, modeLabel: String,
       targetFilesPerPartition: Int,
       transform: DataFrame => DataFrame): Option[Int] =
-    rewriteMatching(spark, root, partitionFields, modeLabel,
+    rewriteMatching(spark, root, m, partitionFields, modeLabel,
       targetFilesPerPartition,
       // ranges derive over stat AND bloom columns (a bloom-only column's
       // equality bound must reach the bloom prune below)
@@ -2702,8 +2722,9 @@ object Snapshots {
       enforceConstraints = modeLabel != "delete_where")
 
   /** The file-bounded rewrite core behind every row-level statement
-    * ([[rewriteWhere]], [[rewriteWhereInSet]], [[mergeUpsert]]):
-    * `deriveFor` yields conservative prune ranges given (recorded
+    * ([[rewriteWhere]], [[rewriteWhereInSet]], [[mergeUpsert]]), run
+    * against `m`, the head its caller resolved (and publishing against
+    * it): `deriveFor` yields conservative prune ranges given (recorded
     * schema, statsCols, bloomCols); `discover` narrows the raw candidate
     * scan to rows that MATCH (it may filter or semi-join — the scan
     * arrives with `__graft_file` already materialized scan-side, since
@@ -2711,9 +2732,12 @@ object Snapshots {
     * maps each rewriting file's rows to their replacement. `adds` are
     * new rows published in the same snapshot (a MERGE's upserts, gated by
     * `evolution`), split per partition with the restaged rows. Returns
-    * None when nothing matched and there is nothing to add. */
+    * None when nothing matched and there is nothing to add, and the
+    * head's id, with nothing staged, when nothing matched and `adds` is
+    * empty. */
   private def rewriteMatching(
-      spark: SparkSession, root: String, partitionFields: Seq[String],
+      spark: SparkSession, root: String, m: Resolved,
+      partitionFields: Seq[String],
       modeLabel: String, targetFilesPerPartition: Int,
       deriveFor: (StructType, Seq[String], Seq[String]) => Seq[StatRange],
       discover: DataFrame => DataFrame,
@@ -2724,9 +2748,7 @@ object Snapshots {
         graft.schema.SchemaEvolution.Widen,
       branch: Option[String] = None): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val m = headOf(f, qroot, branch).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
+    val qroot = FsOps.fs(spark, root)._2
     m.partitionCols.headOption.foreach(_ => require(
       partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
@@ -2734,7 +2756,13 @@ object Snapshots {
     val rewrite =
       if (m.files.isEmpty) Seq.empty
       else discoverRewriteSet(spark, qroot, m, deriveFor, discover)
-    if (rewrite.isEmpty && adds.isEmpty) return None
+    if (rewrite.isEmpty) adds match {
+      case None => return None
+      // a MERGE whose batch only deletes absent keys changes nothing: the
+      // head stands, and nothing stages
+      case Some(rows) if rows.isEmpty => return Some(m.id)
+      case _ =>
+    }
     val restaged =
       if (rewrite.nonEmpty)
         Some(transform(scanWithDeletes(spark, qroot, m, rewrite)))
@@ -2748,10 +2776,9 @@ object Snapshots {
         allowMissingColumns = evolution == graft.schema.SchemaEvolution.Widen))
     Some(writeInternal(
       splitPerPartition(out, partitionFields, targetFilesPerPartition),
-      root, partitionFields, SnapAppend, modeLabel, evolution,
-      extraRemoves = rewrite.map(_.rel),
-      branch = branch,
-      enforceConstraints = enforceConstraints, head = Some(m)))
+      root, partitionFields, SnapAppend, modeLabel, evolution, Some(m),
+      extraRemoves = rewrite.map(_.rel), branch = branch,
+      enforceConstraints = enforceConstraints))
   }
 
   /** The candidate-narrowing + exact-discovery front half EVERY
@@ -2843,14 +2870,10 @@ object Snapshots {
       spark: SparkSession, root: String,
       columns: Seq[org.apache.spark.sql.types.StructField]): Int = {
     require(columns.nonEmpty, "ADD COLUMN needs at least one column")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — the first write declares " +
-          "the initial schema directly"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root,
+      " — the first write declares the initial schema directly")
     val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
+      s"snapshot s${m.id} records no schema contract — one write through " +
         "the Snapshots API pins it before metadata-only evolution"))
     // duplicate checks use the SESSION's resolver (case-insensitive by
     // default, like every analyzer comparison): publishing both `note`
@@ -2944,13 +2967,9 @@ object Snapshots {
    */
   def renameColumn(
       spark: SparkSession, root: String, from: String, to: String): Int = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — nothing to rename"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root, " — nothing to rename")
     val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
+      s"snapshot s${m.id} records no schema contract — one write through " +
         "the Snapshots API pins it before metadata-only evolution"))
     val resolver = spark.sessionState.conf.resolver
     val field = mappableColumn(spark, m, stored, from, "RENAME COLUMN")
@@ -2977,7 +2996,7 @@ object Snapshots {
     commit(f, qroot, None, Some(m), metaOf(m, "rename_column").copy(
       schema = Some(newSchema), statsCols = m.statsCols.map(renamed),
       bloomCols = m.bloomCols.map(renamed),
-      renames = m.renames :+ ((cur + 1, field.name, to))), Delta())
+      renames = m.renames :+ ((m.id + 1, field.name, to))), Delta())
   }
 
   /**
@@ -3015,13 +3034,9 @@ object Snapshots {
   def widenColumn(
       spark: SparkSession, root: String, name: String,
       newType: DataType): Int = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — nothing to widen"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root, " — nothing to widen")
     val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
+      s"snapshot s${m.id} records no schema contract — one write through " +
         "the Snapshots API pins it before metadata-only evolution"))
     val resolver = spark.sessionState.conf.resolver
     val field = stored.fields.find(fd => resolver(fd.name, name)).getOrElse(
@@ -3064,13 +3079,9 @@ object Snapshots {
   def dropColumns(
       spark: SparkSession, root: String, names: Seq[String]): Int = {
     require(names.nonEmpty, "DROP COLUMN needs at least one column")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — nothing to drop"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root, " — nothing to drop")
     val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
+      s"snapshot s${m.id} records no schema contract — one write through " +
         "the Snapshots API pins it before metadata-only evolution"))
     var remaining = stored
     val dropped = names.map { name =>
@@ -3084,7 +3095,7 @@ object Snapshots {
     commit(f, qroot, None, Some(m), metaOf(m, "drop_column").copy(
       schema = Some(remaining), statsCols = m.statsCols.filterNot(gone),
       bloomCols = m.bloomCols.filterNot(gone),
-      renames = m.renames ++ dropped.map(n => (cur + 1, n, ""))), Delta())
+      renames = m.renames ++ dropped.map(n => (m.id + 1, n, ""))), Delta())
   }
 
   /**
@@ -3101,16 +3112,12 @@ object Snapshots {
    * already empty (idempotent no-op, no history noise).
    */
   def truncate(spark: SparkSession, root: String): Option[Int] = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — nothing to truncate"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root, " — nothing to truncate")
     if (m.files.isEmpty && m.deletes.isEmpty) return None
     if (m.schema.isEmpty) throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract (legacy v1 manifest) — " +
-        "an empty state must still declare what readers resolve; one v2 " +
-        "write pins the contract first")
+      s"snapshot s${m.id} records no schema contract (legacy v1 " +
+        "manifest) — an empty state must still declare what readers " +
+        "resolve; one v2 write pins the contract first")
     Some(commit(f, qroot, None, Some(m), metaOf(m, "truncate"),
       LiveSet(Seq.empty, Seq.empty, forceFull = true)))
   }
@@ -3138,14 +3145,11 @@ object Snapshots {
       validateExisting: Boolean = true): Int = {
     require("^[A-Za-z_][A-Za-z0-9_.-]{0,63}$".r.matches(name),
       s"constraint name '$name' must be a word-ish identifier (<= 64 chars)")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — the first write can carry " +
-          "no pre-declared constraints; write, then add"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root,
+      " — the first write can carry no pre-declared constraints; " +
+        "write, then add")
     val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
+      s"snapshot s${m.id} records no schema contract — one write through " +
         "the Snapshots API pins it before constraints can validate"))
     m.constraints.find(_._1 == name).foreach(existing =>
       throw new IllegalArgumentException(
@@ -3189,10 +3193,7 @@ object Snapshots {
     * exists (idempotent no-op). */
   def dropConstraint(
       spark: SparkSession, root: String, name: String): Option[Int] = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root)
     if (!m.constraints.exists(_._1 == name)) return None
     Some(commit(f, qroot, None, Some(m), metaOf(m, "drop_constraint")
       .copy(constraints = m.constraints.filterNot(_._1 == name)), Delta()))
@@ -3202,8 +3203,8 @@ object Snapshots {
   def constraints(
       spark: SparkSession, root: String): Seq[(String, String)] = {
     val (f, qroot) = FsOps.fs(spark, root)
-    currentSnapshot(spark, root)
-      .map(id => readSnapshotFile(f, qroot, id).constraints)
+    mainPointer(f, qroot)
+      .map(id => readSnapshotFile(f, snapshotsDir(qroot), id).constraints)
       .getOrElse(Seq.empty)
   }
 
@@ -3228,19 +3229,15 @@ object Snapshots {
   def evolvePartitioning(
       spark: SparkSession, root: String, newSpec: Seq[String]): Int = {
     require(newSpec.nonEmpty, "the evolved spec needs at least one field")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — the first write declares " +
-          "the initial spec directly"))
-    val m = resolve(f, qroot, cur)
+    val (f, qroot, m) = resolveHead(spark, root,
+      " — the first write declares the initial spec directly")
     require(m.partitionCols.nonEmpty,
       s"dataset at $root predates recorded partition specs — one write " +
         "under the current layout pins it first")
     require(newSpec != m.partitionCols,
       s"dataset at $root is already partitioned by ${newSpec.mkString(",")}")
     val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema — cannot evolve its spec"))
+      s"snapshot s${m.id} records no schema — cannot evolve its spec"))
     newSpec.foreach { c =>
       val fld = schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
@@ -3271,10 +3268,7 @@ object Snapshots {
       partitionFields: Seq[String],
       targetFilesPerPartition: Int = 1): Option[Int] = {
     require(targetFilesPerPartition >= 1, "need at least one file")
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, id)
+    val (_, qroot, m) = resolveHead(spark, root)
     m.partitionCols.headOption.foreach(_ => require(
       partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
@@ -3285,7 +3279,7 @@ object Snapshots {
     Some(writeInternal(
       splitPerPartition(rewritten, partitionFields, targetFilesPerPartition),
       root, partitionFields, SnapAppend, "migrate_spec",
-      graft.schema.SchemaEvolution.Widen,
+      graft.schema.SchemaEvolution.Widen, Some(m),
       extraRemoves = old.map(_.rel), enforceConstraints = false))
   }
 
@@ -3322,10 +3316,10 @@ object Snapshots {
       graceMs: Long = DefaultVacuumGraceMs): (Int, Int) = {
     val (f, qroot) = FsOps.fs(spark, root)
     val cutoff = System.currentTimeMillis() - graceMs
-    val cur = currentSnapshot(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val cur = mainPointer(f, qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
     val committedRes = committedIds(f, qroot, cur)
-      .map(resolve(f, qroot, _, cache))
+      .map(resolve(f, snapshotsDir(qroot), _, cache))
     // pending staged writes and live branches reference files too — a
     // branch-only file is garbage only after dropBranch
     val (branchRefs, branchDelRefs, branchBloomRefs) =
@@ -3402,13 +3396,12 @@ object Snapshots {
       spark: SparkSession, root: String, sinceId: Int,
       untilId: Option[Int] = None,
       prune: Seq[StatRange] = Seq.empty): Option[DataFrame] = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val until = untilId.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
+    val (f, qroot, until) = headId(spark, root, asOf = untilId)
     require(sinceId <= until, s"since s$sinceId is after until s$until")
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val before = resolve(f, qroot, sinceId, cache).files.map(_.rel).toSet
-    val m = resolve(f, qroot, until, cache)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
+    val ms = snapshotsDir(qroot)
+    val before = resolve(f, ms, sinceId, cache).files.map(_.rel).toSet
+    val m = resolve(f, ms, until, cache)
     // the same file-level data skipping as [[read]] — an incremental
     // consumer with a key filter never opens non-intersecting new files;
     // an unknown prune column fails loudly here too (a typo silently
@@ -3452,7 +3445,7 @@ object Snapshots {
       spark: SparkSession, root: String, id: Int): (Long, Long) = {
     val (f, qroot) = FsOps.fs(spark, root)
     val raw =
-      try readSnapshotFile(f, qroot, id)
+      try readSnapshotFile(f, snapshotsDir(qroot), id)
       catch { case scala.util.control.NonFatal(_) => return (-1L, -1L) }
     raw.mode match {
       case "append" | "merge_mor" =>
@@ -3473,11 +3466,12 @@ object Snapshots {
     * Exposed so the stream sink can recognize LEGACY (pre-query-scoped)
     * tags during an upgrade; one small manifest read. */
   private[graft] def recentReplayTags(
-      spark: SparkSession, root: String): Seq[String] =
-    currentSnapshot(spark, root).map { id =>
-      val (f, qroot) = FsOps.fs(spark, root)
-      readSnapshotFile(f, qroot, id).effectiveRecentTags
-    }.getOrElse(Seq.empty)
+      spark: SparkSession, root: String): Seq[String] = {
+    val (f, qroot) = FsOps.fs(spark, root)
+    mainPointer(f, qroot).map(id =>
+      readSnapshotFile(f, snapshotsDir(qroot), id).effectiveRecentTags)
+      .getOrElse(Seq.empty)
+  }
 
   /** The oldest snapshot id [[expire]] has retained — the earliest point
     * a fresh incremental consumer can bootstrap from (expired history
@@ -3485,7 +3479,7 @@ object Snapshots {
   private[graft] def earliestRetainedSnapshot(
       spark: SparkSession, root: String): Option[Int] = {
     val (f, qroot) = FsOps.fs(spark, root)
-    committedIds(f, qroot, currentSnapshot(spark, root)).headOption
+    committedIds(f, qroot, mainPointer(f, qroot)).headOption
   }
 
   /** The write mode one manifest records (append / merge_mor / compact /
@@ -3496,7 +3490,7 @@ object Snapshots {
   private[graft] def snapshotModeOf(
       spark: SparkSession, root: String, id: Int): String = {
     val (f, qroot) = FsOps.fs(spark, root)
-    readSnapshotFile(f, qroot, id).mode
+    readSnapshotFile(f, snapshotsDir(qroot), id).mode
   }
 
   /** Incremental-consumer mode dispatch (the follower's and the
@@ -3520,12 +3514,13 @@ object Snapshots {
       onNonAppend: (Int, String) => Unit): Seq[DataFrame] = {
     require(startId >= 1, s"start offset s$startId predates the dataset")
     val (f, qroot) = FsOps.fs(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val ms = snapshotsDir(qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
     (startId + 1 to endId).flatMap { id =>
-      val mode = readSnapshotFileCached(f, qroot, id, cache).mode
+      val mode = readSnapshotFile(f, ms, id, cache).mode
       if (EmitModes(mode)) {
-        val before = resolve(f, qroot, id - 1, cache).files.map(_.rel).toSet
-        val m = resolve(f, qroot, id, cache)
+        val before = resolve(f, ms, id - 1, cache).files.map(_.rel).toSet
+        val m = resolve(f, ms, id, cache)
         val added = m.files.filterNot(e => before(e.rel))
         if (added.isEmpty) None
         else Some(scanWithDeletes(spark, qroot, m, added))
@@ -3560,9 +3555,9 @@ object Snapshots {
   def changedPartitions(
       spark: SparkSession, root: String, fromId: Int, toId: Int): Seq[String] = {
     val (f, qroot) = FsOps.fs(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val ra = resolve(f, qroot, fromId, cache)
-    val rb = resolve(f, qroot, toId, cache)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
+    val ra = resolve(f, snapshotsDir(qroot), fromId, cache)
+    val rb = resolve(f, snapshotsDir(qroot), toId, cache)
     val a = ra.files.map(_.rel).groupBy(parentDirOf)
     val b = rb.files.map(_.rel).groupBy(parentDirOf)
     ((a.keySet ++ b.keySet)
@@ -3603,9 +3598,9 @@ object Snapshots {
     import org.apache.spark.sql.functions._
     require(keyFields.nonEmpty, "changes needs at least one key field")
     val (f, qroot) = FsOps.fs(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val a = resolve(f, qroot, fromId, cache)
-    val b = resolve(f, qroot, toId, cache)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
+    val a = resolve(f, snapshotsDir(qroot), fromId, cache)
+    val b = resolve(f, snapshotsDir(qroot), toId, cache)
     val aBy = a.files.map(_.rel).groupBy(parentDirOf)
     val bBy = b.files.map(_.rel).groupBy(parentDirOf)
     val dirs = (aBy.keySet ++ bBy.keySet)
@@ -3741,22 +3736,9 @@ object Snapshots {
       spark: SparkSession, root: String,
       asOf: Option[Int] = None,
       prune: Seq[StatRange] = Seq.empty): DataFrame = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    readResolved(spark, qroot, resolve(f, qroot, id), prune, s"s$id")
+    val (_, qroot, m) = resolveHead(spark, root, asOf = asOf)
+    readResolved(spark, qroot, m, prune, s"s${m.id}")
   }
-
-  /** The current manifest's recorded contract, if it carries one — the
-    * legacy-tolerant (and no-dataset-tolerant) twin of [[tableSchema]]
-    * for callers that merely want to validate against the contract when
-    * one exists. */
-  private def recordedSchemaOpt(
-      spark: SparkSession, root: String): Option[StructType] =
-    currentSnapshot(spark, root).flatMap { id =>
-      val (f, qroot) = FsOps.fs(spark, root)
-      readSnapshotFile(f, qroot, id).schema
-    }
 
   /** The recorded read contract of a snapshot (current by default) — one
     * manifest read, no chain resolution, no file listing (every manifest
@@ -3765,10 +3747,8 @@ object Snapshots {
   def tableSchema(
       spark: SparkSession, root: String,
       asOf: Option[Int] = None): StructType = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    readSnapshotFile(f, qroot, id).schema.getOrElse(
+    val (f, qroot, id) = headId(spark, root, asOf = asOf)
+    readSnapshotFile(f, snapshotsDir(qroot), id).schema.getOrElse(
       throw new IllegalStateException(
         s"snapshot s$id records no schema (legacy v1 manifest) — one v2 " +
           "write pins the contract"))
@@ -3785,15 +3765,11 @@ object Snapshots {
       spark: SparkSession, root: String,
       asOf: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    resolve(f, qroot, id).files.groupBy(e => parentDirOf(e.rel)).toSeq
-      .sortBy(_._1)
+    val (_, _, m) = resolveHead(spark, root, asOf = asOf)
+    m.files.groupBy(e => parentDirOf(e.rel)).toSeq.sortBy(_._1)
       .map { case (dir, es) =>
-        (dir, es.length.toLong,
-          if (es.forall(_.rows >= 0)) Some(es.map(_.rows).sum) else None,
-          if (es.forall(_.bytes >= 0)) Some(es.map(_.bytes).sum) else None)
+        val (rows, bytes) = liveTotals(es)
+        (dir, es.length.toLong, rows, bytes)
       }.toDF("partition", "n_files", "n_rows", "n_bytes")
   }
 
@@ -3805,22 +3781,15 @@ object Snapshots {
     * filesystem walk. */
   def liveDataBytes(
       spark: SparkSession, root: String,
-      asOf: Option[Int] = None): Option[Long] = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val files = resolve(f, qroot, id).files
-    if (files.forall(_.bytes >= 0)) Some(files.map(_.bytes).sum) else None
-  }
+      asOf: Option[Int] = None): Option[Long] =
+    liveTotals(resolveHead(spark, root, asOf = asOf)._3.files)._2
 
   /** The partition spec in force at the current snapshot (the manifest's
     * `partitionby=` line) — one manifest read; empty for legacy datasets
     * that predate recorded specs. What SQL `INSERT INTO` routes under. */
   def recordedPartitionCols(spark: SparkSession, root: String): Seq[String] = {
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    readSnapshotFile(f, qroot, id).partitionCols
+    val (f, qroot, id) = headId(spark, root)
+    readSnapshotFile(f, snapshotsDir(qroot), id).partitionCols
   }
 
   /** Register a snapshot dataset in the session catalog (metastore) as an
@@ -3867,14 +3836,12 @@ object Snapshots {
   def snapshotAt(
       spark: SparkSession, root: String, tsMillis: Long): Option[Int] = {
     val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val ids = committedIds(f, qroot, cur)
+    val ids = committedIds(f, qroot, mainPointer(f, qroot))
     // ts is monotone in id (single-writer publishes in id order), so the
     // newest qualifying id is the answer; an unstamped (legacy) manifest
     // qualifies iff some stamped descendant does or none is stamped
     ids.reverse.find { id =>
-      readSnapshotFileCached(f, qroot, id, cache).ts.forall(_ <= tsMillis)
+      readSnapshotFile(f, snapshotsDir(qroot), id).ts.forall(_ <= tsMillis)
     }
   }
 
@@ -3892,11 +3859,6 @@ object Snapshots {
     read(spark, root, asOf = Some(id), prune = prune)
   }
 
-  private def readSnapshotFileCached(
-      f: FileSystem, qroot: Path, id: Int,
-      cache: scala.collection.mutable.Map[Int, RawManifest]): RawManifest =
-    cache.getOrElseUpdate(id, readSnapshotFile(f, qroot, id))
-
   /** Per-live-file manifest inventory of a snapshot (current by
     * default) — relative path, partition dir, manifest-stamped sequence
     * (the snapshot that added it), row count and byte size (null when
@@ -3907,10 +3869,7 @@ object Snapshots {
       spark: SparkSession, root: String,
       asOf: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    resolve(f, qroot, id).files.sortBy(_.rel)
+    resolveHead(spark, root, asOf = asOf)._3.files.sortBy(_.rel)
       // legacy entries predate seq recording (parser default 0; ids
       // start at 1) — null, like the rows/bytes columns, never a
       // nonexistent s0
@@ -3929,22 +3888,14 @@ object Snapshots {
     * opened. */
   def detail(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val (f, qroot) = FsOps.fs(spark, root)
-    val id = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
-    val m = resolve(f, qroot, id)
-    Seq((id, m.mode, m.format, m.codec,
+    val (_, _, m) = resolveHead(spark, root)
+    val (nRows, nBytes) = liveTotals(m.files)
+    Seq((m.id, m.mode, m.format, m.codec,
       m.partitionCols.mkString(","), m.statsCols.mkString(","),
       m.bloomCols.mkString(","),
       m.files.length.toLong,
       m.files.map(e => parentDirOf(e.rel)).distinct.length.toLong,
-      if (m.files.nonEmpty && m.files.forall(_.rows >= 0))
-        Some(m.files.map(_.rows).sum)
-      else if (m.files.isEmpty) Some(0L) else None,
-      if (m.files.nonEmpty && m.files.forall(_.bytes >= 0))
-        Some(m.files.map(_.bytes).sum)
-      else if (m.files.isEmpty) Some(0L) else None,
-      m.deletes.length.toLong,
+      nRows, nBytes, m.deletes.length.toLong,
       tags(spark, root).size.toLong,
       branches(spark, root).size.toLong,
       m.constraints.map { case (n, e) => s"$n: $e" }.mkString("; ")))
@@ -3991,53 +3942,46 @@ object Snapshots {
     scanWithDeletes(spark, qroot, m, kept)
   }
 
+  /** Live (rows, bytes) totals of `files`, answered from the per-file
+    * manifest counts alone — each None when any file predates its
+    * recording, 0 for no file. Rows merge-on-read deletes suppress are
+    * still counted (no data is read; fold to settle them). */
+  private def liveTotals(
+      files: Seq[FileEntry]): (Option[Long], Option[Long]) = {
+    def total(v: FileEntry => Long) =
+      if (files.forall(v(_) >= 0)) Some(files.map(v).sum) else None
+    (total(_.rows), total(_.bytes))
+  }
+
   /**
    * Snapshot history as a DataFrame — the index-health read of the
    * snapshot tree ([[graft.ops.Dedup.dupGraphHealth]]'s role): per
    * retained snapshot, its write mode, live file count, live partition
-   * count, and whether it is current. All figures come from the manifests
-   * alone — no data file is opened. Orphan manifests beyond the committed
-   * pointer are not history.
+   * count, and whether it is current; the leading columns of
+   * [[snapshotLog]]. All figures come from the manifests alone — no data
+   * file is opened. Orphan manifests beyond the committed pointer are not
+   * history.
    */
-  def history(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    committedIds(f, qroot, cur).map { id =>
-      val m = resolve(f, qroot, id, cache)
-      (id, m.mode, m.files.length.toLong,
-        m.files.map(e => parentDirOf(e.rel)).distinct.length.toLong,
-        cur.contains(id))
-    }.toDF("snapshot_id", "mode", "n_files", "n_partitions", "is_current")
-  }
+  def history(spark: SparkSession, root: String): DataFrame =
+    snapshotLog(spark, root).select(
+      "snapshot_id", "mode", "n_files", "n_partitions", "is_current")
 
   /** Operational log of every retained snapshot — [[history]] plus the
     * newer manifest metadata: publish instant (null for snapshots
     * predating timestamps), the partition spec in force, live
     * equality-delete file count (non-zero = merge-on-read reads pending
-    * a fold), and the stream replay tag if one published it. Manifests
-    * only; no data file is opened. The schedulable health read: "is this
-    * landing zone folding, compacting and expiring on cadence". */
+    * a fold), the stream replay tag if one published it, and the live
+    * row and byte totals ([[liveTotals]]). Manifests only; no data file
+    * is opened. The schedulable health read: "is this landing zone
+    * folding, compacting and expiring on cadence". */
   def snapshotLog(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val cur = mainPointer(f, qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
     committedIds(f, qroot, cur).map { id =>
-      val m = resolve(f, qroot, id, cache)
-      // row count answered from per-file manifest counts alone — null
-      // when any live file predates count recording (or no statsColumns
-      // pass runs at write). Note: rows merge-on-read deletes suppress
-      // are still counted (the log reads no data; fold to settle them).
-      val nRows =
-        if (m.files.nonEmpty && m.files.forall(_.rows >= 0))
-          Some(m.files.map(_.rows).sum)
-        else if (m.files.isEmpty) Some(0L)
-        else None
-      val nBytes =
-        if (m.files.forall(_.bytes >= 0)) Some(m.files.map(_.bytes).sum)
-        else None
+      val m = resolve(f, snapshotsDir(qroot), id, cache)
+      val (nRows, nBytes) = liveTotals(m.files)
       (id, m.mode, m.ts.map(new java.sql.Timestamp(_)),
         m.partitionCols.mkString(","), m.files.length.toLong,
         m.files.map(e => parentDirOf(e.rel)).distinct.length.toLong,
@@ -4072,8 +4016,7 @@ object Snapshots {
     * existing name moves it (atomic overwrite). */
   def tagSnapshot(
       spark: SparkSession, root: String, name: String, id: Int): Unit = {
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
+    val (_, _, cur) = headId(spark, root)
     require(id <= cur, s"cannot tag unpublished snapshot s$id (newest s$cur)")
     tagResolved(spark, root, name, id)
   }
@@ -4082,9 +4025,7 @@ object Snapshots {
     * choice lives HERE, not in each SQL/ops caller). Returns the tagged
     * id. */
   def tagCurrent(spark: SparkSession, root: String, name: String): Int = {
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot published under $root — nothing to tag"))
+    val (_, _, cur) = headId(spark, root, " — nothing to tag")
     tagResolved(spark, root, name, cur)
     cur
   }
@@ -4093,7 +4034,8 @@ object Snapshots {
       spark: SparkSession, root: String, name: String, id: Int): Unit = {
     requireRefName("tag", name)
     val (f, qroot) = FsOps.fs(spark, root)
-    resolve(f, qroot, id): Unit // fails loudly if already expired
+    // fails loudly if already expired
+    resolve(f, snapshotsDir(qroot), id): Unit
     f.mkdirs(refsDir(qroot))
     FsOps.atomicWrite(f, new Path(refsDir(qroot), name), s"s$id")
   }
@@ -4202,16 +4144,14 @@ object Snapshots {
       spark: SparkSession, root: String, name: String,
       fromId: Option[Int] = None): Unit = {
     requireRefName("branch", name)
-    val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no snapshot published under $root"))
+    val (f, qroot, cur) = headId(spark, root)
     val forkId = fromId.getOrElse(cur)
     require(forkId <= cur,
       s"cannot branch from unpublished s$forkId (newest s$cur)")
     val bdir = branchDir(qroot, name)
     require(!f.exists(new Path(bdir, "HEAD")),
       s"branch '$name' already exists under $root — dropBranch first")
-    val m = resolve(f, qroot, forkId)
+    val m = resolve(f, snapshotsDir(qroot), forkId)
     val meta = metaOf(m, "branch_fork").copy(
       ts = Some(System.currentTimeMillis()), recentTags = Seq.empty)
     f.mkdirs(bdir)
@@ -4237,9 +4177,12 @@ object Snapshots {
       df: DataFrame, root: String, name: String,
       partitionFields: Seq[String], mode: SnapshotMode = SnapAppend,
       evolution: graft.schema.SchemaEvolution.Policy =
-        graft.schema.SchemaEvolution.Widen): Int =
+        graft.schema.SchemaEvolution.Widen): Int = {
+    requireRefName("branch", name)
+    val (f, qroot) = FsOps.fs(df.sparkSession, root)
     writeInternal(df, root, partitionFields, mode, mode.name, evolution,
-      branch = Some(name))
+      headOf(f, qroot, Some(name)), branch = Some(name))
+  }
 
   /** Read a branch's state (its head, or an older branch-local snapshot)
     * with the same contract and [[StatRange]] skipping as [[read]]. */
@@ -4252,7 +4195,7 @@ object Snapshots {
     val head = branchHead(f, qroot, name)
     val id = asOf.getOrElse(head)
     require(id <= head, s"branch '$name' has no snapshot s$id (head s$head)")
-    readResolved(spark, qroot, resolveIn(f, branchDir(qroot, name), id),
+    readResolved(spark, qroot, resolve(f, branchDir(qroot, name), id),
       prune, s"branch '$name' s$id")
   }
 
@@ -4264,7 +4207,7 @@ object Snapshots {
     requireRefName("branch", name)
     val (f, qroot) = FsOps.fs(spark, root)
     val head = branchHead(f, qroot, name)
-    readSnapshotFileIn(f, branchDir(qroot, name), head).schema.getOrElse(
+    readSnapshotFile(f, branchDir(qroot, name), head).schema.getOrElse(
       throw new IllegalStateException(
         s"branch '$name' head s$head records no schema"))
   }
@@ -4320,7 +4263,7 @@ object Snapshots {
     // an EMPTY branch has nothing to merge or replay — it just drops,
     // whatever main has done since the fork
     if (head == 1) { dropBranch(spark, root, name); return fork }
-    val cur = currentSnapshot(spark, root)
+    val cur = mainPointer(f, qroot)
     // the merge manifest carries a tag unique to this branch INCARNATION
     // (the nonce) so a crash between the publish and the branch drop is
     // recoverable: re-running scans the RETAINED manifests past the fork
@@ -4334,8 +4277,8 @@ object Snapshots {
       return mergeStaleFork(spark, f, qroot, root, name, bdir, head, fork,
         cur, mergeTag, nonce)
     // separate caches: branch-local and main ids are distinct sequences
-    val b = resolveIn(f, bdir, head)
-    val live = resolve(f, qroot, fork)
+    val b = resolve(f, bdir, head)
+    val live = resolve(f, snapshotsDir(qroot), fork)
     val id = fork + 1
     // re-anchor branch-ADDED files in main's seq space: their branch-local
     // seqs mean nothing to main (a later main equality delete must be
@@ -4415,17 +4358,17 @@ object Snapshots {
     def taggedMergeId(cur: Option[Int]): Option[Int] = {
       val retained = committedIds(f, qroot, cur)
       retained.filter(_ > fork)
-        .find(id => readSnapshotFile(f, qroot, id).batchTag
+        .find(id => readSnapshotFile(f, snapshotsDir(qroot), id).batchTag
           .contains(mergeTag))
         .orElse(retained.lastOption.filter(head =>
-          readSnapshotFile(f, qroot, head).effectiveRecentTags
+          readSnapshotFile(f, snapshotsDir(qroot), head).effectiveRecentTags
             .contains(mergeTag)))
     }
     taggedMergeId(cur0).foreach { id =>
       dropBranch(spark, root, name); return id
     }
-    val bRes = resolveIn(f, bdir, head)
-    val forkRes = resolveIn(f, bdir, 1)
+    val bRes = resolve(f, bdir, head)
+    val forkRes = resolve(f, bdir, 1)
     val forkRels = forkRes.files.map(_.rel).toSet
     val branchAdded = bRes.files.filterNot(e => forkRels(e.rel))
     // (2) the merge landed but its tagged manifest has since expired or
@@ -4438,7 +4381,7 @@ object Snapshots {
       val addedRels = branchAdded.map(_.rel).toSet
       val visibleAt = committedIds(f, qroot, cur0).filter(_ > fork)
         .find { id =>
-          val raw = readSnapshotFile(f, qroot, id)
+          val raw = readSnapshotFile(f, snapshotsDir(qroot), id)
           (raw.adds ++ raw.full.getOrElse(Seq.empty))
             .exists(e => addedRels(e.rel))
         }
@@ -4451,7 +4394,7 @@ object Snapshots {
     // dropped. Anything else resolved a base state main has advanced
     // past, and replaying it would silently clobber main's newer writes.
     val nonAppend = (2 to head)
-      .map(i => readSnapshotFileIn(f, bdir, i).mode)
+      .map(i => readSnapshotFile(f, bdir, i).mode)
       .filterNot(_ == "append").distinct
     val headRels = bRes.files.map(_.rel).toSet
     val touchedBeyondAppend = nonAppend.nonEmpty ||
@@ -4482,9 +4425,7 @@ object Snapshots {
         dropBranch(spark, root, name); return id
       }
       val live = h.getOrElse(
-        throw new IllegalStateException(
-          s"no snapshot published under $root — branch '$name' outlived " +
-            "its dataset"))
+        noSnapshot(root, s" — branch '$name' outlived its dataset"))
       // dataset-fixed properties must still line up: a main that changed
       // format/codec/statsCols since the fork makes the branch's staged
       // layout wrong for this dataset — not retryable, surface loudly
@@ -4525,7 +4466,7 @@ object Snapshots {
         recentTags = (live.recentTags :+ mergeTag).takeRight(MaxRecentTags)),
         Delta(adds = branchAdded.map(_.copy(seq = live.id + 1))))
     }
-    val mainHead = currentSnapshot(spark, root).map(resolve(f, qroot, _))
+    val mainHead = cur0.map(resolve(f, snapshotsDir(qroot), _))
     val (meta, change) = replay(mainHead)
     val id = commit(f, qroot, None, mainHead, meta, change,
       Some((h, _) => replay(h)))
@@ -4566,7 +4507,7 @@ object Snapshots {
         // manifest's adds/full lines IS the union of the resolved states
         // — one small-file read per id, no chain replay
         (1 to h).foreach { i =>
-          val raw = readSnapshotFileIn(f, st.getPath, i)
+          val raw = readSnapshotFile(f, st.getPath, i)
           val entries = raw.adds ++ raw.full.getOrElse(Seq.empty)
           fs ++= entries.map(_.rel)
           bs ++= entries.flatMap(_.bloomRef)
@@ -4694,10 +4635,12 @@ object Snapshots {
       evolution: graft.schema.SchemaEvolution.Policy =
         graft.schema.SchemaEvolution.Widen,
       statsColumns: Seq[String] = Seq.empty,
-      format: Option[SinkFormat] = None, codec: Option[String] = None): Int =
+      format: Option[SinkFormat] = None, codec: Option[String] = None): Int = {
+    val (f, qroot) = FsOps.fs(df.sparkSession, root)
     writeInternal(df, root, partitionFields, mode, mode.name, evolution,
-      statsColumns = statsColumns, format = format, codec = codec,
-      stageAs = Some(name))
+      headOf(f, qroot), statsColumns = statsColumns, format = format,
+      codec = codec, stageAs = Some(name))
+  }
 
   /** Pending staged writes as (name → snapshot id each will claim). */
   def stagedWrites(spark: SparkSession, root: String): Map[String, Int] = {
@@ -4722,7 +4665,7 @@ object Snapshots {
       prune: Seq[StatRange] = Seq.empty): DataFrame = {
     val (f, qroot) = FsOps.fs(spark, root)
     val (_, head) = readStagedFile(f, qroot, name)
-    readResolved(spark, qroot, resolveFrom(f, qroot, head), prune,
+    readResolved(spark, qroot, resolveFrom(f, snapshotsDir(qroot), head), prune,
       s"staged '$name'")
   }
 
@@ -4737,7 +4680,7 @@ object Snapshots {
   def publishStaged(spark: SparkSession, root: String, name: String): Int = {
     val (f, qroot) = FsOps.fs(spark, root)
     val (base, raw) = readStagedFile(f, qroot, name)
-    val cur = currentSnapshot(spark, root)
+    val cur = mainPointer(f, qroot)
     if (cur != base)
       throw new java.util.ConcurrentModificationException(
         s"staged write '$name' was computed against " +
@@ -4747,9 +4690,10 @@ object Snapshots {
     // re-rendered onto its base at PUBLISH time: the staged state with a
     // publish-instant `ts`, so time travel to an instant between staging
     // and publishing resolves the base — the state readers saw then
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val staged = resolveFrom(f, qroot, raw, cache)
-    val id = commit(f, qroot, None, base.map(resolve(f, qroot, _, cache)),
+    val ms = snapshotsDir(qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
+    val staged = resolveFrom(f, ms, raw, cache)
+    val id = commit(f, qroot, None, base.map(resolve(f, ms, _, cache)),
       metaOf(staged, staged.mode), LiveSet(staged.files, staged.deletes))
     FsOps.deleteIfExists(f, new Path(stagedDir(qroot), name))
     id
@@ -4839,10 +4783,8 @@ object Snapshots {
   def expireOlderThan(
       spark: SparkSession, root: String, tsMillis: Long): (Seq[Int], Int) = {
     val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
-    val keep = committedIds(f, qroot, cur).count(id =>
-      readSnapshotFileCached(f, qroot, id, cache).ts.exists(_ >= tsMillis))
+    val keep = committedIds(f, qroot, mainPointer(f, qroot)).count(id =>
+      readSnapshotFile(f, snapshotsDir(qroot), id).ts.exists(_ >= tsMillis))
     expire(spark, root, math.max(keep, 1))
   }
 
@@ -4850,8 +4792,7 @@ object Snapshots {
       spark: SparkSession, root: String, keepLast: Int): (Seq[Int], Int) = {
     require(keepLast >= 1, "must retain at least the current snapshot")
     val (f, qroot) = FsOps.fs(spark, root)
-    val cur = currentSnapshot(spark, root)
-    val ids = committedIds(f, qroot, cur)
+    val ids = committedIds(f, qroot, mainPointer(f, qroot))
     // tags pin by policy; a pending staged write's base pins so its audit
     // lane stays resolvable (abandoning stale staged writes re-arms
     // retention for those ids)
@@ -4861,13 +4802,14 @@ object Snapshots {
     val expired = ids.filterNot(keptSet)
     val kept = ids.filter(keptSet)
     if (expired.isEmpty) return (Seq.empty, 0)
-    val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
+    val ms = snapshotsDir(qroot)
+    val cache: ManifestCache = scala.collection.mutable.Map.empty
     // rebase every kept snapshot whose parent chain crosses the expiry
     // boundary (parents are always id-1, so one parent check suffices)
     kept.foreach { k =>
-      val raw = readSnapshotFile(f, qroot, k)
+      val raw = readSnapshotFile(f, ms, k)
       if (raw.parent.exists(p => !keptSet(p))) {
-        val res = resolve(f, qroot, k, cache)
+        val res = resolve(f, ms, k, cache)
         // rebase-in-place preserves the ORIGINAL publish instant — the
         // rewrite changes representation, not history
         FsOps.atomicWrite(f, new Path(snapshotsDir(qroot), s"s$k"),
@@ -4882,7 +4824,7 @@ object Snapshots {
     // in-flight writer's just-moved batch, a crashed write) are NOT
     // expire's to touch: vacuum reclaims them behind its age grace,
     // so a mistimed expire can never destroy a concurrent write
-    val expiredRes = expired.map(resolve(f, qroot, _, cache))
+    val expiredRes = expired.map(resolve(f, ms, _, cache))
     val expiredRefs = expiredRes.flatMap(_.files.map(_.rel)).toSet
     val expiredDelRefs = expiredRes.flatMap(_.deletes.map(_.rel)).toSet
     val expiredBloomRefs =
@@ -4891,7 +4833,7 @@ object Snapshots {
     // then the file sweep; a crash between degrades to orphan files
     expired.foreach(id =>
       FsOps.deleteIfExists(f, new Path(snapshotsDir(qroot), s"s$id")))
-    val keptRes = kept.map(resolve(f, qroot, _, cache))
+    val keptRes = kept.map(resolve(f, ms, _, cache))
     // live branches reference shared-pool files (their fork state overlaps
     // expiring main manifests) — never expire's to delete
     val (branchRefs, branchDelRefs, branchBloomRefs) =

@@ -254,10 +254,14 @@ class SnapshotsSpec extends SparkSpec
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     assert(before == Set((1L, "a", 10.0), (2L, "a", 20.0), (3L, "a", 30.0),
       (4L, "b", 40.0), (5L, "b", 50.0)))
-    // no-op batch (delete of an absent key) publishes nothing
-    assert(Snapshots.mergeUpsert(spark, root,
+    // no-op batch (delete of an absent key) publishes nothing and stages
+    // nothing: no create or mkdirs under the table root
+    val observed = HookedFs.view(spark, root)
+    HookedFs.reset()
+    assert(Snapshots.mergeUpsert(spark, observed,
       Seq((99L, "a", 0.0, true)).toDF("id", "p", "v", "__del"),
       Seq("p"), Seq("id"), deleteCol = Some("__del")) == 2)
+    assert(HookedFs.mutations.get == 0)
     // guards: duplicate batch keys, partition-field key
     intercept[IllegalArgumentException] {
       Snapshots.mergeUpsert(spark, root,
