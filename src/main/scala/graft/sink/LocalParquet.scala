@@ -70,8 +70,10 @@ private[graft] object LocalParquet {
     }) && df.schema.fields.forall(f => primFor(f.dataType).isDefined)
 
   /** Write `df` (must satisfy [[supported]]) as ONE snappy parquet file
-    * `part-00000-<uuid>.parquet` under `dir`. */
-  def write(df: DataFrame, dir: String): Unit = {
+    * `name` under `dir`, creating `dir` if needed. */
+  def write(df: DataFrame, dir: String, name: String =
+      s"part-00000-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
+      : Unit = {
     val schema = df.schema
     val mt: MessageType = {
       val b = Types.buildMessage()
@@ -90,8 +92,7 @@ private[graft] object LocalParquet {
     val spark = df.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     val (_, qdir) = FsOps.fs(spark, dir)
-    val file = new org.apache.hadoop.fs.Path(qdir,
-      s"part-00000-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
+    val file = new Path(qdir, name)
     val writer = ExampleParquetWriter.builder(
         org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
       .withConf(conf)

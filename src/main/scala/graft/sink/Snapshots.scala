@@ -84,7 +84,10 @@ object Snapshots {
     * prune: the recorded strings are writer-session-tz renderings no
     * other session can safely compare — timestamp EQUALITY still prunes
     * through declared bloomColumns (internal-value hashing), and
-    * nullness prunes are count-based and always on.
+    * nullness prunes are count-based and always on. The rule lives in
+    * `survives` alone (every pruned lane plans through `planFiles`), so
+    * producers pass timestamp ranges through unfiltered; its twin for two
+    * recorded ranges lives in `provablyDisjoint`.
     *
     * `nullness = Some(true)` selects rows where the column IS NULL
     * (bounds must be empty — null matches no range): files whose recorded
@@ -653,9 +656,6 @@ object Snapshots {
       s.getModificationTime, s.getLen)).toSeq
   }
 
-  private def listDataFiles(f: FileSystem, base: Path): Seq[String] =
-    listDataFilesWithMtime(f, base).map(_._1)
-
   // --------------------------------------------------- format dispatch
 
   private def formatToken(fmt: SinkFormat): String = fmt match {
@@ -806,23 +806,30 @@ object Snapshots {
       }.toMap
   }
 
+  private def statType(schema: StructType, c: String): DataType =
+    schema.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)
+
   /** True iff the file can hold a row matching every range: missing stats
     * keep the file (conservative); recorded all-null stats (min and max
     * both None) cannot match a range filter, which excludes nulls. An
     * `IS NULL` range ([[StatRange.nullness]] Some(true)) keeps the file
-    * unless its recorded null count proves no nulls exist. */
+    * unless its recorded null count proves no nulls exist. A non-nullness
+    * range on a TimestampType column keeps the file: its recorded min/max
+    * are renderings in the WRITING session's time zone, and a bound
+    * rendered in any other zone would compare shifted — dropping files
+    * that hold matches. */
   private def survives(
       e: FileEntry, ranges: Seq[StatRange], schema: StructType): Boolean =
     ranges.forall { r =>
+      val dt = statType(schema, r.column)
       if (r.nullness.contains(true))
         // IS NULL: bounds are meaningless (null matches no range) — the
         // file survives unless provably null-free for the column
         !e.nulls.get(r.column).contains(0L)
+      else if (r.nullness.isEmpty && dt == TimestampType) true
       else e.stats.get(r.column) match {
         case None => true
         case Some((lo, hi)) =>
-          val dt = schema.fields.find(_.name == r.column).map(_.dataType)
-            .getOrElse(StringType)
           // all-null file: recorded stats say so directly (min and max
           // both None), or the null count equals the row count
           if ((lo.isEmpty && hi.isEmpty) ||
@@ -939,22 +946,56 @@ object Snapshots {
     }
   }
 
+  /** The one file planner of every pruned snapshot lane: the `files`
+    * that can hold a row matching every range, by recorded stats
+    * ([[survives]]) then Bloom probe ([[bloomPrune]]). An unknown prune
+    * column fails loudly — a typo must not silently disable skipping. */
+  private def planFiles(
+      spark: SparkSession, qroot: Path, m: Resolved,
+      files: Seq[FileEntry], ranges: Seq[StatRange]): Seq[FileEntry] = {
+    ranges.foreach(r => require(
+      m.schema.forall(s => s.fields.exists(_.name == r.column)),
+      s"prune column ${r.column} is not in the snapshot schema"))
+    val schema = m.schema.getOrElse(StructType(Seq.empty))
+    bloomPrune(spark, qroot, m, files.filter(survives(_, ranges, schema)),
+      ranges)
+  }
+
+  /** Whether two recorded [min, max] ranges of column `c` PROVABLY share
+    * no value — the one compare of two recorded bounds. Unproven (false)
+    * when either side is missing or all-null, and always for a
+    * TimestampType column: each side's bounds were rendered in its own
+    * writer's session time zone, so byte order says nothing about the
+    * instants. */
+  private def provablyDisjoint(
+      schema: StructType, c: String,
+      a: Option[(Option[String], Option[String])],
+      b: Option[(Option[String], Option[String])]): Boolean = {
+    val dt = statType(schema, c)
+    dt != TimestampType && ((a, b) match {
+      case (Some((Some(alo), Some(ahi))), Some((Some(blo), Some(bhi)))) =>
+        statCompare(dt, ahi, blo) < 0 || statCompare(dt, bhi, alo) < 0
+      case _ => false
+    })
+  }
+
   /** Whether equality-delete `d` can suppress rows in data file `e`:
     * strictly-older files only (seq ordering — a merge's own upserts and
-    * later re-inserts are never suppressed), and only when the file's
-    * recorded key range can intersect the delete batch's (missing stats
-    * on either side → conservative yes). */
+    * later re-inserts are never suppressed), and unless the file's
+    * recorded key range is [[provablyDisjoint]] from the delete batch's
+    * on some key column. */
   private def deleteApplies(
       d: DeleteEntry, e: FileEntry, schema: StructType): Boolean =
-    d.seq > e.seq && d.keyCols.forall { c =>
-      (e.stats.get(c), d.stats.get(c)) match {
-        case (Some((Some(flo), Some(fhi))), Some((Some(dlo), Some(dhi)))) =>
-          val dt = schema.fields.find(_.name == c).map(_.dataType)
-            .getOrElse(StringType)
-          statCompare(dt, flo, dhi) <= 0 && statCompare(dt, fhi, dlo) >= 0
-        case _ => true
-      }
-    }
+    d.seq > e.seq && !d.keyCols.exists(c =>
+      provablyDisjoint(schema, c, e.stats.get(c), d.stats.get(c)))
+
+  /** Partition dirs holding a live file of `m` that one of `dels`
+    * applies to. */
+  private def deleteDirs(m: Resolved, dels: Seq[DeleteEntry]): Set[String] = {
+    val schema = m.schema.getOrElse(StructType(Seq.empty))
+    m.files.filter(e => dels.exists(deleteApplies(_, e, schema)))
+      .map(e => parentDirOf(e.rel)).toSet
+  }
 
   /**
    * Scan `kept` data files with the snapshot's equality-delete files
@@ -1437,44 +1478,35 @@ object Snapshots {
         val rows = statsByName.toSeq.flatMap { case (rel, st) =>
           st.blooms.toSeq.map { case (c, img) => (rel, c, img) }
         }
-        val bstage = new Path(qroot,
-          s".stage_${java.util.UUID.randomUUID().toString.take(12)}")
-        // the filters were collected by computeStats, so the sidecar is
-        // driver data — write it without spawning a Spark job
-        LocalParquet.writeOrFallback(
-          rows.toDF("rel", "col", "filter"), bstage.toString)
-        val parts = listDataFiles(f, bstage)
-        require(parts.length == 1,
-          s"bloom sidecar staging produced ${parts.length} files, expected 1")
         val rel =
           s"bl-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
-        f.mkdirs(bloomsDir(qroot))
-        FsOps.renameOrFail(f, new Path(bstage, parts.head),
-          new Path(bloomsDir(qroot), rel))
-        FsOps.deleteIfExists(f, bstage)
+        // the filters were collected by computeStats, so the sidecar is
+        // driver data — written in place without spawning a Spark job
+        LocalParquet.write(rows.toDF("rel", "col", "filter"),
+          bloomsDir(qroot).toString, rel)
         Some(rel)
       }
-    val addEntries = staged.map(rel =>
-      entryFor(rel, statsByName.get(rel), seq, stagedLen.getOrElse(rel, -1L),
-        bloomRef))
     // stage the equality-delete file (merge-on-read): the batch's key
     // rows, one small file in the dataset's format under deletes/, with
     // per-key min/max recorded so reads and folds can skip clean files
     val dAdds: Seq[DeleteEntry] = deleteKeys match {
       case None => Seq.empty
       case Some((keysDf, kc)) =>
-        val cast = keysDf.select(kc.map(c => qc(c).cast(
+        val typed = keysDf.select(kc.map(c => qc(c).cast(
           contract.fields.find(_.name == c).get.dataType).as(c)): _*)
-          .distinct()
         val dstage = new Path(qroot,
           s".stage_${java.util.UUID.randomUUID().toString.take(12)}")
-        val dw = cast.coalesce(1).write.mode("overwrite").format(fmtObj.name)
+        val dw = typed.distinct().coalesce(1).write.mode("overwrite")
+          .format(fmtObj.name)
         dsCodec.fold(dw)(c => dw.option("compression", c)).save(dstage.toString)
         val parts = listDataFilesWithMtime(f, dstage)
         require(parts.length == 1,
           s"delete-key staging produced ${parts.length} files, expected 1")
-        val dstats = computeStats(spark, dstage, fmtTok, kc)
-          .values.headOption.map(_.stats).getOrElse(Map.empty)
+        // rendered exactly like computeStats, with no re-read; an
+        // all-null key column records no entry: unknown, so it applies
+        val dstats = minMaxStatRanges(typed, kc.map(c => c -> c))
+          .map(r => r.column -> ((r.lower.map(_.toString),
+            r.upper.map(_.toString)))).toMap
         val rel = s"del-s$id-${parts.head._1}"
         f.mkdirs(deletesDir(qroot))
         FsOps.renameOrFail(f, new Path(dstage, parts.head._1),
@@ -1799,10 +1831,9 @@ object Snapshots {
     * against the loser's base state — a predicate delete or overwrite
     * the batch's keys intersect must abort, the Iceberg row-level
     * snapshot-isolation validation) are key-range-DISJOINT from this
-    * batch's recorded key range on at least one NON-TIMESTAMP key column
-    * (timestamp stat strings are writer-session-tz renderings — the
-    * [[deleteWhere]] rule — so they can never prove disjointness), and
-    * no winner changed the live delete-key contract. Missing stats on
+    * batch's recorded key range on at least one key column
+    * ([[provablyDisjoint]]), and no winner changed the live delete-key
+    * contract. Missing stats on
     * either side, a full (rebased) interleaved manifest (its changes are
     * unattributable), or an intersecting range all return the reason —
     * conservative, never a silent wrong merge. */
@@ -1817,18 +1848,11 @@ object Snapshots {
     headDeletes.find(_.keyCols != keyCols).foreach(d =>
       return Some(s"the head's live equality-deletes are keyed by " +
         s"${d.keyCols.mkString(",")}, not ${keyCols.mkString(",")}"))
-    def dt(c: String): DataType =
-      contract.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)
-    // disjoint on ANY tz-safe key column ⇒ no key can be in both batches
+    // disjoint on ANY key column ⇒ no key can be in both batches
     def disjoint(
         theirs: Map[String, (Option[String], Option[String])]): Boolean =
-      keyCols.exists { c =>
-        dt(c) != TimestampType && ((mine.stats.get(c), theirs.get(c)) match {
-          case (Some((Some(mlo), Some(mhi))), Some((Some(tlo), Some(thi)))) =>
-            statCompare(dt(c), mhi, tlo) < 0 || statCompare(dt(c), thi, mlo) < 0
-          case _ => false // missing stats: cannot prove disjoint
-        })
-      }
+      keyCols.exists(c =>
+        provablyDisjoint(contract, c, mine.stats.get(c), theirs.get(c)))
     val ms = snapshotsDir(qroot)
     val cache: ManifestCache = scala.collection.mutable.Map.empty
     // the base state the loser resolved: removed rels look their key
@@ -2097,7 +2121,7 @@ object Snapshots {
       evolution: graft.schema.SchemaEvolution.Policy =
         graft.schema.SchemaEvolution.Widen,
       branch: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.broadcast
     require(keyFields.nonEmpty, "mergeUpsert needs at least one key field")
     require(!keyFields.exists(partitionFields.contains),
       "partition fields cannot be merge keys (a key that IS the partition " +
@@ -2110,14 +2134,7 @@ object Snapshots {
     // returning — never a cross-run cache.
     val pinned = updates.persist()
     try {
-      val dupKeys = pinned.groupBy(keyFields.map(qc): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-      require(dupKeys == 0L,
-        s"update batch has multiple rows for one (${keyFields.mkString(",")}) key")
-      val isDelete = deleteCol
-        .map(c => coalesce(qc(c), lit(false))).getOrElse(lit(false))
-      val upserts = deleteCol
-        .foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
+      val upserts = mergeBatchUpserts(pinned, keyFields, deleteCol)
       val allKeys = pinned.select(keyFields.map(qc): _*).distinct()
       val (_, _, m) = resolveHead(spark, root, branch = branch)
       // update keys broadcast: CDC batches are small by definition
@@ -2128,6 +2145,22 @@ object Snapshots {
         transform = _.join(broadcast(allKeys), keyFields, "left_anti"),
         adds = Some(upserts), evolution = evolution, branch = branch).get
     } finally pinned.unpersist(): Unit
+  }
+
+  /** The upsert rows of a pinned merge batch (its `deleteCol=true` rows
+    * and the delete column itself dropped), after checking that no key
+    * repeats — the batch check both merge lanes share. */
+  private def mergeBatchUpserts(
+      pinned: DataFrame, keyFields: Seq[String],
+      deleteCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    val dupKeys = pinned.groupBy(keyFields.map(qc): _*)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
+    require(dupKeys == 0L,
+      s"update batch has multiple rows for one (${keyFields.mkString(",")}) key")
+    val isDelete = deleteCol
+      .map(c => coalesce(qc(c), lit(false))).getOrElse(lit(false))
+    deleteCol.foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
   }
 
   /**
@@ -2160,7 +2193,6 @@ object Snapshots {
       evolution: graft.schema.SchemaEvolution.Policy =
         graft.schema.SchemaEvolution.Widen,
       batchTag: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions._
     require(keyFields.nonEmpty, "mergeDeltas needs at least one key field")
     require(!keyFields.exists(partitionFields.contains),
       "partition fields cannot be merge keys (a key that IS the partition " +
@@ -2174,14 +2206,7 @@ object Snapshots {
     val pinned = updates.persist()
     try {
       if (pinned.isEmpty) return m.id
-      val dupKeys = pinned.groupBy(keyFields.map(qc): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-      require(dupKeys == 0L,
-        s"update batch has multiple rows for one (${keyFields.mkString(",")}) key")
-      val isDelete = deleteCol
-        .map(c => coalesce(qc(c), lit(false))).getOrElse(lit(false))
-      val upserts = deleteCol
-        .foldLeft(pinned.filter(!isDelete))((d, c) => d.drop(c))
+      val upserts = mergeBatchUpserts(pinned, keyFields, deleteCol)
       val allKeys = pinned.select(keyFields.map(qc): _*)
       writeInternal(upserts, root, partitionFields, SnapAppend, "merge_mor",
         evolution, Some(m), batchTag = batchTag,
@@ -2215,10 +2240,7 @@ object Snapshots {
     // which is safe to recompute wholesale against any head
     val dispatch: Resolved => (SnapMeta, Change) = h => {
       if (h.deletes.isEmpty) return None
-      val schema = h.schema.getOrElse(StructType(Seq.empty))
-      val affectedDirs = h.files
-        .filter(e => h.deletes.exists(deleteApplies(_, e, schema)))
-        .map(e => parentDirOf(e.rel)).toSet
+      val affectedDirs = deleteDirs(h, h.deletes)
       if (affectedDirs.nonEmpty) {
         val entries = h.files.filter(e => affectedDirs(parentDirOf(e.rel)))
         val folded = scanWithDeletes(spark, qroot, h, entries)
@@ -2245,9 +2267,7 @@ object Snapshots {
     * wrong pruning). A comparison also implies the column is non-null in
     * any matching row, which [[survives]]' all-null-file rule exploits. */
   /** `statsCols` governs range derivation; `nullCols` governs
-    * `IS [NOT] NULL` derivation — null COUNTS are timezone-independent,
-    * so timestamp columns excluded from the range list still derive
-    * nullness prunes. */
+    * `IS [NOT] NULL` derivation. */
   private def statRangesFromCondition(
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       statsCols: Seq[String], sessionTz: String,
@@ -2603,7 +2623,7 @@ object Snapshots {
         s"replaceWhere batch must carry every contract column — " +
           s"missing '$c'")))
     // the same narrowing + exact-discovery discipline as every rewrite
-    // lane (tz-guarded stat prune, Bloom, scan-side input_file_name)
+    // lane (planFiles' stat and Bloom prune, scan-side input_file_name)
     val rewrite = discoverRewriteSet(spark, qroot, m,
       deriveFor = (sc, statsCols, bloomCols) =>
         deriveRanges(spark, sc, condition,
@@ -2628,7 +2648,7 @@ object Snapshots {
     * the range's column name to the frame column carrying its values
     * (they differ when the frame renames, e.g. a join-prefixed source).
     * All-null columns derive nothing. Timestamp-typed ranges are safe
-    * to pass onward — every prune site tz-guards them. */
+    * to pass onward — [[survives]] keeps every file for them. */
   private[graft] def minMaxStatRanges(
       df: DataFrame, cols: Seq[(String, String)]): Seq[StatRange] = {
     import org.apache.spark.sql.functions.{max, min}
@@ -2787,15 +2807,8 @@ object Snapshots {
     *
     *  - `deriveFor` yields conservative ranges against the RECORDED
     *    contract (legacy schema-less datasets derive nothing — no
-    *    pruning, never wrong pruning);
-    *  - TimestampType columns STAT-prune NOTHING: the recorded min/max
-    *    strings were rendered under the WRITING session's timezone, and
-    *    a session configured differently would compare shifted bounds —
-    *    wrongly stat-pruning files that hold matches, silently leaving
-    *    rows untouched. Date/string/numeric renderings are
-    *    tz-independent and keep pruning; null-count prunes are
-    *    count-based and always safe; the BLOOM prune hashes internal
-    *    values, so timestamp EQUALITY bounds do prune there;
+    *    pruning, never wrong pruning), planned by [[planFiles]] like
+    *    every read;
     *  - exact discovery: which candidates actually HOLD rows `discover`
     *    keeps — one column-pruned scan over the surviving files only,
     *    on the RAW scan deliberately (`input_file_name()` is only
@@ -2807,14 +2820,9 @@ object Snapshots {
       deriveFor: (StructType, Seq[String], Seq[String]) => Seq[StatRange],
       discover: DataFrame => DataFrame): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.input_file_name
-    val schema = m.schema.getOrElse(StructType(Seq.empty))
     val derived = m.schema.toSeq.flatMap(sc =>
       deriveFor(sc, m.statsCols, m.bloomCols))
-    val statSafe = derived.filter(r => r.nullness.isDefined ||
-      !schema.fields.exists(fd =>
-        fd.name == r.column && fd.dataType == TimestampType))
-    val candidates = bloomPrune(spark, qroot, m,
-      m.files.filter(e => survives(e, statSafe, schema)), derived)
+    val candidates = planFiles(spark, qroot, m, m.files, derived)
     if (candidates.isEmpty) return Seq.empty
     val dataPrefix = dataDir(qroot).toUri.getPath
     val hit = discover(scanRaw(spark, qroot, m, candidates)
@@ -3400,31 +3408,23 @@ object Snapshots {
     require(sinceId <= until, s"since s$sinceId is after until s$until")
     val cache: ManifestCache = scala.collection.mutable.Map.empty
     val ms = snapshotsDir(qroot)
-    val before = resolve(f, ms, sinceId, cache).files.map(_.rel).toSet
+    val since = resolve(f, ms, sinceId, cache)
     val m = resolve(f, ms, until, cache)
     // the same file-level data skipping as [[read]] — an incremental
-    // consumer with a key filter never opens non-intersecting new files;
-    // an unknown prune column fails loudly here too (a typo silently
-    // disabling skipping would read as "pruned" while scanning everything)
-    prune.foreach(r => require(
-      m.schema.forall(s => s.fields.exists(_.name == r.column)),
-      s"prune column ${r.column} is not in the snapshot schema"))
-    // same timestamp split as [[read]]: tz-rendered min/max strings never
-    // compare against a caller's bound; counts and blooms still prune
-    val statSafe = prune.filter(r => r.nullness.isDefined ||
-      !m.schema.exists(_.fields.exists(fd =>
-        fd.name == r.column && fd.dataType == TimestampType)))
-    val added0 = m.files.filterNot(e => before(e.rel))
-      .filter(e => statSafe.isEmpty ||
-        survives(e, statSafe, m.schema.getOrElse(StructType(Seq.empty))))
-    val added =
-      if (prune.isEmpty) added0
-      else bloomPrune(spark, qroot, m, added0, prune)
+    // consumer with a key filter never opens non-intersecting new files
+    val added = planFiles(spark, qroot, m, addedFiles(since, m), prune)
     if (added.isEmpty) None
     // equality-deletes newer than an added file still suppress its rows
     // (seq-scoped, as in [[read]]) — the incremental consumer sees the
     // same rows a full `until` read would show from those files
     else Some(scanWithDeletes(spark, qroot, m, added))
+  }
+
+  /** The files `until` holds that `since` did not — the manifest-only
+    * diff every incremental read consumes. */
+  private def addedFiles(since: Resolved, until: Resolved): Seq[FileEntry] = {
+    val before = since.files.map(_.rel).toSet
+    until.files.filterNot(e => before(e.rel))
   }
 
   /** The STREAM-visible cost of snapshot `id`: (rows, bytes) its ADDED
@@ -3519,9 +3519,8 @@ object Snapshots {
     (startId + 1 to endId).flatMap { id =>
       val mode = readSnapshotFile(f, ms, id, cache).mode
       if (EmitModes(mode)) {
-        val before = resolve(f, ms, id - 1, cache).files.map(_.rel).toSet
         val m = resolve(f, ms, id, cache)
-        val added = m.files.filterNot(e => before(e.rel))
+        val added = addedFiles(resolve(f, ms, id - 1, cache), m)
         if (added.isEmpty) None
         else Some(scanWithDeletes(spark, qroot, m, added))
       } else if (SkipModes(mode)) None
@@ -3529,21 +3528,20 @@ object Snapshots {
     }
   }
 
-  /** Partition dirs whose VISIBLE ROWS could differ because the two
-    * snapshots' equality-delete sets differ: a delete only one side holds
-    * affects exactly the partitions holding files it applies to (on that
-    * side) — file sets can be identical while a new delete suppresses
-    * rows, so file-set diffing alone is not enough under merge-on-read. */
-  private def deleteDiffDirs(a: Resolved, b: Resolved): Set[String] = {
+  /** Partition dirs whose VISIBLE ROWS could differ between two
+    * snapshots: dirs whose live file sets differ, plus dirs holding files
+    * a delete only one side holds applies to (on that side) — file sets
+    * can be identical while a new delete suppresses rows, so file-set
+    * diffing alone is not enough under merge-on-read. */
+  private def changedDirs(a: Resolved, b: Resolved): Set[String] = {
+    val aBy = a.files.map(_.rel).groupBy(parentDirOf)
+    val bBy = b.files.map(_.rel).groupBy(parentDirOf)
     val aRels = a.deletes.map(_.rel).toSet
     val bRels = b.deletes.map(_.rel).toSet
-    def affected(side: Resolved, dels: Seq[DeleteEntry]): Set[String] = {
-      val schema = side.schema.getOrElse(StructType(Seq.empty))
-      side.files.filter(e => dels.exists(deleteApplies(_, e, schema)))
-        .map(e => parentDirOf(e.rel)).toSet
-    }
-    affected(b, b.deletes.filterNot(d => aRels(d.rel))) ++
-      affected(a, a.deletes.filterNot(d => bRels(d.rel)))
+    (aBy.keySet ++ bBy.keySet)
+      .filter(d => aBy.get(d).map(_.toSet) != bBy.get(d).map(_.toSet)) ++
+      deleteDirs(b, b.deletes.filterNot(d => aRels(d.rel))) ++
+      deleteDirs(a, a.deletes.filterNot(d => bRels(d.rel)))
   }
 
   /** Partition directories whose live FILE SETS differ between two
@@ -3556,13 +3554,8 @@ object Snapshots {
       spark: SparkSession, root: String, fromId: Int, toId: Int): Seq[String] = {
     val (f, qroot) = FsOps.fs(spark, root)
     val cache: ManifestCache = scala.collection.mutable.Map.empty
-    val ra = resolve(f, snapshotsDir(qroot), fromId, cache)
-    val rb = resolve(f, snapshotsDir(qroot), toId, cache)
-    val a = ra.files.map(_.rel).groupBy(parentDirOf)
-    val b = rb.files.map(_.rel).groupBy(parentDirOf)
-    ((a.keySet ++ b.keySet)
-      .filter(p => a.get(p).map(_.toSet) != b.get(p).map(_.toSet)) ++
-      deleteDiffDirs(ra, rb)).toSeq.sorted
+    changedDirs(resolve(f, snapshotsDir(qroot), fromId, cache),
+      resolve(f, snapshotsDir(qroot), toId, cache)).toSeq.sorted
   }
 
   /**
@@ -3601,11 +3594,7 @@ object Snapshots {
     val cache: ManifestCache = scala.collection.mutable.Map.empty
     val a = resolve(f, snapshotsDir(qroot), fromId, cache)
     val b = resolve(f, snapshotsDir(qroot), toId, cache)
-    val aBy = a.files.map(_.rel).groupBy(parentDirOf)
-    val bBy = b.files.map(_.rel).groupBy(parentDirOf)
-    val dirs = (aBy.keySet ++ bBy.keySet)
-      .filter(d => aBy.get(d).map(_.toSet) != bBy.get(d).map(_.toSet)) ++
-      deleteDiffDirs(a, b)
+    val dirs = changedDirs(a, b)
     val bSchema = b.schema.getOrElse(throw new IllegalStateException(
       s"snapshot s$toId records no schema — cannot diff"))
     // each side's slice applies ITS OWN snapshot's equality-deletes — the
@@ -3908,30 +3897,11 @@ object Snapshots {
   private def readResolved(
       spark: SparkSession, qroot: Path, m: Resolved,
       prune: Seq[StatRange], label: String): DataFrame = {
-    val schema = m.schema
-    prune.foreach(r => require(
-      schema.forall(s => s.fields.exists(_.name == r.column)),
-      s"prune column ${r.column} is not in the snapshot schema"))
-    // TimestampType ranges never consult the min/max strings (recorded
-    // under the WRITING session's timezone; the caller's bound renders
-    // under its own — a shifted compare would silently drop files that
-    // hold matches). Nullness prunes are count-based and the BLOOM prune
-    // hashes internal values, so both stay on for timestamps — the same
-    // split deleteWhere applies to derived ranges.
-    val statSafe = prune.filter(r => r.nullness.isDefined ||
-      !schema.exists(_.fields.exists(fd =>
-        fd.name == r.column && fd.dataType == TimestampType)))
-    val statKept =
-      if (statSafe.isEmpty) m.files
-      else m.files.filter(e =>
-        survives(e, statSafe, schema.getOrElse(StructType(Seq.empty))))
-    val kept =
-      if (prune.isEmpty) statKept
-      else bloomPrune(spark, qroot, m, statKept, prune)
+    val kept = planFiles(spark, qroot, m, m.files, prune)
     if (kept.isEmpty) {
       // a legitimately-empty state (or a fully-pruned read) is an empty
       // frame under the contract — never an unreadable dataset
-      val s = schema.getOrElse(throw new IllegalStateException(
+      val s = m.schema.getOrElse(throw new IllegalStateException(
         s"snapshot $label is empty and records no schema"))
       return spark.createDataFrame(new java.util.ArrayList[Row](), s)
     }

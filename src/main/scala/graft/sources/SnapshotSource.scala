@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Catalog-facing read connector for [[Snapshots]] datasets — what makes a
@@ -569,7 +569,7 @@ class SnapshotRelation(
     // every plan over this instance was built with (structural, so no
     // call anywhere can swap it mid-query)
     val planned = schema
-    val prune = filters.toSeq.flatMap(f => toRanges(f, planned))
+    val prune = filters.toSeq.flatMap(toRanges)
     val base = (branch, tag) match {
       case (Some(b), _) => Snapshots.readBranch(spark, root, b, prune = prune)
       case (None, Some(t)) => Snapshots.readTag(spark, root, t, prune = prune)
@@ -615,20 +615,11 @@ class SnapshotRelation(
     projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 
-  /** Timestamp columns derive no inequality RANGE (their recorded stat
-    * strings are writer-session-tz renderings — the
-    * [[Snapshots.deleteWhere]] rule); EQUALITY ranges forward even for
-    * timestamps — [[Snapshots.readResolved]]'s statSafe split keeps the
-    * min/max compare off while the Bloom probe prunes on the exact
-    * pushed value (a typed object, never a re-parsed string); nullness
-    * pruning is count-based and stays. Consults the CALLER-captured
-    * schema — never the re-resolving `schema` def (the buildScan pin). */
-  private def tzSafe(col: String, sc: StructType): Boolean =
-    !sc.fields.exists(f => f.name == col && f.dataType == TimestampType)
-
-  private def toRanges(
-      f: Filter, sc: StructType): Seq[Snapshots.StatRange] = f match {
-    case And(l, r) => toRanges(l, sc) ++ toRanges(r, sc)
+  /** Pushed filters as [[Snapshots.StatRange]]s, for every column type:
+    * the prune policy (timestamp ranges never stat-prune; equality still
+    * Bloom-probes the exact pushed value) is [[Snapshots.read]]'s. */
+  private def toRanges(f: Filter): Seq[Snapshots.StatRange] = f match {
+    case And(l, r) => toRanges(l) ++ toRanges(r)
     case EqualTo(c, v) if v != null =>
       Seq(Snapshots.StatRange(c, Some(v), Some(v)))
     // `c <=> v` with v non-null matches exactly the rows `c = v` does
@@ -643,13 +634,13 @@ class SnapshotRelation(
         if vs.nonEmpty && vs.length <= Snapshots.MaxInPruneValues &&
           vs.forall(_ != null) =>
       Seq(Snapshots.StatRange(c, anyOf = Some(vs.toSeq)))
-    case GreaterThan(c, v) if v != null && tzSafe(c, sc) =>
+    case GreaterThan(c, v) if v != null =>
       Seq(Snapshots.StatRange(c, Some(v), None))
-    case GreaterThanOrEqual(c, v) if v != null && tzSafe(c, sc) =>
+    case GreaterThanOrEqual(c, v) if v != null =>
       Seq(Snapshots.StatRange(c, Some(v), None))
-    case LessThan(c, v) if v != null && tzSafe(c, sc) =>
+    case LessThan(c, v) if v != null =>
       Seq(Snapshots.StatRange(c, None, Some(v)))
-    case LessThanOrEqual(c, v) if v != null && tzSafe(c, sc) =>
+    case LessThanOrEqual(c, v) if v != null =>
       Seq(Snapshots.StatRange(c, None, Some(v)))
     case IsNull(c) => Seq(Snapshots.StatRange(c, nullness = Some(true)))
     case IsNotNull(c) => Seq(Snapshots.StatRange(c, nullness = Some(false)))
@@ -657,10 +648,8 @@ class SnapshotRelation(
   }
 
   private[sources] def toRangesForTest(
-      filters: Array[Filter]): Seq[Snapshots.StatRange] = {
-    val sc = schema
-    filters.toSeq.flatMap(toRanges(_, sc))
-  }
+      filters: Array[Filter]): Seq[Snapshots.StatRange] =
+    filters.toSeq.flatMap(toRanges)
 
   /** Source filters back to Column predicates for in-scan pushdown —
     * best-effort (an unconverted filter is still applied by Spark above

@@ -1473,6 +1473,45 @@ class SnapshotsSpec extends SparkSpec
     assert(ex.getMessage.contains("cannot rebase"), ex.getMessage)
   }
 
+  test("a timestamp-keyed merge-on-read delete from another session zone applies on read, fold and compact") {
+    import spark.implicits._
+    val ts = (s: String) => java.sql.Timestamp.from(java.time.Instant.parse(s))
+    val t1 = ts("2026-01-01T12:00:00Z")
+    // written under the suite's UTC session: the file records its ts
+    // range as UTC renderings, 2026-01-01 12:00:00..2026-03-01 12:00:00
+    def table(name: String, extraFile: Boolean): String = {
+      val root = java.nio.file.Files.createTempDirectory(name).toString
+      Snapshots.write(
+        Seq((1L, t1, "a"), (2L, ts("2026-03-01T12:00:00Z"), "a"))
+          .toDF("k", "ts", "p").coalesce(1), root, Seq("p"),
+        statsColumns = Seq("ts"))
+      if (extraFile) Snapshots.write(
+        Seq((3L, ts("2026-05-01T12:00:00Z"), "a")).toDF("k", "ts", "p")
+          .coalesce(1), root, Seq("p"))
+      // the delete file renders k=1's instant in New York time
+      // (2026-01-01 07:00:00): byte-wise below the file's UTC range
+      val prevTz = spark.conf.get("spark.sql.session.timeZone")
+      try {
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        Snapshots.mergeDeltas(spark, root,
+          Seq((1L, t1, "a", true)).toDF("k", "ts", "p", "__del"),
+          Seq("p"), Seq("ts"), deleteCol = Some("__del"))
+      } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+      root
+    }
+    def ks(root: String) = Snapshots.read(spark, root).select("k").collect()
+      .map(_.getLong(0)).toSet
+    val folded = table("snap_mortzdel", extraFile = false)
+    assert(ks(folded) == Set(2L), "the delete must apply on read")
+    assert(Snapshots.foldDeletes(spark, folded, Seq("p")).isDefined)
+    assert(ks(folded) == Set(2L), "the fold must keep the delete")
+    val compacted = table("snap_mortzcmp", extraFile = true)
+    assert(ks(compacted) == Set(2L, 3L))
+    assert(Snapshots.compact(spark, compacted, Seq("p")).isDefined)
+    assert(ks(compacted) == Set(2L, 3L),
+      "compact must not restage the deleted row into a newer file")
+  }
+
   test("an interleaved row-preserving compact never blocks a mergeDeltas rebase") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("snap_morcomp").toString
@@ -2609,6 +2648,25 @@ class SnapshotsSpec extends SparkSpec
     val delDir = new java.io.File(s"$root/deletes")
     assert(delDir.isDirectory && delDir.listFiles()
       .count(x => x.isFile && !x.getName.startsWith(".")) == 1)
+  }
+
+  test("a mergeDeltas write takes the delete file's key stats from the key frame, not a re-read") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snap_mor_jobs").toString
+    Snapshots.write(Seq((1L, "x", "a"), (2L, "y", "a"), (3L, "z", "b"))
+      .toDF("k", "v", "p").coalesce(1), root, Seq("p"),
+      statsColumns = Seq("k"))
+    val batch = Seq((2L, "y2", "a", false), (3L, "z", "b", true))
+      .toDF("k", "v", "p", "__del")
+    val (id, jobs) = JobCounter(spark)(Snapshots.mergeDeltas(spark, root,
+      batch, Seq("p"), Seq("k"), deleteCol = Some("__del")))
+    assert(id == 2)
+    assert(jobs == 12, s"one mergeDeltas write ran $jobs jobs")
+    // the recorded key range, rendered as file stats are
+    assert(manifestLines(root, 2, "dadd=").map(_.split("\t").last) ==
+      Seq("k=2,3"))
+    assert(Snapshots.read(spark, root).as[(Long, String, String)].collect()
+      .toSet == Set((1L, "x", "a"), (2L, "y2", "a")))
   }
 
   test("mergeDeltas seq discipline: same-batch upserts and re-inserts survive") {

@@ -271,11 +271,14 @@ class SnapshotSourceSpec extends SparkSpec {
       (0 to Snapshots.MaxInPruneValues).map(i =>
         java.lang.Long.valueOf(i.toLong): Any).toArray))).isEmpty)
     // timestamp EQUALITY forwards (exact typed value → Bloom probe);
-    // timestamp INEQUALITIES still derive nothing (tz-rendered stats)
+    // a timestamp INEQUALITY forwards too, and planning keeps every file
+    // for it (tz-rendered stats are never compared)
     val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val tsEq = rel.toRangesForTest(Array(sf.EqualTo("ts", ts0)))
     assert(tsEq.length == 1 && tsEq.head.lower.contains(ts0))
-    assert(rel.toRangesForTest(Array(sf.GreaterThan("ts", ts0))).isEmpty)
+    val tsGt = rel.toRangesForTest(Array(sf.GreaterThan("ts", ts0)))
+    assert(Snapshots.read(spark, root, prune = tsGt).inputFiles.length == 2,
+      "a timestamp inequality must never drop a file")
     assert(Snapshots.read(spark, root, prune = tsEq).inputFiles.length == 1,
       "the exact timestamp probe must bloom-prune the other file")
     // end-to-end through the registered table: the batched point lookup
