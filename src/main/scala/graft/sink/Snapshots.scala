@@ -1502,9 +1502,9 @@ object Snapshots {
         val parts = listDataFilesWithMtime(f, dstage)
         require(parts.length == 1,
           s"delete-key staging produced ${parts.length} files, expected 1")
-        // rendered exactly like computeStats, with no re-read; an
+        // rendered like computeStats, in one task, with no re-read; an
         // all-null key column records no entry: unknown, so it applies
-        val dstats = minMaxStatRanges(typed, kc.map(c => c -> c))
+        val dstats = minMaxStatRanges(typed.coalesce(1), kc.map(c => c -> c))
           .map(r => r.column -> ((r.lower.map(_.toString),
             r.upper.map(_.toString)))).toMap
         val rel = s"del-s$id-${parts.head._1}"

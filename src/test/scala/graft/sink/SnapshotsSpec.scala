@@ -2661,7 +2661,7 @@ class SnapshotsSpec extends SparkSpec
     val (id, jobs) = JobCounter(spark)(Snapshots.mergeDeltas(spark, root,
       batch, Seq("p"), Seq("k"), deleteCol = Some("__del")))
     assert(id == 2)
-    assert(jobs == 12, s"one mergeDeltas write ran $jobs jobs")
+    assert(jobs == 11, s"one mergeDeltas write ran $jobs jobs")
     // the recorded key range, rendered as file stats are
     assert(manifestLines(root, 2, "dadd=").map(_.split("\t").last) ==
       Seq("k=2,3"))
