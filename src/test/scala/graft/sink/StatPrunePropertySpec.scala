@@ -44,7 +44,7 @@ class StatPrunePropertySpec extends SparkSpec {
   private def batch(rnd: scala.util.Random, i: Int): Seq[Row] =
     Seq("a", "b").flatMap { p =>
       val allNull = Seq.fill(5)(rnd.nextInt(7) == 0)
-      def v[T](c: Int)(x: => T): Any =
+      def v(c: Int)(x: => Any): Any =
         if (allNull(c) || rnd.nextInt(5) == 0) null else x
       Seq.fill(10)(Row(
         v(0)(java.lang.Long.valueOf(i * 20L + rnd.nextInt(40))),
